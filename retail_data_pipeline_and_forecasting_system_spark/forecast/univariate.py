@@ -28,6 +28,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import FORECAST_OUT
@@ -53,8 +54,6 @@ class UnivariateForecaster:
         values = np.asarray(values, dtype="float64")
         self._values = values
         if _HAVE_PROPHET:
-            import pandas as pd
-
             ds = pd.date_range(end=pd.Timestamp.today(), periods=len(values))
             self._model = Prophet()
             self._model.fit(pd.DataFrame({"ds": ds, "y": values}))
@@ -93,8 +92,6 @@ class UnivariateForecaster:
         if self._values is None:
             raise ValueError("fit() before predict()")
         if _HAVE_PROPHET:
-            import pandas as pd
-
             future = pd.date_range(
                 start=self._ds[-1] + pd.Timedelta(days=1), periods=horizon
             )
@@ -124,12 +121,16 @@ def forecast_sales_and_profits(
     """daily_summary -> (date, forecasted_sales, forecasted_profit) rows.
 
     Output dates are business dates: last summary date + 1..horizon
-    (reference src/data_processor.py:573-575).
+    (reference src/data_processor.py:573-575). The rows are built as a
+    pandas frame, which Spark turns into a local relation through Arrow;
+    a Python list would become a Python RDD, and every action on it would
+    start a Python worker task.
     """
-    rows = (
-        daily_summary.select("date", "total_sales", "total_profit")
-        .orderBy("date")
-        .collect()  # O(business days): legitimately tiny
+    # O(business days): legitimately tiny, so it is ordered on the driver
+    # rather than by a Spark range sort
+    rows = sorted(
+        daily_summary.select("date", "total_sales", "total_profit").collect(),
+        key=lambda r: r["date"],
     )
     dates = [r["date"] for r in rows]
     sales = np.array([float(r["total_sales"]) for r in rows])
@@ -139,16 +140,14 @@ def forecast_sales_and_profits(
     sales_model.fit(sales)
     profit_model.fit(profit)
 
-    out = [
-        (
-            dates[-1] + dt.timedelta(days=i + 1),
-            float(s),
-            float(p),
-        )
-        for i, (s, p) in enumerate(
-            zip(sales_model.predict(forecast_days), profit_model.predict(forecast_days))
-        )
-    ]
+    horizon = range(1, forecast_days + 1)
+    out = pd.DataFrame(
+        {
+            "date": [dates[-1] + dt.timedelta(days=i) for i in horizon],
+            "forecasted_sales": sales_model.predict(forecast_days),
+            "forecasted_profit": profit_model.predict(forecast_days),
+        }
+    )
     return spark.createDataFrame(out, schema=FORECAST_OUT)
 
 

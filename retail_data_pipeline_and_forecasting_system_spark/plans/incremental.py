@@ -8,11 +8,12 @@ history to add a day: you fold only the NEW partition into the stored
 summary.
 
 ``refresh_daily_summary`` is that fold, built from pieces that already
-exist: run the pipeline's own ``build_orders``/``build_daily_summary``
-on the new slice only, then MERGE the day rows into the summary table
-with ``operators.scd.merge_upsert``. Day keys replace: re-running a day
-is idempotent, so late data and backfills are just re-merges; other
-days pass through untouched.
+exist: run the pipeline's own ``build_daily_summary`` (one grouped
+aggregate, so the unpersisted slice — and the depletion kernel behind
+it — is consumed once) on the new slice only, then MERGE the day rows
+into the summary table with ``operators.scd.merge_upsert``. Day keys
+replace: re-running a day is idempotent, so late data and backfills are
+just re-merges; other days pass through untouched.
 
 Scale: the incremental cost is O(new partition) + one broadcast-outer
 merge against the summary (O(days) rows — tiny). Nothing reprocesses
@@ -25,20 +26,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.scd import merge_upsert
-from .retail import build_daily_summary, build_orders
+from .retail import build_daily_summary
 
 _METRICS = ["num_orders", "total_sales", "total_profit"]
 
 
 def summarize_slice(processed: DataFrame, products: DataFrame) -> DataFrame:
     """Day-grain summary of one processed slice (must contain whole
-    days — the day is the maintenance unit), via the same builders the
-    full pipeline uses, so incremental == batch by construction."""
-    return build_daily_summary(
-        build_orders(processed),
-        processed.withColumn("date", F.to_date("timestamp")),
-        products,
-    )
+    days — the day is the maintenance unit), via the same builder the
+    full pipeline uses, so incremental == batch by construction. The
+    result is unsorted."""
+    return build_daily_summary(processed, products)
 
 
 def refresh_daily_summary(

@@ -10,8 +10,13 @@ scale:
 - The inventory fold runs distributed per product (operators/depletion.py),
   not as a collect()-to-driver Python loop (src/data_processor.py:288-331).
 - The day-cost scalar that the reference collect()s and re-attaches with
-  lit() (src/data_processor.py:418-424) is a grouped aggregate + join here —
-  correct for any number of days in flight and fully distributed.
+  lit() (src/data_processor.py:418-424) is one more sum in the daily
+  summary's single grouped aggregate over the depletion output — correct
+  for any number of days in flight and fully distributed.
+- The builders return unsorted frames; the contract row order
+  (``CONTRACT_ORDER``) is applied only where a contract needs it, at
+  ``run_retail_pipeline``'s returned frames and the staged report's CSVs.
+  Intermediates such as the staged lake's parquet are written unsorted.
 - Money is DecimalType(10,2) end-to-end: decimal sums are exact and
   order-independent, so results are identical at any parallelism (the
   reference's double math depends on accumulation order).
@@ -121,8 +126,27 @@ def process_lines(
     ).withColumnRenamed("sales_price", "unit_price")
 
 
+#: contract row order of each output (FIXTURES.md); the builders return
+#: unsorted frames and callers sort only where the contract is delivered
+CONTRACT_ORDER = {
+    "orders": ("order_id",),
+    "order_line_items": ("order_id", "product_id"),
+    "daily_summary": ("date",),
+    "products_updated": ("product_id",),
+}
+
+
+#: the depletion-output columns the four builders and processing_metrics
+#: read; narrowing the kernel's return trip to them (``result_cols``) drops
+#: product_name strings, arrival_seq, batch_date, line_pos and the raw qty
+#: from the Python->JVM Arrow batches (only the needed columns cross the
+#: boundary)
+BUILDER_COLS = ("transaction_id", "customer_id", "timestamp", "product_id", "quantity")
+
+
 def build_order_line_items(processed: DataFrame) -> DataFrame:
-    """order_line_items contract (FIXTURES.md): sorted (order_id, product_id)."""
+    """order_line_items contract columns, one row per processed line
+    (unsorted; contract order is ``CONTRACT_ORDER``)."""
     return (
         processed.select(
             F.col("transaction_id").alias("order_id"),
@@ -131,14 +155,14 @@ def build_order_line_items(processed: DataFrame) -> DataFrame:
             "unit_price",
             "line_total",
         )
-        .orderBy("order_id", "product_id")
     )
 
 
 def build_orders(processed: DataFrame) -> DataFrame:
     """orders contract: one row per transaction; ``num_items`` counts ALL
     lines including cancelled ones (verified against the golden output,
-    SURVEY.md A1); fully-cancelled orders appear with total_amount 0.00."""
+    SURVEY.md A1); fully-cancelled orders appear with total_amount 0.00.
+    Unsorted; contract order is ``CONTRACT_ORDER``."""
     return (
         processed.groupBy(
             F.col("transaction_id").alias("order_id"),
@@ -149,53 +173,50 @@ def build_orders(processed: DataFrame) -> DataFrame:
             F.round(F.sum("line_total"), 2).cast(MONEY).alias("total_amount"),
             F.count("product_id").alias("num_items"),
         )
-        .orderBy("order_id")
     )
 
 
-def build_daily_summary(
-    orders: DataFrame, line_items_with_date: DataFrame, products: DataFrame
-) -> DataFrame:
+def build_daily_summary(processed: DataFrame, products: DataFrame) -> DataFrame:
     """daily_summary contract (reference src/data_processor.py:390-435).
 
-    total_profit = round(total_sales - Σ(quantity × cost_to_make), 2) per
-    day. The day-cost is a grouped aggregate joined back on date — the
-    distributed fix for the reference's collect()[0] + lit() re-attachment.
+    One grouped aggregate per date over the processed lines: total_sales =
+    Σ line_total (exact decimal, so equal to Σ of the orders' totals),
+    num_orders = distinct transaction ids (every processed line belongs to
+    an order, cancelled lines included), and total_profit =
+    round(total_sales - Σ(quantity × cost_to_make), 2) with the cost from
+    the broadcast products dimension — the distributed fix for the
+    reference's collect()[0] + lit() day-cost re-attachment. Reads
+    ``processed`` once. Unsorted; contract order is ``CONTRACT_ORDER``.
     """
-    sales = orders.groupBy(
-        F.to_date(F.col("order_datetime")).alias("date")
-    ).agg(
-        F.sum("total_amount").cast(MONEY).alias("total_sales"),
-        F.countDistinct("order_id").alias("num_orders"),
-    )
-
-    costs = (
-        line_items_with_date.join(
+    return (
+        processed.join(
             F.broadcast(products.select("product_id", "cost_to_make")),
             on="product_id",
             how="left",
         )
-        .withColumn(
-            "line_cost",
-            (F.col("quantity") * F.col("cost_to_make")).cast("double"),
+        .groupBy(F.to_date("timestamp").alias("date"))
+        .agg(
+            F.countDistinct("transaction_id").alias("num_orders"),
+            F.sum("line_total").cast(MONEY).alias("total_sales"),
+            F.sum(
+                (F.col("quantity") * F.col("cost_to_make")).cast("double")
+            ).alias("__cost"),
         )
-        .groupBy("date")
-        .agg(F.sum("line_cost").alias("total_cost"))
-    )
-
-    return (
-        sales.join(costs, on="date", how="left")
-        .withColumn(
-            "total_profit", F.round(F.col("total_sales") - F.col("total_cost"), 2)
+        .select(
+            "date",
+            "num_orders",
+            "total_sales",
+            F.round(F.col("total_sales") - F.col("__cost"), 2).alias(
+                "total_profit"
+            ),
         )
-        .select("date", "num_orders", "total_sales", "total_profit")
-        .orderBy("date")
     )
 
 
 def build_products_updated(processed: DataFrame, products: DataFrame) -> DataFrame:
     """products_updated contract: initial stock − Σ fulfilled qty, never
-    negative by construction of the greedy fold (FIXTURES.md invariant 1)."""
+    negative by construction of the greedy fold (FIXTURES.md invariant 1).
+    Unsorted; contract order is ``CONTRACT_ORDER``."""
     consumed = processed.groupBy("product_id").agg(
         F.sum("quantity").alias("__consumed")
     )
@@ -208,7 +229,6 @@ def build_products_updated(processed: DataFrame, products: DataFrame) -> DataFra
                 F.col("stock") - F.coalesce(F.col("__consumed"), F.lit(0))
             ).cast("int").alias("current_stock"),
         )
-        .orderBy("product_id")
     )
 
 
@@ -233,60 +253,43 @@ def run_retail_pipeline(
     process_order: str = "arrival",
     reload_inventory_daily: bool = False,
 ) -> dict[str, DataFrame]:
-    """Full pipeline: raw docs + products -> the four output DataFrames.
+    """Full pipeline: raw docs + products -> the four output DataFrames,
+    each sorted in its ``CONTRACT_ORDER``.
 
     ``process_order`` selects the depletion order (see ORDER_COLS): "arrival"
     for golden parity with the reference, "timestamp" for content-based
     determinism. ``reload_inventory_daily`` mirrors the reference flag.
 
-    The depletion output is persisted (it feeds three downstream
-    aggregates); call :func:`release_retail_pipeline` with the returned
-    dict when done so library callers composing many pipelines in one
-    session don't accrete cache.
+    The depletion output is persisted (it feeds all four outputs); call
+    :func:`release_retail_pipeline` with the returned dict when done so
+    library callers composing many pipelines in one session don't accrete
+    cache.
     """
     lines = explode_transactions(raw_transactions)
-    # r15: the four output builders consume exactly these five columns
-    # of the depletion output (order_line_items/orders/daily/products_
-    # updated + processing_metrics); narrowing the kernel's return trip
-    # drops product_name strings, arrival_seq, batch_date, line_pos and
-    # the raw qty from the Python->JVM Arrow batches (guide §4 — only
-    # the needed columns cross the boundary).
     processed = process_lines(
         lines,
         products,
         process_order=process_order,
         reload_inventory_daily=reload_inventory_daily,
-        result_cols=(
-            "transaction_id",
-            "customer_id",
-            "timestamp",
-            "product_id",
-            "quantity",
-        ),
+        result_cols=BUILDER_COLS,
     )
-    # The depletion output feeds three downstream aggregates; persist it so
-    # the Arrow kernel runs once, not three times.
+    # The depletion output feeds all four outputs; persist it so the Arrow
+    # kernel runs once, not four times.
     processed = processed.persist()
 
-    line_items = build_order_line_items(processed)
-    orders = build_orders(processed)
-    daily = build_daily_summary(
-        orders,
-        processed.withColumn("date", F.to_date("timestamp")).select(
-            "date", "product_id", "quantity"
-        ),
-        products,
-    )
-    products_updated = build_products_updated(processed, products)
-    return {
-        "orders": orders,
-        "order_line_items": line_items,
-        "daily_summary": daily,
-        "products_updated": products_updated,
-        # private: the persisted depletion frame, so the cache can be
-        # released after the outputs are consumed (release_retail_pipeline)
-        "_processed": processed,
+    outputs = {
+        "orders": build_orders(processed),
+        "order_line_items": build_order_line_items(processed),
+        "daily_summary": build_daily_summary(processed, products),
+        "products_updated": build_products_updated(processed, products),
     }
+    outputs = {
+        name: df.orderBy(*CONTRACT_ORDER[name]) for name, df in outputs.items()
+    }
+    # private: the persisted depletion frame, so the cache can be released
+    # after the outputs are consumed (release_retail_pipeline)
+    outputs["_processed"] = processed
+    return outputs
 
 
 def release_retail_pipeline(outputs: dict[str, DataFrame]) -> None:

@@ -28,7 +28,16 @@ from ..sources import (
     write_single_csv,
 )
 from ..sources.writers import write_partitioned_parquet
-from .retail import explode_transactions, run_retail_pipeline
+from .retail import (
+    BUILDER_COLS,
+    CONTRACT_ORDER,
+    build_daily_summary,
+    build_order_line_items,
+    build_orders,
+    build_products_updated,
+    explode_transactions,
+    process_lines,
+)
 
 
 def stage_ingest(
@@ -56,45 +65,38 @@ def stage_ingest(
 
 def stage_process(spark: SparkSession, lake_dir: str) -> None:
     """Lake -> orders / line items / daily summary / updated products
-    (reference DAG task 2, :120-180). Consumes the date-partitioned lines."""
+    (reference DAG task 2, :120-180). Consumes the date-partitioned lines
+    and writes the four outputs unsorted: nothing reads the lake in row
+    order, the report stage sorts each contract CSV."""
     products = spark.read.parquet(f"{lake_dir}/products")
     lines = spark.read.parquet(f"{lake_dir}/transaction_lines")
-    from .retail import process_lines, build_orders, build_order_line_items
-    from .retail import build_daily_summary, build_products_updated
 
-    processed = process_lines(lines, products, process_order="arrival").persist()
-    write_partitioned_parquet(
-        build_order_line_items(processed), f"{lake_dir}/order_line_items"
-    )
-    orders = build_orders(processed)
-    write_partitioned_parquet(orders, f"{lake_dir}/orders")
-    daily = build_daily_summary(
-        orders,
-        processed.withColumn("date", F.to_date("timestamp")).select(
-            "date", "product_id", "quantity"
-        ),
-        products,
-    )
-    write_partitioned_parquet(daily, f"{lake_dir}/daily_summary")
-    write_partitioned_parquet(
-        build_products_updated(processed, products), f"{lake_dir}/products_updated"
-    )
+    processed = process_lines(
+        lines, products, process_order="arrival", result_cols=BUILDER_COLS
+    ).persist()
+    for name, df in (
+        ("order_line_items", build_order_line_items(processed)),
+        ("orders", build_orders(processed)),
+        ("daily_summary", build_daily_summary(processed, products)),
+        ("products_updated", build_products_updated(processed, products)),
+    ):
+        write_partitioned_parquet(df, f"{lake_dir}/{name}")
     processed.unpersist()
 
 
 def stage_report(spark: SparkSession, lake_dir: str, output_dir: str) -> None:
-    """Lake -> contract CSVs + forecast (reference DAG task 3, :184-225)."""
-    for name in ("daily_summary", "orders", "order_line_items", "products_updated"):
-        df = spark.read.parquet(f"{lake_dir}/{name}")
-        sort = {
-            "orders": ["order_id"],
-            "order_line_items": ["order_id", "product_id"],
-            "daily_summary": ["date"],
-            "products_updated": ["product_id"],
-        }[name]
-        write_single_csv(df.orderBy(*sort), output_dir, f"{name}.csv")
-    daily = spark.read.parquet(f"{lake_dir}/daily_summary")
-    fc = forecast_sales_and_profits(spark, daily)
+    """Lake -> contract CSVs + forecast (reference DAG task 3, :184-225).
+
+    Each CSV is one small file, so its rows are put in contract order
+    inside its single partition rather than by a global range sort."""
+    lake = {name: spark.read.parquet(f"{lake_dir}/{name}") for name in CONTRACT_ORDER}
+    for name, order in CONTRACT_ORDER.items():
+        write_single_csv(
+            lake[name].coalesce(1).sortWithinPartitions(*order),
+            output_dir,
+            f"{name}.csv",
+        )
+    fc = forecast_sales_and_profits(spark, lake["daily_summary"])
     write_single_csv(fc, output_dir, "sales_profit_forecast.csv")
 
 

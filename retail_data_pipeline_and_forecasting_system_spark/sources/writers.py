@@ -20,7 +20,10 @@ def write_single_csv(df: DataFrame, output_dir: str, filename: str) -> str:
     """Write ``df`` as exactly one headered CSV file at output_dir/filename.
 
     Serial by construction (one partition); only for small, contractually
-    single-file outputs (the four golden CSVs are <30k rows each).
+    single-file outputs (the four golden CSVs are <30k rows each). Rows are
+    written in the order of that one partition, so a caller that needs a
+    row order sorts inside it (``coalesce(1).sortWithinPartitions(...)``)
+    instead of paying a global ``orderBy``'s sampling job and range shuffle.
     """
     os.makedirs(output_dir, exist_ok=True)
     full_path = os.path.join(output_dir, filename)

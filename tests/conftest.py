@@ -33,6 +33,26 @@ REFERENCE_DATA = Path("/root/reference/data")
 TESTDATA = Path("/root/testdata")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "reference_data: reads the reference's dataset_15 or its golden "
+        "CSVs under REFERENCE_DATA; skipped when that directory is missing",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    if REFERENCE_DATA.is_dir():
+        return
+    skip = pytest.mark.skip(
+        reason=f"{REFERENCE_DATA} is missing; tests/test_retail_corpus.py "
+        "covers the same pipeline on a generated corpus"
+    )
+    for item in items:
+        if item.get_closest_marker("reference_data"):
+            item.add_marker(skip)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return str(TESTDATA / "sf0.001")

@@ -29,6 +29,8 @@ from retail_data_pipeline_and_forecasting_system_spark.sources import (
 
 DATASET = Path("/root/reference/data/dataset_15")
 
+pytestmark = pytest.mark.reference_data
+
 
 def _rows(df):
     return sorted(

@@ -64,6 +64,7 @@ def test_topk_avoids_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
+@pytest.mark.reference_data
 def test_retail_depletion_join_is_broadcast(spark):
     """The pipeline's products joins must broadcast (36-row dim)."""
     from retail_data_pipeline_and_forecasting_system_spark.plans.retail import (

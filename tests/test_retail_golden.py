@@ -29,6 +29,8 @@ from retail_data_pipeline_and_forecasting_system_spark.sources import (
 DATASET = Path("/root/reference/data/dataset_15")
 GOLDEN = Path("/root/reference/data/output")
 
+pytestmark = pytest.mark.reference_data
+
 MONEY_COLS = {"total_amount", "line_total", "total_sales", "total_profit",
               "unit_price"}
 DATETIME_COLS = {"order_datetime"}

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from retail_data_pipeline_and_forecasting_system_spark.operators.depletion import (
@@ -55,6 +56,7 @@ def test_reload_daily_resets_stock(spark):
     assert reload == {1: 3, 2: 0, 3: 4}
 
 
+@pytest.mark.reference_data
 def test_processing_metrics_match_golden(spark):
     products = read_products_csv(spark, f"{DATASET}/products.csv")
     raw = read_transactions_json(spark, f"{DATASET}/transactions_*.json")
@@ -72,6 +74,7 @@ def test_processing_metrics_match_golden(spark):
     assert m["fulfilled_lines"] == 27652 - 230
 
 
+@pytest.mark.reference_data
 def test_binary_file_source_plumbing(spark):
     df = read_binary_files(spark, f"{DATASET}/transactions_202402*.json")
     decoded = decode_media(df.select("doc_id", "payload"))

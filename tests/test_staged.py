@@ -7,6 +7,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from retail_data_pipeline_and_forecasting_system_spark.plans.staged import (
     run_staged_pipeline,
@@ -17,6 +18,7 @@ GOLDEN = Path("/root/reference/data/output")
 MONEY = {"total_amount", "line_total", "total_sales", "total_profit", "unit_price"}
 
 
+@pytest.mark.reference_data
 def test_staged_pipeline_golden(spark, tmp_path):
     out = run_staged_pipeline(
         spark,
