@@ -10,12 +10,14 @@ state. Both operators here are pure DataFrame compositions — no
 
 Scale notes
 -----------
-- ``merge_upsert`` is ONE full-outer shuffle join on the key (or a
-  broadcast join when the change set is small — the common case for
-  dimension maintenance: pass ``broadcast_source=True``). Matched rows
-  take source values, unmatched target rows pass through, unmatched
-  source rows become inserts — MERGE WHEN MATCHED / NOT MATCHED
-  semantics with deterministic column-level resolution.
+- ``merge_upsert`` is ONE full-outer shuffle join on the key. Spark
+  cannot broadcast either side of a full outer join, so a small change
+  set does not make it a broadcast join: both sides shuffle and sort.
+  Matched rows take source values, unmatched target rows pass through,
+  unmatched source rows become inserts — MERGE WHEN MATCHED / NOT
+  MATCHED semantics with deterministic column-level resolution. Where
+  the source replaces whole rows, a tagged union plus one aggregate per
+  key needs no join (``plans/incremental.py``).
 - ``scd2_intervals`` is the classic two-window reconstruction: detect
   state changes with ``lag`` then close intervals with ``lead``. Both
   windows partition on the same entity key, so the whole operator rides
@@ -47,12 +49,13 @@ def merge_upsert(
     Unmatched source rows are inserted; target columns absent from
     ``update_cols`` take ``insert_defaults`` (else null).
     ``action_col`` optionally names an output column tagging each row
-    ``update`` / ``keep`` / ``insert``.
+    ``update`` / ``keep`` / ``insert``. ``broadcast_source`` only puts a
+    broadcast hint on ``source``: Spark cannot broadcast a full outer
+    join, so it ignores the hint and the plan stays a sort-merge join.
 
     Contract: ``source`` must be unique on ``key`` (SQL MERGE raises on
     multiple matches; here a duplicate source key would fan out the
-    matched target row). Aggregate the change feed first —
-    ``plans/incremental.py`` shows the pattern.
+    matched target row). Aggregate the change feed first.
     """
     insert_defaults = dict(insert_defaults or {})
     src = F.broadcast(source) if broadcast_source else source

@@ -3584,8 +3584,8 @@ def smp1_stratified_sample(spark, sf):
     ref="MERGE / SCD1 upsert — the general form of the reference's "
     "in-place stock mutation (data_processor.py:346-355); "
     "operators/scd.py merge_upsert",
-    scale="one full-outer shuffle on the key; for small change sets pass "
-    "broadcast_source=True and the target never shuffles at all",
+    scale="one full-outer shuffle on the key; Spark cannot broadcast a "
+    "full outer join, so both sides shuffle whatever the change set's size",
 )
 def ops1_merge_upsert(spark, sf):
     from ..operators.scd import merge_upsert

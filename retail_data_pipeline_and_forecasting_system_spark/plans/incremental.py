@@ -7,17 +7,21 @@ the Airflow variant re-reads ALL transaction parquet each run
 history to add a day: you fold only the NEW partition into the stored
 summary.
 
-``refresh_daily_summary`` is that fold, built from pieces that already
-exist: run the pipeline's own ``build_daily_summary`` (one grouped
-aggregate, so the unpersisted slice — and the depletion kernel behind
-it — is consumed once) on the new slice only, then MERGE the day rows
-into the summary table with ``operators.scd.merge_upsert``. Day keys
-replace: re-running a day is idempotent, so late data and backfills are
-just re-merges; other days pass through untouched.
+``refresh_daily_summary`` is that fold: run the pipeline's own
+``build_daily_summary`` (one grouped aggregate, so the unpersisted slice
+— and the depletion kernel behind it — is consumed once) on the new
+slice only, then replace days by key. The stored rows and the delta rows
+are unioned, tagged by origin, and one aggregate per ``date`` keeps the
+delta's row where there is one (``max_by`` over the tag). Re-running a
+day is idempotent, so late data and backfills are just re-folds; other
+days pass through untouched.
 
-Scale: the incremental cost is O(new partition) + one broadcast-outer
-merge against the summary (O(days) rows — tiny). Nothing reprocesses
-history; the summary table side never shuffles.
+Scale: the incremental cost is O(new partition) + one hash aggregate
+over the summary plus the delta (O(days) rows — tiny). Nothing
+reprocesses history and there is no join: a MERGE here would be a full
+outer join, which Spark cannot broadcast, so it would sort-merge both
+sides. A broadcast anti-join plus a union would avoid that but reference
+the delta twice, running the depletion kernel twice.
 """
 
 from __future__ import annotations
@@ -25,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.scd import merge_upsert
 from .retail import build_daily_summary
 
 _METRICS = ["num_orders", "total_sales", "total_profit"]
@@ -49,12 +52,11 @@ def refresh_daily_summary(
     delta = summarize_slice(new_processed, products)
     if summary is None:
         return delta
-    return merge_upsert(
-        summary,
-        delta.select(
-            "date", *[F.col(c).alias(f"_new_{c}") for c in _METRICS]
-        ),
-        key="date",
-        update_cols={c: f"_new_{c}" for c in _METRICS},
-        broadcast_source=True,
+    tagged = summary.select("date", *_METRICS, F.lit(0).alias("_new")).unionByName(
+        delta.select("date", *_METRICS, F.lit(1).alias("_new"))
+    )
+    # each side holds one row per date, so every metric's max_by picks
+    # from the same row: the delta's when the date has one
+    return tagged.groupBy("date").agg(
+        *[F.max_by(c, "_new").alias(c) for c in _METRICS]
     )

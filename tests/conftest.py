@@ -29,6 +29,14 @@ def spark():
     yield spark
 
 
+@pytest.fixture(scope="session")
+def compilations(spark):
+    """Count of generated classes Janino has compiled in this JVM so far
+    (every miss of Spark's codegen cache compiles one)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 REFERENCE_DATA = Path("/root/reference/data")
 TESTDATA = Path("/root/testdata")
 

@@ -29,8 +29,18 @@ TABLES = [
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
+def duck(tmp_path_factory):
+    # Bounded, with spill room under pytest's tmp: an oracle that outgrows
+    # the limit fails its own test with DuckDB's OutOfMemoryException,
+    # instead of the kernel's OOM killer taking the Spark JVM (and every
+    # later test with it).
+    con = duckdb.connect(
+        config={
+            "memory_limit": "2GB",
+            "threads": min(4, os.cpu_count() or 1),
+            "temp_directory": str(tmp_path_factory.mktemp("duckdb")),
+        }
+    )
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con

@@ -203,8 +203,9 @@ def test_staged_forecast_csv(gen, staged_run):
     assert row.split(",")[0] == (last + dt.timedelta(1)).isoformat()
 
 
-def test_late_day_refresh_matches_oracle(spark, gen, staged_run):
-    lake = staged_run.lake
+def _late_day_refresh(spark, gen, lake):
+    """The late day folded into a staged lake's daily summary, with the
+    stock the on-time days left."""
     stock_now = spark.read.parquet(f"{lake}/products_updated").select(
         "product_id", F.col("current_stock").alias("stock")
     )
@@ -216,13 +217,26 @@ def test_late_day_refresh_matches_oracle(spark, gen, staged_run):
     late = explode_transactions(
         read_transactions_json(spark, f"{gen.dir}/late/transactions_*.json")
     )
-    refreshed = refresh_daily_summary(
+    return refresh_daily_summary(
         spark.read.parquet(f"{lake}/daily_summary"),
         process_lines(late, products),
         products,
     )
+
+
+def test_late_day_refresh_matches_oracle(spark, gen, staged_run):
+    refreshed = _late_day_refresh(spark, gen, staged_run.lake)
     got = sorted(_rows("daily_summary", refreshed))
     _assert_oracle("daily_summary", got, gen.want_full["daily_summary"])
+
+
+def test_late_day_refresh_replaces_days_without_a_join(spark, gen, staged_run):
+    """A MERGE's full outer join cannot broadcast, so it would sort-merge
+    the summary; the refresh replaces days with one aggregate instead,
+    and still runs the depletion kernel once."""
+    plan = _explain(_late_day_refresh(spark, gen, staged_run.lake))
+    assert "SortMergeJoin" not in plan
+    assert _operators(plan, "FlatMapGroupsInPandas") == 1
 
 
 def test_incremental_equals_batch_and_is_idempotent(products, raw, batch):
@@ -301,3 +315,30 @@ def test_stage_report_csvs_sort_without_a_range_exchange(staged_run):
         assert "rangepartitioning" not in plan, name
         assert _operators(plan, "Sort") == 1, name
     assert "LocalTableScan" in staged_run.plans["sales_profit_forecast.csv"]
+
+
+def test_repeated_pass_compiles_no_new_classes(
+    spark, compilations, gen, products, raw, tmp_path
+):
+    """A pass replayed in the same JVM finds every generated class in
+    Spark's codegen cache: the batch outputs, the staged DAG into a fresh
+    lake and the late-day refresh. A cache smaller than one pass's
+    working set recompiles all of them every time."""
+    compiled = []
+    for run in range(2):
+        before = compilations()
+        outs = run_retail_pipeline(raw, products)
+        for name in COLUMNS:
+            outs[name].collect()
+        release_retail_pipeline(outs)
+        work = tmp_path / f"run{run}"
+        staged.run_staged_pipeline(
+            spark,
+            f"{gen.dir}/customers.csv",
+            f"{gen.dir}/products.csv",
+            f"{gen.dir}/transactions_*.json",
+            str(work),
+        )
+        _late_day_refresh(spark, gen, work / "lake").collect()
+        compiled.append(compilations() - before)
+    assert compiled[1] == 0, compiled

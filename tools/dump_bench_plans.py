@@ -1,8 +1,8 @@
-"""Dump `.explain("formatted")` for every bench query into plans/r15/.
+"""Dump `.explain("formatted")` for every bench query into plans/<round>/.
 
-Usage: python tools/dump_r15_plans.py before|after [query ...]
+Usage: python tools/dump_bench_plans.py --round r16 before|after [query ...]
 
-Writes plans/r15/<query>_<tag>.txt for each bench=True registry entry
+Writes plans/<round>/<query>_<tag>.txt for each bench=True registry entry
 (default) or just the named ones. The retail pipeline's four outputs are
 dumped as retail_<name>_<tag>.txt. Plans are captured at sf0.1 — the scale
 the driver benches — so Exchange counts / join strategies match the
@@ -11,6 +11,7 @@ measured numbers.
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import sys
@@ -30,11 +31,18 @@ SF = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
-    out_dir = REPO / "plans" / "r15"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--round", required=True,
+                    help="directory under plans/ to write, e.g. r16")
+    ap.add_argument("tag", choices=["before", "after"])
+    ap.add_argument("queries", nargs="*",
+                    help="only these entries (default: every bench entry)")
+    args = ap.parse_args()
+    tag = args.tag
+    only = set(args.queries)
+    out_dir = REPO / "plans" / args.round
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_session("dump-r15-plans")
+    spark = get_session(f"dump-{args.round}-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     names = [n for n, s in QUERIES.items() if s.bench]
