@@ -9627,11 +9627,18 @@ def _n15_sql() -> str:
     """Unrolled greedy-walk oracle over n13's spliced graph (the n13
     unroll style: fixed steps, one candidate/argmax/merge CTE block per
     step — windows are fine in plain CTEs where a recursive term would
-    forbid them)."""
+    forbid them).
+
+    ``g``, ``und`` and every ``s{k}`` are MATERIALIZED, as in the BPE
+    merge oracle: ``und`` reads ``g`` twice and each step reads both
+    ``und`` and ``s{k-1}``, so DuckDB's default CTE inlining re-ran
+    n13's whole NN-Descent unroll once per reference and ran out of
+    memory under a 2 GB limit. Materializing changes only how DuckDB
+    evaluates the query, not what it returns."""
     g = QUERIES["n13_nn_descent_graph"].sql
     blocks = [f"""
-    WITH g AS ( {g} ),
-    und AS (
+    WITH g AS MATERIALIZED ( {g} ),
+    und AS MATERIALIZED (
       SELECT src, dst FROM g UNION SELECT dst AS src, src AS dst FROM g
     ),
     vecs AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
@@ -9640,7 +9647,7 @@ def _n15_sql() -> str:
       FROM embeddings WHERE vec_id < 20
     ),
     entry AS (SELECT min(id) AS eid FROM vecs),
-    s0 AS (
+    s0 AS MATERIALIZED (
       SELECT q.query_id, q.qv, e.eid AS cur_id,
         {_sql_cosine('q.qv', 'v.vec')} AS cur_sim, 0 AS n_steps
       FROM q, entry e JOIN vecs v ON v.id = e.eid
@@ -9659,7 +9666,7 @@ def _n15_sql() -> str:
                              ORDER BY sim DESC, dst) AS rnk
         FROM c{k}) WHERE rnk = 1
     ),
-    s{k} AS (
+    s{k} AS MATERIALIZED (
       SELECT s.query_id, s.qv,
         CASE WHEN b.sim > s.cur_sim THEN b.dst ELSE s.cur_id END AS cur_id,
         CASE WHEN b.sim > s.cur_sim THEN b.sim ELSE s.cur_sim END

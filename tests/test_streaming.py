@@ -1,18 +1,25 @@
 """Streaming rendition agrees with the batch pipeline.
 
-Replays dataset_15 through Structured Streaming (one micro-batch per day
-file via maxFilesPerTrigger=1 with ascending mtimes, Trigger.AvailableNow)
-and asserts the stateful depletion produces exactly the batch engine's
-fulfilled quantities in timestamp order — i.e. cross-micro-batch state
-carryover == cross-day carryover.
+Replays a generated candy-store corpus (``perfbench/corpus.py``, loaded
+read-only; seed 17, 10 days x 300 transactions, 36 products with three
+hot ones stocked below their demand) through Structured Streaming: one
+micro-batch per day file via maxFilesPerTrigger=1 with ascending mtimes,
+Trigger.AvailableNow. The stateful depletion must produce exactly the
+batch engine's fulfilled quantities in timestamp order — i.e.
+cross-micro-batch state carryover == cross-day carryover. The expected
+counts (lines, days, products) come from the generated documents.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import os
 import shutil
 import time
+from collections import Counter
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,21 +36,46 @@ from retail_data_pipeline_and_forecasting_system_spark.streaming import (
     run_available_now,
 )
 
-DATASET = Path("/root/reference/data/dataset_15")
+_CORPUS_PY = Path(__file__).resolve().parent.parent / "perfbench" / "corpus.py"
+_spec = importlib.util.spec_from_file_location("perfbench_corpus", _CORPUS_PY)
+corpus = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(corpus)
+
+SEED, DAYS, TX_PER_DAY = 17, 10, 300
 
 
-def test_streaming_matches_batch(spark, tmp_path):
+@pytest.fixture(scope="module")
+def gen(tmp_path_factory):
+    """The corpus on disk plus the counts the tests expect of it."""
+    out = tmp_path_factory.mktemp("stream_corpus")
+    c = corpus.generate(str(out), SEED, DAYS, TX_PER_DAY)
+    items = [
+        it
+        for docs in c["days"]
+        for doc in docs
+        for it in doc["items"]
+        if it["qty"] is not None
+    ]
+    return SimpleNamespace(
+        dir=out,
+        n_lines=len(items),
+        n_days=len(c["days"]),
+        n_products=len({it["product_id"] for it in items}),
+    )
+
+
+def test_streaming_matches_batch(spark, gen, tmp_path):
     # stage input files with ascending mtimes so the file source's
     # modification-time ordering == business-day ordering
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    for i, f in enumerate(sorted(DATASET.glob("transactions_*.json"))):
+    for i, f in enumerate(sorted(gen.dir.glob("transactions_*.json"))):
         dst = in_dir / f.name
         shutil.copy(f, dst)
         ts = time.time() - 1000 + i
         os.utime(dst, (ts, ts))
 
-    products = read_products_csv(spark, str(DATASET / "products.csv"))
+    products = read_products_csv(spark, str(gen.dir / "products.csv"))
     stock = {
         r["product_id"]: r["stock"]
         for r in products.select("product_id", "stock").collect()
@@ -60,7 +92,7 @@ def test_streaming_matches_batch(spark, tmp_path):
         .to_dict()
     )
 
-    raw = read_transactions_json(spark, str(DATASET / "transactions_*.json"))
+    raw = read_transactions_json(spark, str(gen.dir / "transactions_*.json"))
     batch = (
         process_lines(
             explode_transactions(raw), products, process_order="timestamp"
@@ -71,12 +103,15 @@ def test_streaming_matches_batch(spark, tmp_path):
         .to_dict()
     )
 
-    assert len(streamed) == len(batch) == 27652
+    assert len(streamed) == len(batch) == gen.n_lines
+    # stock runs out only after several days, so matching here needs the
+    # remaining stock carried across micro-batches
+    assert 0 in batch.values()
     diffs = {k for k in batch if streamed.get(k) != batch[k]}
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
 
-def test_transform_with_state_matches_batch(spark, tmp_path):
+def test_transform_with_state_matches_batch(spark, gen, tmp_path):
     """The Spark 4 transformWithStateInPandas rendition (typed state
     handles + DISTRIBUTED initial state) produces exactly the batch
     engine's fulfilled quantities — state-v2 twin of
@@ -95,14 +130,14 @@ def test_transform_with_state_matches_batch(spark, tmp_path):
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    days = sorted(DATASET.glob("transactions_*.json"))[:3]
+    days = sorted(gen.dir.glob("transactions_*.json"))[:3]
     for i, f in enumerate(days):
         dst = in_dir / f.name
         shutil.copy(f, dst)
         ts = time.time() - 1000 + i
         os.utime(dst, (ts, ts))
 
-    products = read_products_csv(spark, str(DATASET / "products.csv"))
+    products = read_products_csv(spark, str(gen.dir / "products.csv"))
     initial = products.select(
         "product_id", F.col("stock").cast("int").alias("stock")
     )
@@ -172,13 +207,22 @@ def test_streaming_matches_batch_when_groups_span_arrow_chunks(
     Arrow chunks (default ~10k rows). The fold must concat + sort the whole
     group before folding — sorting each chunk independently silently breaks
     batch/stream parity. Force multi-chunk delivery with a tiny Arrow batch
-    size (each product has ~80 lines/day -> ~6 chunks at 16 rows)."""
+    size: a one-day corpus of 1,000 transactions gives each product about
+    50-90 lines in the day and each of the three hot ones about 220-250
+    (4-16 chunks at 16 rows). The hot products are stocked below the day's
+    demand, so stock runs out inside the micro-batch, and the day file is
+    written in reverse arrival order, so rows reach the chunks out of
+    timestamp order."""
+    src = tmp_path / "corpus"
+    c = corpus.generate(str(src), SEED, 1, 1000)
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    day = sorted(DATASET.glob("transactions_*.json"))[0]
-    shutil.copy(day, in_dir / day.name)
+    day = sorted(src.glob("transactions_*.json"))[0]
+    (in_dir / day.name).write_text(
+        json.dumps(c["days"][0][::-1], separators=(",", ":"))
+    )
 
-    products = read_products_csv(spark, str(DATASET / "products.csv"))
+    products = read_products_csv(spark, str(src / "products.csv"))
     stock = {
         r["product_id"]: r["stock"]
         for r in products.select("product_id", "stock").collect()
@@ -215,11 +259,15 @@ def test_streaming_matches_batch_when_groups_span_arrow_chunks(
         .to_dict()
     )
     assert len(streamed) == len(batch) > 0
+    # the test only bites if a product stocks out in the day and spans
+    # more than one 16-row chunk
+    assert 0 in batch.values()
+    assert max(Counter(pid for _, pid, _ in batch).values()) > 16
     diffs = {k for k in batch if streamed.get(k) != batch[k]}
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
 
-def test_streaming_daily_summary_matches_batch(spark, tmp_path):
+def test_streaming_daily_summary_matches_batch(spark, gen, tmp_path):
     from retail_data_pipeline_and_forecasting_system_spark.streaming import (
         read_transaction_stream,
         streaming_daily_summary,
@@ -227,7 +275,7 @@ def test_streaming_daily_summary_matches_batch(spark, tmp_path):
 
     in_dir = tmp_path / "agg_in"
     in_dir.mkdir()
-    for f in sorted(DATASET.glob("transactions_*.json")):
+    for f in sorted(gen.dir.glob("transactions_*.json")):
         shutil.copy(f, in_dir / f.name)
 
     lines = read_transaction_stream(spark, str(in_dir / "*.json"))
@@ -256,10 +304,10 @@ def test_streaming_daily_summary_matches_batch(spark, tmp_path):
         for r in batch.collect()
     }
     assert got == want
-    assert len(got) == 10  # one window per business day
+    assert len(got) == gen.n_days  # one window per business day
 
 
-def test_streaming_dedup_drops_replayed_file(spark, tmp_path):
+def test_streaming_dedup_drops_replayed_file(spark, gen, tmp_path):
     from retail_data_pipeline_and_forecasting_system_spark.streaming import (
         read_transaction_stream,
         streaming_dedup,
@@ -267,7 +315,7 @@ def test_streaming_dedup_drops_replayed_file(spark, tmp_path):
 
     in_dir = tmp_path / "dedup_in"
     in_dir.mkdir()
-    src = sorted(DATASET.glob("transactions_*.json"))[0]
+    src = sorted(gen.dir.glob("transactions_*.json"))[0]
     # the same day's data arrives twice (a replayed ingest)
     shutil.copy(src, in_dir / "a.json")
     shutil.copy(src, in_dir / "b.json")
@@ -351,7 +399,7 @@ def test_streaming_sessionize_matches_batch_gap_sessions(spark, tmp_path):
     assert got == want
 
 
-def test_stream_static_enrichment_matches_batch_join(spark, tmp_path):
+def test_stream_static_enrichment_matches_batch_join(spark, gen, tmp_path):
     from retail_data_pipeline_and_forecasting_system_spark.streaming import (
         read_transaction_stream,
         streaming_enrich_static,
@@ -359,9 +407,9 @@ def test_stream_static_enrichment_matches_batch_join(spark, tmp_path):
 
     in_dir = tmp_path / "enrich_in"
     in_dir.mkdir()
-    for f in sorted(DATASET.glob("transactions_*.json")):
+    for f in sorted(gen.dir.glob("transactions_*.json")):
         shutil.copy(f, in_dir / f.name)
-    products = read_products_csv(spark, str(DATASET / "products.csv")).select(
+    products = read_products_csv(spark, str(gen.dir / "products.csv")).select(
         "product_id", "sales_price"
     )
 
@@ -398,22 +446,22 @@ def test_stream_static_enrichment_matches_batch_join(spark, tmp_path):
     )
     as_map = lambda rows: {r["product_id"]: (r["n"], r["rev"]) for r in rows}
     assert as_map(got) == as_map(batch)
-    assert len(got) == 36  # every product enriched
+    assert len(got) == gen.n_products  # every product enriched
 
 
 def test_restart_from_checkpoint_resumes_state_and_skips_processed(
-    spark, tmp_path
+    spark, gen, tmp_path
 ):
     """Two runs against one checkpoint: days 1-5, stop, days 6-10 arrive,
     restart. The second run must (a) NOT reprocess days 1-5 — their
     output rows are already committed — and (b) resume depletion state,
     so the union of both runs' output equals the one-shot batch result."""
-    files = sorted(DATASET.glob("transactions_*.json"))
+    files = sorted(gen.dir.glob("transactions_*.json"))
     in_dir = tmp_path / "rs_in"
     in_dir.mkdir()
     out_dir, ckpt = str(tmp_path / "rs_out"), str(tmp_path / "rs_ckpt")
 
-    products = read_products_csv(spark, str(DATASET / "products.csv"))
+    products = read_products_csv(spark, str(gen.dir / "products.csv"))
     stock = {
         r["product_id"]: r["stock"]
         for r in products.select("product_id", "stock").collect()
@@ -445,7 +493,7 @@ def test_restart_from_checkpoint_resumes_state_and_skips_processed(
         .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
         .to_dict()
     )
-    raw = read_transactions_json(spark, str(DATASET / "transactions_*.json"))
+    raw = read_transactions_json(spark, str(gen.dir / "transactions_*.json"))
     batch = (
         process_lines(
             explode_transactions(raw), products, process_order="timestamp"
@@ -455,11 +503,13 @@ def test_restart_from_checkpoint_resumes_state_and_skips_processed(
         .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
         .to_dict()
     )
-    assert len(streamed) == len(batch) == 27652
+    assert len(streamed) == len(batch) == gen.n_lines
     # no reprocessing: RAW output row count (before key collapse) equals
     # the batch line count — replayed days would appear as extra rows
-    assert spark.read.parquet(out_dir).count() == 27652
-    assert 0 < n_first < 27652
+    assert spark.read.parquet(out_dir).count() == gen.n_lines
+    assert 0 < n_first < gen.n_lines
+    # a line cancels only once stock carried over the restart runs out
+    assert 0 in batch.values()
     diffs = {k for k in batch if streamed.get(k) != batch[k]}
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
@@ -504,7 +554,7 @@ def test_stream_stream_funnel_matches_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
+def test_idempotent_sink_replay_does_not_duplicate(spark, gen, tmp_path):
     """Simulate the crash-replay an at-least-once checkpoint produces: run
     the same stream TWICE against the same output dir with a FRESH
     checkpoint (so every epoch replays). The per-epoch dynamic partition
@@ -516,7 +566,7 @@ def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    for day in sorted(DATASET.glob("transactions_*.json"))[:2]:
+    for day in sorted(gen.dir.glob("transactions_*.json"))[:2]:
         shutil.copy(day, in_dir / day.name)
     out_dir = str(tmp_path / "out")
 
@@ -547,7 +597,7 @@ def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
     assert a == b
 
 
-def test_streaming_quarantine_routes_and_converges(spark, tmp_path):
+def test_streaming_quarantine_routes_and_converges(spark, gen, tmp_path):
     """The streaming data-quality gate: clean/quarantine routing must (a)
     partition every arriving row exactly once, (b) equal the batch-mode
     split over the same data, and (c) converge — not duplicate — when
@@ -562,7 +612,7 @@ def test_streaming_quarantine_routes_and_converges(spark, tmp_path):
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    for day in sorted(DATASET.glob("transactions_*.json"))[:2]:
+    for day in sorted(gen.dir.glob("transactions_*.json"))[:2]:
         shutil.copy(day, in_dir / day.name)
     clean_dir, bad_dir = str(tmp_path / "clean"), str(tmp_path / "bad")
 
