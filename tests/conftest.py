@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import importlib.util
 import sys
 from pathlib import Path
 
@@ -59,6 +60,18 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.get_closest_marker("reference_data"):
             item.add_marker(skip)
+
+
+@pytest.fixture(scope="session")
+def corpus():
+    """The benchmark's corpus generator and oracle, ``perfbench/corpus.py``,
+    loaded read-only from its file (``perfbench`` is not a package)."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_corpus", REPO / "perfbench" / "corpus.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
 
 @pytest.fixture(scope="session")

@@ -20,7 +20,6 @@ from __future__ import annotations
 import contextlib
 import csv
 import datetime as dt
-import importlib.util
 import io
 import math
 import re
@@ -53,11 +52,6 @@ from retail_data_pipeline_and_forecasting_system_spark.sources import (
     read_products_csv,
     read_transactions_json,
 )
-
-_CORPUS_PY = Path(__file__).resolve().parent.parent / "perfbench" / "corpus.py"
-_spec = importlib.util.spec_from_file_location("perfbench_corpus", _CORPUS_PY)
-corpus = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(corpus)
 
 SEED, DAYS, TX_PER_DAY = 11, 4, 300
 
@@ -116,7 +110,7 @@ def _operators(plan: str, name: str) -> int:
 
 
 @pytest.fixture(scope="module")
-def gen(tmp_path_factory):
+def gen(corpus, tmp_path_factory):
     out = tmp_path_factory.mktemp("corpus")
     c = corpus.generate(str(out), SEED, DAYS, TX_PER_DAY, late_days=1)
     want = corpus.oracle(c["products"], c["days"][:DAYS])

@@ -1,18 +1,20 @@
 """Streaming rendition agrees with the batch pipeline.
 
-Replays a generated candy-store corpus (``perfbench/corpus.py``, loaded
-read-only; seed 17, 10 days x 300 transactions, 36 products with three
-hot ones stocked below their demand) through Structured Streaming: one
-micro-batch per day file via maxFilesPerTrigger=1 with ascending mtimes,
+Replays ten business days through Structured Streaming: one micro-batch
+per day file via maxFilesPerTrigger=1 with ascending mtimes,
 Trigger.AvailableNow. The stateful depletion must produce exactly the
 batch engine's fulfilled quantities in timestamp order — i.e.
-cross-micro-batch state carryover == cross-day carryover. The expected
-counts (lines, days, products) come from the generated documents.
+cross-micro-batch state carryover == cross-day carryover.
+
+The days are the reference's dataset_15 (27,652 lines, 36 products) where
+``REFERENCE_DATA`` holds it, else a generated candy-store corpus
+(``perfbench/corpus.py``; seed 17, 10 days x 300 transactions, 36 products
+with three hot ones stocked below their demand) whose expected counts
+(lines, days, products) come from the generated documents.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import shutil
@@ -36,17 +38,20 @@ from retail_data_pipeline_and_forecasting_system_spark.streaming import (
     run_available_now,
 )
 
-_CORPUS_PY = Path(__file__).resolve().parent.parent / "perfbench" / "corpus.py"
-_spec = importlib.util.spec_from_file_location("perfbench_corpus", _CORPUS_PY)
-corpus = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(corpus)
+from conftest import REFERENCE_DATA
 
+DATASET = REFERENCE_DATA / "dataset_15"
 SEED, DAYS, TX_PER_DAY = 17, 10, 300
 
 
 @pytest.fixture(scope="module")
-def gen(tmp_path_factory):
-    """The corpus on disk plus the counts the tests expect of it."""
+def gen(corpus, tmp_path_factory):
+    """The days on disk plus the counts the tests expect of them: the
+    reference's dataset_15 where it exists, else a generated corpus."""
+    if DATASET.is_dir():
+        return SimpleNamespace(
+            dir=DATASET, n_lines=27652, n_days=10, n_products=36
+        )
     out = tmp_path_factory.mktemp("stream_corpus")
     c = corpus.generate(str(out), SEED, DAYS, TX_PER_DAY)
     items = [
@@ -104,8 +109,8 @@ def test_streaming_matches_batch(spark, gen, tmp_path):
     )
 
     assert len(streamed) == len(batch) == gen.n_lines
-    # stock runs out only after several days, so matching here needs the
-    # remaining stock carried across micro-batches
+    # on the generated corpus stock first runs out after day 5, so the
+    # cancelled lines match only if stock is carried across micro-batches
     assert 0 in batch.values()
     diffs = {k for k in batch if streamed.get(k) != batch[k]}
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
@@ -200,29 +205,10 @@ def test_transform_with_state_matches_batch(spark, gen, tmp_path):
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
 
-def test_streaming_matches_batch_when_groups_span_arrow_chunks(
-    spark, tmp_path
-):
-    """Regression: Spark hands applyInPandasWithState one group as MULTIPLE
-    Arrow chunks (default ~10k rows). The fold must concat + sort the whole
-    group before folding — sorting each chunk independently silently breaks
-    batch/stream parity. Force multi-chunk delivery with a tiny Arrow batch
-    size: a one-day corpus of 1,000 transactions gives each product about
-    50-90 lines in the day and each of the three hot ones about 220-250
-    (4-16 chunks at 16 rows). The hot products are stocked below the day's
-    demand, so stock runs out inside the micro-batch, and the day file is
-    written in reverse arrival order, so rows reach the chunks out of
-    timestamp order."""
-    src = tmp_path / "corpus"
-    c = corpus.generate(str(src), SEED, 1, 1000)
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    day = sorted(src.glob("transactions_*.json"))[0]
-    (in_dir / day.name).write_text(
-        json.dumps(c["days"][0][::-1], separators=(",", ":"))
-    )
-
-    products = read_products_csv(spark, str(src / "products.csv"))
+def _stream_and_batch_in_16_row_chunks(spark, in_dir, products_csv, out):
+    """Fulfilled quantity per line, streamed with Arrow batches of 16 rows
+    and from the batch engine, over the day files in ``in_dir``."""
+    products = read_products_csv(spark, str(products_csv))
     stock = {
         r["product_id"]: r["stock"]
         for r in products.select("product_id", "stock").collect()
@@ -231,7 +217,7 @@ def test_streaming_matches_batch_when_groups_span_arrow_chunks(
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        out_dir, ckpt = str(out / "out"), str(out / "ckpt")
         run_available_now(spark, str(in_dir / "*.json"), stock, ckpt, out_dir)
     finally:
         if old is not None:
@@ -258,11 +244,52 @@ def test_streaming_matches_batch_when_groups_span_arrow_chunks(
         .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
         .to_dict()
     )
+    return streamed, batch
+
+
+def test_streaming_matches_batch_when_groups_span_arrow_chunks(
+    spark, corpus, tmp_path
+):
+    """Regression: Spark hands applyInPandasWithState one group as MULTIPLE
+    Arrow chunks (default ~10k rows). The fold must concat + sort the whole
+    group before folding — sorting each chunk independently silently breaks
+    batch/stream parity. Force multi-chunk delivery with a tiny Arrow batch
+    size: a one-day corpus of 1,000 transactions gives each product about
+    50-90 lines in the day and each of the three hot ones about 220-250
+    (4-16 chunks at 16 rows). The hot products are stocked below the day's
+    demand, so stock runs out inside the micro-batch, and the day file is
+    written in reverse arrival order, so rows reach the chunks out of
+    timestamp order. Where the reference's dataset_15 exists, its first
+    day (~80 lines per product) is replayed as delivered too."""
+    src = tmp_path / "corpus"
+    c = corpus.generate(str(src), SEED, 1, 1000)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    day = sorted(src.glob("transactions_*.json"))[0]
+    (in_dir / day.name).write_text(
+        json.dumps(c["days"][0][::-1], separators=(",", ":"))
+    )
+    streamed, batch = _stream_and_batch_in_16_row_chunks(
+        spark, in_dir, src / "products.csv", tmp_path / "gen"
+    )
     assert len(streamed) == len(batch) > 0
     # the test only bites if a product stocks out in the day and spans
     # more than one 16-row chunk
     assert 0 in batch.values()
     assert max(Counter(pid for _, pid, _ in batch).values()) > 16
+    diffs = {k for k in batch if streamed.get(k) != batch[k]}
+    assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
+
+    if not DATASET.is_dir():
+        return
+    ref_in = tmp_path / "ref_in"
+    ref_in.mkdir()
+    day = sorted(DATASET.glob("transactions_*.json"))[0]
+    shutil.copy(day, ref_in / day.name)
+    streamed, batch = _stream_and_batch_in_16_row_chunks(
+        spark, ref_in, DATASET / "products.csv", tmp_path / "ref"
+    )
+    assert len(streamed) == len(batch) > 0
     diffs = {k for k in batch if streamed.get(k) != batch[k]}
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
