@@ -61,13 +61,13 @@ def main() -> None:
     # round-7 cache-hygiene scope (caching.drop_stale at each registry-
     # query entry) would change that meter — measured +2.3 s on d3 and
     # +1.3 s on x7 at sf0.1 from pure cache rebuild — so the bench
-    # retains session caches exactly as r01-r06 did. Set INSIDE main()
-    # (not at import) so `import bench` in tests cannot flip product-
-    # default hygiene process-wide (round-7 review finding).
-    caching.KEEP_SESSION_CACHES = True
+    # retains session caches exactly as r01-r06 did. Set on the bench
+    # session's state inside main() (not at import) so `import bench`
+    # in tests cannot flip product-default hygiene.
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_session("bench")
+    caching.state(spark).keep_caches = True
     # bench stderr must stay clean enough that a REAL failure is visible:
     # at WARN, spark.read.json on a glob prints a benign (caught JVM-side)
     # FileStreamSink FileNotFoundException stack trace into the tail
@@ -92,7 +92,7 @@ def main() -> None:
     # from 0.74 s to 1.48 s depending on background load).
     # round 7: one UNTIMED full pass first, so whole-stage-codegen
     # compilation and the persisted intermediates (x5/x7/d3 caches —
-    # CacheManager same-plan reuse, see the KEEP_SESSION_CACHES note)
+    # CacheManager same-plan reuse, see the keep_caches note)
     # are paid before any timed rep. Previously rep 1 absorbed both,
     # making the recorded min effectively a best-of-2; now all 3 timed
     # reps measure the steady-state engine and the recorded floor no
@@ -138,8 +138,8 @@ def main() -> None:
         # the retail block measures under its own steady state, not under
         # 16 queries' accumulated block residency (observed: retail best
         # 1.56 s with a clean cache vs 1.81-1.83 s under full residue)
-        caching.KEEP_SESSION_CACHES = False
-        caching.drop_stale()
+        caching.state(spark).keep_caches = False
+        caching.drop_stale(spark)
 
         best = float("inf")
         for rep in range(6):  # rep 0 is the untimed warm pass

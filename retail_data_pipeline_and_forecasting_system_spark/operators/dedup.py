@@ -94,7 +94,6 @@ def jaccard_pairs_from_words(
     id_col: str = "doc_id",
     words_col: str = "words",
     max_df: int | None = 50,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """:func:`jaccard_pairs` starting from a PRE-SPLIT (id, words) frame.
 
@@ -103,19 +102,11 @@ def jaccard_pairs_from_words(
     other signals (x7's fused curation pass persists one tokens frame
     and feeds both the per-doc signal aggregation and this shingle index
     from it), removing a full corpus re-scan + re-split.
-
-    ``prefix_filter`` switches candidate generation to the
-    AllPairs/SSJoin prefix filter (:func:`_jaccard_from_shingles_prefix`
-    — provably identical output, different physical shape; see its
-    docstring for the measured trade).
     """
     sh = word_shingles_from_words(
         words, k=k, id_col=id_col, words_col=words_col, distinct=False
     )
     sh = _shingle_partitioned_distinct(sh)
-    if prefix_filter:
-        sh = _rare_shingles(sh, max_df, keep_df=True)
-        return _jaccard_from_shingles_prefix(sh, threshold, id_col)
     sh = _rare_shingles(sh, max_df)
     return _jaccard_from_shingles(sh, threshold, id_col)
 
@@ -165,53 +156,36 @@ def _shingle_partitioned_distinct(sh: DataFrame) -> DataFrame:
     return sh.repartition("shingle").distinct()
 
 
-def _rare_shingles(
-    sh: DataFrame, max_df: int | None, keep_df: bool = False
-) -> DataFrame:
+def _rare_shingles(sh: DataFrame, max_df: int | None) -> DataFrame:
     """Drop shingles whose document frequency exceeds ``max_df``.
 
     The document-frequency count shuffles on the SAME key as the pair
     join that follows, and caps that join's per-key fanout at
     ``max_df²`` rows — Σ df² ≤ max_df · Σ df, i.e. linear instead of
     quadratic in hot-key frequency. ``None`` disables the cap.
-
-    ``keep_df`` carries each surviving shingle's document frequency
-    through as ``__df`` (the prefix-filter path ranks shingles
-    rarest-first and needs it; recomputing it would repeat this exact
-    aggregate).
     """
     if max_df is None:
-        if keep_df:
-            df = sh.groupBy("shingle").agg(
-                F.count(F.lit(1)).alias("__df")
-            )
-            return sh.join(df, on="shingle")
         return sh
     rare = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("__df")
-    ).filter(F.col("__df") <= max_df)
-    if not keep_df:
-        rare = rare.select("shingle")
+    ).filter(F.col("__df") <= max_df).select("shingle")
     return sh.join(rare, on="shingle")
 
 
 def _jaccard_from_shingles(
-    sh: DataFrame, threshold: float, id_col: str, cache: bool = True
+    sh: DataFrame, threshold: float, id_col: str
 ) -> DataFrame:
-    if cache:
-        # the rare-shingle frame is consumed THREE times (per-doc sizes +
-        # both sides of the pair join); without a persist each consumer
-        # re-runs the shingle explode + distinct + df-cap join (measured
-        # 3.4 s -> 2.1 s for d2 at sf0.1 with the persist). Same one-shot
-        # caching stance as minhash_lsh_pairs' bucket frame: session-
-        # lived queries accept it, long-running services should pass
-        # cache=False (or unpersist via sparkContext) per epoch. Tracked
-        # in ..caching so the next registry query releases it.
-        from pyspark import StorageLevel
+    # the rare-shingle frame is consumed THREE times (per-doc sizes +
+    # both sides of the pair join); without a persist each consumer
+    # re-runs the shingle explode + distinct + df-cap join (measured
+    # 3.4 s -> 2.1 s for d2 at sf0.1 with the persist). Same one-shot
+    # caching stance as minhash_lsh_pairs' bucket frame. Tracked in
+    # ..caching so the calling thread's next registry query releases it.
+    from pyspark import StorageLevel
 
-        from ..caching import track
+    from ..caching import track
 
-        sh = track(sh.persist(StorageLevel.MEMORY_AND_DISK))
+    sh = track(sh.persist(StorageLevel.MEMORY_AND_DISK))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
 
     a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
@@ -231,96 +205,6 @@ def _jaccard_from_shingles(
             "jaccard",
             F.col("n_common")
             / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def _jaccard_from_shingles_prefix(
-    sh: DataFrame, threshold: float, id_col: str
-) -> DataFrame:
-    """Prefix-filtered exact-Jaccard pairs over the rare-shingle frame —
-    the AllPairs/SSJoin candidate generation (Chaudhuri et al. ICDE 2006;
-    Bayardo et al. WWW 2007) already proven in-tree by
-    d19_prefix_filter_join, applied to the d2/x7 pipeline's CAPPED
-    shingle sets.
-
-    Identical output to :func:`_jaccard_from_shingles` on any input, by
-    the prefix-filter completeness theorem: order shingles by a global
-    total order (here (df, shingle) — rarest first); two sets with
-    J >= t MUST share a shingle inside each one's first
-    n - ceil(t*n) + 1 shingles of that order, so the candidate equi-join
-    over prefixes alone has zero false negatives, and false positives
-    are removed by the same exact ``jaccard >= threshold`` filter the
-    baseline applies. Same capped-Jaccard semantics (``sh`` is the
-    post-cap frame either way).
-
-    Why it can beat the full inverted-index join: the join keys are only
-    each set's RAREST shingles (~half the rows at t=0.5, and the hot
-    near-cap shingles that drive Σ df² never become keys), so candidate
-    volume drops ~4x (measured at sf0.1: 1.27 M -> 0.30 M pair rows);
-    verification then runs row-local over collected shingle-set arrays
-    (the d3 _verify_candidates shape) instead of aggregating every
-    co-occurrence row. The trade: one extra doc-keyed window/sort over
-    the rare rows plus ~4 more stages — a fixed cost that shrinks
-    relative to the join saving as the corpus grows.
-
-    Expects ``sh`` to carry ``__df`` (``_rare_shingles(keep_df=True)``).
-    """
-    from pyspark import StorageLevel
-
-    from ..caching import track
-
-    # one doc-keyed exchange: the count + rank windows and the set
-    # collection below all reuse it (guide §2.4)
-    w_n = Window.partitionBy(id_col)
-    w_rk = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    ranked = (
-        sh.withColumn("__n", F.count(F.lit(1)).over(w_n))
-        .withColumn("__rk", F.row_number().over(w_rk))
-    )
-    ranked = track(ranked.persist(StorageLevel.MEMORY_AND_DISK))
-    # prefix length n - ceil(t*n) + 1 (exact for the thresholds used
-    # here: t*n is an exact binary product for t = 0.5)
-    prefix = ranked.filter(
-        F.col("__rk")
-        <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    )
-    cand = (
-        prefix.select(F.col(id_col).alias("doc_a"), "shingle")
-        .join(
-            prefix.select(F.col(id_col).alias("doc_b"), "shingle"),
-            on="shingle",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sets = ranked.groupBy(id_col).agg(
-        F.collect_list("shingle").alias("__set")
-    )
-    sets = track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    sa = sets.select(
-        F.col(id_col).alias("doc_a"), F.col("__set").alias("__set_a")
-    )
-    sb = sets.select(
-        F.col(id_col).alias("doc_b"), F.col("__set").alias("__set_b")
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "__nc", F.size(F.array_intersect("__set_a", "__set_b"))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("__nc")
-            / (
-                F.size("__set_a")
-                + F.size("__set_b")
-                - F.col("__nc")
-            ),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")

@@ -39,7 +39,6 @@ def merge_upsert(
     key: str,
     update_cols: Mapping[str, str],
     insert_defaults: Mapping[str, Column] | None = None,
-    broadcast_source: bool = False,
     action_col: str | None = None,
 ) -> DataFrame:
     """MERGE ``source`` into ``target`` on ``key`` (SCD type 1).
@@ -49,18 +48,15 @@ def merge_upsert(
     Unmatched source rows are inserted; target columns absent from
     ``update_cols`` take ``insert_defaults`` (else null).
     ``action_col`` optionally names an output column tagging each row
-    ``update`` / ``keep`` / ``insert``. ``broadcast_source`` only puts a
-    broadcast hint on ``source``: Spark cannot broadcast a full outer
-    join, so it ignores the hint and the plan stays a sort-merge join.
+    ``update`` / ``keep`` / ``insert``.
 
     Contract: ``source`` must be unique on ``key`` (SQL MERGE raises on
     multiple matches; here a duplicate source key would fan out the
     matched target row). Aggregate the change feed first.
     """
     insert_defaults = dict(insert_defaults or {})
-    src = F.broadcast(source) if broadcast_source else source
-    t_key, s_key = target[key], src[key]
-    joined = target.join(src, t_key == s_key, "full_outer")
+    t_key, s_key = target[key], source[key]
+    joined = target.join(source, t_key == s_key, "full_outer")
 
     matched = t_key.isNotNull() & s_key.isNotNull()
     insert = t_key.isNull()
@@ -70,7 +66,7 @@ def merge_upsert(
         if c == key:
             continue
         if c in update_cols:
-            upd = src[update_cols[c]]
+            upd = source[update_cols[c]]
             cols.append(
                 F.when(matched | insert, upd).otherwise(target[c]).alias(c)
             )
@@ -132,7 +128,6 @@ def propagate_deletes(
     tombstones: DataFrame,
     on: str,
     tombstone_key: str | None = None,
-    broadcast_tombstones: bool = True,
 ) -> DataFrame:
     """Right-to-be-forgotten / tombstone propagation: drop every dim row
     whose key appears in the tombstone set.
@@ -140,15 +135,13 @@ def propagate_deletes(
     The third leg of dimension maintenance beside :func:`merge_upsert`
     (SCD1 update/insert) and :func:`scd2_intervals` (history): MERGE
     WHEN MATCHED THEN DELETE, as one anti join. Tombstone sets are tiny
-    relative to the dimension (broadcast by default), so the dim is
+    relative to the dimension (always broadcast), so the dim is
     never shuffled — at 100 TB the delete pass is a single map-side
     scan per partition, and idempotent: re-applying the same tombstones
     is a no-op, which is what a replayed changelog needs.
     """
     tk = tombstone_key or on
-    keys = tombstones.select(F.col(tk).alias(on)).distinct()
-    if broadcast_tombstones:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(tombstones.select(F.col(tk).alias(on)).distinct())
     return dim.join(keys, on=on, how="left_anti")
 
 

@@ -1625,7 +1625,7 @@ def nn_descent(
     # use at the caller's action, so no action is added here. Tracked
     # in ..caching for the registry's scoped release; direct library
     # callers running many graphs per session should release via
-    # caching.drop_stale() or clearCache.
+    # caching.drop_stale(spark) in the same thread, or clearCache.
     from pyspark import StorageLevel
 
     from ..caching import track

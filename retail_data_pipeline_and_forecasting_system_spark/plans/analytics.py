@@ -40,6 +40,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..caching import drop_stale, persist_tracked as _persist_tracked, state
 from ..operators import bpe as BP
 from ..operators import dedup as D
 from ..operators.ohlc import ohlc_aggs, ohlc_order_key
@@ -52,51 +53,34 @@ from ..operators.depletion import greedy_inventory_depletion
 # ---------------------------------------------------------------- helpers
 
 
-#: session -> {(sf_dir, table) -> lazy DataFrame}. Reusing the PLAN
-#: (schema + file index) across registry-query invocations removes a
-#: measured ~100 ms of driver-side re-planning per table read (parquet
-#: footer schema read + FileIndex + py4j round trips — guide §5: the
-#: driver should do almost no work; §6: repeated listings are cacheable).
-#: This caches METADATA only: every action still scans the parquet
-#: files and recomputes results from scratch — no rows, no results, no
-#: intermediates are held. Keyed by live session identity so a new
-#: session (or another harness) re-reads schemas; a long-running query
-#: service holds exactly this state. The outer map holds the session
-#: WEAKLY (r14 ADVICE): a stopped-and-dropped session releases its
-#: frames (and their JVM-side plans) instead of leaking one entry per
-#: session for the life of the process.
-#:
-#: Contract (r14 ADVICE): the memo snapshots the directory's file
-#: listing, so ``sf_dir`` must be immutable for the session — exactly
-#: the driver-testdata / staged-warehouse layout every harness here
-#: uses. A caller that rewrites parquet under a cached path must call
-#: :func:`invalidate_tables` (or use a new session) or subsequent
-#: actions read stale listings / fail on deleted files.
-import weakref
-
-_TABLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def invalidate_tables(spark: SparkSession | None = None) -> None:
-    """Drop memoized table plans (one session's, or every session's) —
-    the escape hatch for callers that regenerate parquet mid-session."""
-    if spark is not None:
-        _TABLES.pop(spark, None)
-        _FAN_GATE.pop(spark, None)
-    else:
-        _TABLES.clear()
-        _FAN_GATE.clear()
+# Table plans are memoized per session in ``caching.state(spark).tables``
+# as {(sf_dir, table) -> lazy DataFrame}. Reusing the PLAN
+# (schema + file index) across registry-query invocations removes a
+# measured ~100 ms of driver-side re-planning per table read (parquet
+# footer schema read + FileIndex + py4j round trips — guide §5: the
+# driver should do almost no work; §6: repeated listings are cacheable).
+# This caches METADATA only: every action still scans the parquet
+# files and recomputes results from scratch — no rows, no results, no
+# intermediates are held. Keyed by live session identity so a new
+# session (or another harness) re-reads schemas; a long-running query
+# service holds exactly this state.
+#
+# Contract (r14 ADVICE): the memo snapshots the directory's file
+# listing, so ``sf_dir`` must be immutable for the session — exactly
+# the driver-testdata / staged-warehouse layout every harness here
+# uses. A caller that rewrites parquet under a cached path must call
+# :func:`invalidate_tables` (or use a new session) or subsequent
+# actions read stale listings / fail on deleted files.
+def invalidate_tables(spark: SparkSession) -> None:
+    """Drop the session's memoized table plans and probe results — the
+    escape hatch for callers that regenerate parquet mid-session."""
+    st = state(spark)
+    st.tables.clear()
+    st.probes.clear()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # key on the session OBJECT (identity), not id(): a collected
-    # session's id can be reused, which would resurrect frames bound to
-    # a dead JVM. Sessions per process are few (getOrCreate reuses).
-    per = _TABLES.get(spark)
-    if per is None:
-        per = _TABLES.setdefault(spark, {})
+    per = state(spark).tables
     cached = per.get((sf_dir, name))
     if cached is not None:
         if name == "events":
@@ -149,17 +133,6 @@ def _size_bytes(conf_val: str) -> int:
     return int(s)
 
 
-#: memoized gate decisions: session -> {caller key -> bool (fan or not)}.
-#: The decision depends only on the table's file layout and the session
-#: conf, both fixed for a session — re-probing inputFiles() costs a
-#: measured ~30 ms of py4j per query invocation otherwise. Weak session
-#: key for the same no-leak reason as ``_TABLES``; a gate probe that
-#: fails with a transient error is NOT memoized (r14 ADVICE), so one
-#: flaky filesystem call cannot pin fan=False for the session's life.
-_FAN_GATE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
 #: Absolute byte ceiling for the fan gate (r14 ADVICE): the
 #: ``parallelism × maxPartitionBytes`` deficit test alone grows with
 #: cluster size (multi-GB at hundreds of cores), and raw-row fanning is
@@ -199,10 +172,12 @@ def _fan(df: DataFrame, *keys: str, ckey: tuple | None = None) -> DataFrame:
     """
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    per = _FAN_GATE.get(spark) if ckey is not None else None
-    if ckey is not None and per is None:
-        per = _FAN_GATE.setdefault(spark, {})
-    fan = per.get(ckey) if per is not None else None
+    # memoized per session: the decision depends only on the table's
+    # file layout and the session conf, both fixed for a session, and
+    # re-probing inputFiles() costs a measured ~30 ms of py4j per query
+    # invocation otherwise
+    probes = state(spark).probes
+    fan = probes.get(ckey) if ckey is not None else None
     if fan is None:
         try:
             import os
@@ -222,8 +197,8 @@ def _fan(df: DataFrame, *keys: str, ckey: tuple | None = None) -> DataFrame:
                 and total < min(par * max_pb, _FAN_BYTE_CAP)
                 and df.rdd.getNumPartitions() < par
             )
-            if per is not None:
-                per[ckey] = fan
+            if ckey is not None:
+                probes[ckey] = fan
         except Exception:
             # transient probe failure: fall back to no-fan for THIS call
             # but do not memoize the failure as a permanent decision
@@ -264,31 +239,20 @@ QUERIES: dict[str, Query] = {}
 
 # Registry-scoped cache hygiene: every persist inside a registry query
 # routes through ..caching (or registers there), and each query entry
-# drops the previous query's caches — residue bounded at one working
-# set, not ~190 accumulated ones (round-6 verdict item 5).
-from ..caching import drop_stale as _drop_stale_caches
-from ..caching import persist_tracked as _persist_tracked
-
-# Composite queries build on other registry entries (x9 -> x5,
-# x12 -> x7, smp4 -> smp3, x21 -> x13): dropping at a NESTED entry
-# would unpersist the outer query's tracked caches mid-build (round-7
-# review finding), so only the OUTERMOST entry drops.
-_ENTRY_DEPTH = [0]
-
-
+# drops the calling thread's previous query's caches — residue bounded
+# at one working set, not ~190 accumulated ones (round-6 verdict item
+# 5). ``q`` returns the undecorated function, so composite queries
+# (x9 -> x5, x12 -> x7, smp4 -> smp3, x21 -> x13, ...) call their
+# parts directly and never pass through a nested entry that would
+# drop their own tracked caches mid-build.
 def q(name: str, **kw):
     def reg(fn):
         import functools
 
         @functools.wraps(fn)
         def scoped(spark, sf):
-            if _ENTRY_DEPTH[0] == 0:
-                _drop_stale_caches()
-            _ENTRY_DEPTH[0] += 1
-            try:
-                return fn(spark, sf)
-            finally:
-                _ENTRY_DEPTH[0] -= 1
+            drop_stale(spark)
+            return fn(spark, sf)
 
         QUERIES[name] = Query(fn=scoped, **kw)
         return fn
@@ -4034,7 +3998,7 @@ def skw1_hot_keys(spark, sf):
     "(rare terms only); ties broken on token so top-k is deterministic",
 )
 def x9_keywords(spark, sf):
-    scored = QUERIES["x5_tfidf"].fn(spark, sf)
+    scored = x5_tfidf(spark, sf)
     w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), "token")
     return (
         scored.select(
@@ -5202,8 +5166,7 @@ def x12_corpus_materialize(spark, sf):
         & (F.col("doc_id") == F.col("keep_id")),
     ).select("doc_id", "lang", F.col("n_chars").cast("bigint").alias("n_chars"))
     keeps = (
-        QUERIES["x7_corpus_curation"]
-        .fn(spark, sf)
+        x7_corpus_curation(spark, sf)
         .filter(F.col("keep"))
         .select("doc_id")
     )
@@ -5539,7 +5502,7 @@ def smp4_weighted_sample(spark, sf):
     from ..functions import sql_md5_fraction
 
     docs = _t(spark, sf, "documents")
-    w = QUERIES["smp3_mixture_weights"].fn(spark, sf).select("source", "weight")
+    w = smp3_mixture_weights(spark, sf).select("source", "weight")
     h = docs.select(
         "doc_id", "source", F.md5(F.col("doc_id").cast("string")).alias("__h")
     )
@@ -6801,7 +6764,7 @@ def _x21_sql() -> str:
     "counts-only source agg (exact ints, one final division)",
 )
 def x21_contamination_by_source(spark, sf):
-    x13 = QUERIES["x13_decontaminate"].fn(spark, sf)
+    x13 = x13_decontaminate(spark, sf)
     docs = _t(spark, sf, "documents")
     train = docs.filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < "c"
@@ -7115,7 +7078,6 @@ def _kmeans_af_ctes(
     k: int | str = 4,
     n_iter: int = 2,
     source_where: str = "",
-    init_order_limit: bool = False,
     target_cell_size: int = 32,
 ) -> str:
     """Unrolled Lloyd k-means as pure SQL CTEs: one (assignment,
@@ -7125,10 +7087,7 @@ def _kmeans_af_ctes(
     order-independent, so the SQL fit is bit-identical to the engine's
     distributed fit at any parallelism. Shared by k1 (cell profile),
     d14 (SemDeDup cells) and d15 (corpus-fitted cells for incremental
-    ingest). ``source_where`` restricts the fit set;
-    ``init_order_limit`` switches the first-k init from the dense-id
-    predicate to an explicit ORDER BY/LIMIT (needed when the fit set's
-    ids are not 0..k-1 — both match kmeans_lloyd's first-k-by-id).
+    ingest). ``source_where`` restricts the fit set.
 
     ``k="auto"`` mirrors ``similarity.auto_k``: k =
     ceil(sqrt(count(*) / target_cell_size)) computed IN SQL over the
@@ -7148,13 +7107,6 @@ def _kmeans_af_ctes(
              CAST(embedding AS DOUBLE[]) AS cvec
       FROM e
       QUALIFY row_number() OVER (ORDER BY vec_id) <= (SELECT k FROM kk))"""
-    elif init_order_limit:
-        # first k by id of the fit set, renumbered 0..k-1 to match the
-        # engine's enumerate(centroids)
-        c0 = f"""c0 AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
-             CAST(embedding AS DOUBLE[]) AS cvec
-      FROM (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT {k}))"""
     else:
         c0 = f"""c0 AS (
       SELECT CAST(vec_id AS INT) AS cid,
@@ -10836,7 +10788,7 @@ def ev3_classifier_eval(spark, sf):
     # the per-doc prediction table feeds TWO aggs (by actual, by pred);
     # without the persist the whole NB scoring plan executes twice
     preds = _persist_tracked(
-        QUERIES["x25_nb_classifier"].fn(spark, sf).select(
+        x25_nb_classifier(spark, sf).select(
             "actual_lang", "pred_lang"
         )
     )
@@ -12488,10 +12440,10 @@ def ev5_dedup_recall(spark, sf):
     # each side feeds a count AND the hit join — persist both or the
     # full shingle/banding plans execute twice
     truth = _persist_tracked(
-        QUERIES["d2_jaccard_pairs"].fn(spark, sf).select("doc_a", "doc_b")
+        d2_jaccard_pairs(spark, sf).select("doc_a", "doc_b")
     )
     det = _persist_tracked(
-        QUERIES["d3_minhash_lsh"].fn(spark, sf).select("doc_a", "doc_b")
+        d3_minhash_lsh(spark, sf).select("doc_a", "doc_b")
     )
     tc = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
     dc = det.agg(F.count(F.lit(1)).cast("bigint").alias("n_detected"))
@@ -13532,7 +13484,7 @@ _EV6_SQL_TMPL = """
     "bin-cardinality-sized); nothing new materializes at 100 TB",
 )
 def ev6_margin_reliability(spark, sf):
-    preds = QUERIES["x25_nb_classifier"].fn(spark, sf).select(
+    preds = x25_nb_classifier(spark, sf).select(
         "margin", "correct"
     )
     return (
@@ -14196,7 +14148,7 @@ _X36_SQL_TMPL = """
     "Python — text and token ids never move",
 )
 def x36_bpe_sequence_pack(spark, sf):
-    stats = QUERIES["x35_bpe_encode"].fn(spark, sf)
+    stats = x35_bpe_encode(spark, sf)
     return PK.pack_counts(stats, capacity=1024)
 
 
@@ -14235,7 +14187,7 @@ _X39_SQL_TMPL = """
     "alphabet — everything past the scans is #sources-sized",
 )
 def x39_bpe_compression(spark, sf):
-    stats = QUERIES["x35_bpe_encode"].fn(spark, sf)
+    stats = x35_bpe_encode(spark, sf)
     chars = (
         _t(spark, sf, "documents")
         .groupBy("source")
@@ -14411,7 +14363,7 @@ _X44_SQL_TMPL = """
 )
 def x44_token_windows(spark, sf):
     w, s = _X44_WINDOW, _X44_STRIDE
-    stats = QUERIES["x35_bpe_encode"].fn(spark, sf).filter(
+    stats = x35_bpe_encode(spark, sf).filter(
         F.col("n_tokens") > 0
     )
     k = stats.withColumn(
@@ -14472,7 +14424,7 @@ _X45_SQL_TMPL = """
     "bucketed fold and x35's zero-shuffle encode",
 )
 def x45_pack_attention_spans(spark, sf):
-    packed = QUERIES["x36_bpe_sequence_pack"].fn(spark, sf)
+    packed = x36_bpe_sequence_pack(spark, sf)
     win = (
         W.partitionBy("source", "seq_id")
         .orderBy("doc_id")
@@ -14631,7 +14583,7 @@ _X40_SQL_TMPL = """
     "x36's bucket fold is alphabet-sized",
 )
 def x40_packing_efficiency(spark, sf):
-    packed = QUERIES["x36_bpe_sequence_pack"].fn(spark, sf)
+    packed = x36_bpe_sequence_pack(spark, sf)
     seqs = packed.groupBy("source", "seq_id").agg(
         F.sum("n_tokens").cast("bigint").alias("fill"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -14684,7 +14636,7 @@ _X37_SQL_TMPL = """
     "broadcast of the totals — smp3's exact shape",
 )
 def x37_bpe_mixture_weights(spark, sf):
-    stats = QUERIES["x35_bpe_encode"].fn(spark, sf)
+    stats = x35_bpe_encode(spark, sf)
     per_src = stats.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
@@ -15820,7 +15772,7 @@ _X52_SQL_TMPL = """
     "the one join exchange",
 )
 def x52_tokenizer_fertility(spark, sf):
-    enc = QUERIES["x35_bpe_encode"].fn(spark, sf).select(
+    enc = x35_bpe_encode(spark, sf).select(
         "doc_id", "n_tokens", "n_merged"
     )
     words = _t(spark, sf, "documents").select(
@@ -16144,7 +16096,7 @@ _EV8_SQL_TMPL = """
     "#sources rows at any corpus size",
 )
 def ev8_mixture_divergence(spark, sf):
-    kept = QUERIES["smp4_weighted_sample"].fn(spark, sf).select("doc_id")
+    kept = smp4_weighted_sample(spark, sf).select("doc_id")
     docs = _t(spark, sf, "documents")
     tok = (
         docs.join(kept, "doc_id")
@@ -16567,8 +16519,7 @@ _H12_SQL_TMPL = """
 )
 def h12_seasonal_strength(spark, sf):
     comp = (
-        QUERIES["m9_seasonal_decompose"]
-        .fn(spark, sf)
+        m9_seasonal_decompose(spark, sf)
         .filter(F.col("resid").isNotNull())
     )
     pts = comp.agg(

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -28,6 +30,31 @@ def spark():
         "tests", master="local[4]", shuffle_partitions=4
     )
     yield spark
+
+
+_DUCKDB_SPILL: list[Path] = []
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _duckdb_spill_root(tmp_path_factory):
+    _DUCKDB_SPILL.append(tmp_path_factory.mktemp("duckdb"))
+
+
+def duck_connect():
+    """A DuckDB connection under the suite's bounds: 2 GB of memory, at
+    most 4 threads, and spill files in a fresh directory under pytest's
+    tmp. An oracle that outgrows the limit fails its own test with
+    DuckDB's OutOfMemoryException, instead of the kernel's OOM killer
+    taking the Spark JVM (and every later test with it)."""
+    import duckdb
+
+    return duckdb.connect(
+        config={
+            "memory_limit": "2GB",
+            "threads": min(4, os.cpu_count() or 1),
+            "temp_directory": tempfile.mkdtemp(dir=_DUCKDB_SPILL[-1]),
+        }
+    )
 
 
 @pytest.fixture(scope="session")

@@ -13,6 +13,8 @@ import pytest
 
 from retail_data_pipeline_and_forecasting_system_spark.operators import bpe as BP
 
+from conftest import duck_connect
+
 WS = "[ \t\n\f\r]+"
 
 
@@ -130,9 +132,7 @@ def _staged_docs(spark, tmp_path, rows):
 
 
 def _oracle(sql, sf):
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
         f"'{sf}/documents.parquet/*.parquet'"

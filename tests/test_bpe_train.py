@@ -14,6 +14,8 @@ import pytest
 
 from retail_data_pipeline_and_forecasting_system_spark.operators import bpe as BP
 
+from conftest import duck_connect
+
 WS = "[ \t\n\f\r]+"
 FOLD = str.maketrans(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
@@ -109,11 +111,9 @@ def test_recounting_changes_the_table_vs_single_pass(spark):
 
 
 def test_trainer_matches_python_on_testdata_corpus(spark):
-    import duckdb
-
     texts = [
         r[0]
-        for r in duckdb.connect()
+        for r in duck_connect()
         .execute(
             "SELECT text FROM '/root/testdata/sf0.001/documents.parquet'"
         )
@@ -162,11 +162,10 @@ def test_sweep_encoder_equals_lowest_rank_on_trained_tables(spark):
     equals the classic rank-order sweep encoder. Checked over every
     corpus word AND held-out words (unseen combinations of trained
     symbols)."""
-    import duckdb
 
     texts = [
         r[0]
-        for r in duckdb.connect()
+        for r in duck_connect()
         .execute(
             "SELECT text FROM '/root/testdata/sf0.001/documents.parquet'"
         )
@@ -219,7 +218,6 @@ def test_x42_oracle_agreement_on_hostile_corpus(spark, tmp_path):
     empties, exotic in-word whitespace (NBSP/VT — separators in neither
     engine), multi-byte chars, ties, and fewer learnable merges than
     N_TRAIN_MERGES (early stop must agree too)."""
-    import duckdb
 
     from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
         QUERIES,
@@ -248,7 +246,7 @@ def test_x42_oracle_agreement_on_hostile_corpus(spark, tmp_path):
         (r["rnk"], r["l"], r["r"], r["tok"], r["cnt"])
         for r in QUERIES["x42_bpe_train"].fn(spark, sf).collect()
     ]
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
         f"'{sf}/documents.parquet/*.parquet'"

@@ -9,12 +9,13 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
 import pandas as pd
 
 from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
 )
+
+from conftest import duck_connect
 
 
 def _driver_compare(mine: pd.DataFrame, want: pd.DataFrame) -> None:
@@ -53,7 +54,7 @@ def test_m7_backtest_survives_empty_test_split(spark, tmp_path):
 
     spec = QUERIES["m7_forecast_backtest"]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(f"CREATE VIEW orders AS SELECT * FROM '{path}'")
     want = con.execute(spec.sql).df()
 
@@ -93,7 +94,7 @@ def test_m8_rolling_backtest_degenerate_corpora(spark, tmp_path):
         path = str(sub / "orders.parquet")
         pdf.to_parquet(path)
         mine = spec.fn(spark, str(sub)).toPandas()
-        con = duckdb.connect()
+        con = duck_connect()
         con.execute(f"CREATE VIEW orders AS SELECT * FROM '{path}'")
         want = con.execute(spec.sql).df()
         _driver_compare(mine, want)
@@ -113,7 +114,7 @@ def test_m6_ols_single_day_degenerate(spark, tmp_path):
 
     spec = QUERIES["m6_multivariate_ols"]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(f"CREATE VIEW orders AS SELECT * FROM '{path}'")
     want = con.execute(spec.sql).df()
     _driver_compare(mine, want)
@@ -238,7 +239,7 @@ def test_hostile_corpus_parity(spark, tmp_path, name):
     blank docs, sub-shingle docs, exact dups, degenerate repetition,
     unicode. Non-document tables stay the real sf0.001 data."""
     _hostile_documents(tmp_path)
-    con = duckdb.connect()
+    con = duck_connect()
     _stage_tables(tmp_path, con)
     spec = QUERIES[name]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
@@ -340,7 +341,7 @@ HOSTILE_EVENT_SWEEP = [
 @pytest.mark.parametrize("name", HOSTILE_EVENT_SWEEP)
 def test_hostile_events_parity(spark, tmp_path, name):
     _hostile_events(tmp_path)
-    con = duckdb.connect()
+    con = duck_connect()
     _stage_tables(tmp_path, con)
     spec = QUERIES[name]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
@@ -430,7 +431,7 @@ def test_empty_tables_parity(spark, tmp_path, name):
         )
     spec = QUERIES[name]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duck_connect()
     for t in [
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",
@@ -497,7 +498,7 @@ def test_hostile_embeddings_parity(spark, tmp_path, name):
     path = str(tmp_path / "embeddings.parquet")
     pq.write_table(table, path)
 
-    con = duckdb.connect()
+    con = duck_connect()
     _stage_tables(tmp_path, con)
     spec = QUERIES[name]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
@@ -525,7 +526,7 @@ def test_x3_token_counts_blank_documents(spark, tmp_path):
 
     spec = QUERIES["x3_token_counts"]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
     want = con.execute(spec.sql).df()
     _driver_compare(mine, want)
@@ -554,7 +555,7 @@ def test_a18_histogram_quantiles_sparse_groups(spark, tmp_path):
 
     spec = QUERIES["a18_histogram_quantiles"]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
     want = con.execute(spec.sql).df()
     _driver_compare(mine, want)
@@ -585,7 +586,7 @@ def test_h2_gap_fill_degenerate_series(spark, tmp_path):
 
     spec = QUERIES["h2_gap_fill"]
     mine = spec.fn(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
     want = con.execute(spec.sql).df()
     _driver_compare(mine, want)

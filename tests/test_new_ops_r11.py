@@ -14,6 +14,8 @@ from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
 )
 
+from conftest import duck_connect
+
 
 def _staged_docs(spark, tmp_path, rows):
     d = tmp_path / "sf"
@@ -25,9 +27,7 @@ def _staged_docs(spark, tmp_path, rows):
 
 
 def _oracle(sql, sf):
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
         f"'{sf}/documents.parquet/*.parquet'"

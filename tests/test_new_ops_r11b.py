@@ -11,6 +11,8 @@ from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
 )
 
+from conftest import duck_connect
+
 
 def _staged_docs(spark, tmp_path, rows):
     d = tmp_path / "sf"
@@ -22,9 +24,7 @@ def _staged_docs(spark, tmp_path, rows):
 
 
 def _oracle(sql, sf, table="documents"):
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW {table} AS SELECT * FROM "
         f"'{sf}/{table}.parquet/*.parquet'"
@@ -439,8 +439,6 @@ def test_dq7_digit_extraction_and_chi2(spark, tmp_path):
     # It is NOT zero as a double, but its decimal cast is 0.00, whose
     # stripped string is '' -> NULL digit. Verify observed behavior
     # matches the oracle rather than assuming:
-    import duckdb
-
     want = _oracle(QUERIES["dq7_benford_screen"].sql, sf, table="orders")
     w = {int(r.digit): r for r in want.itertuples(index=False)}
     for d in range(1, 10):
@@ -513,9 +511,8 @@ def test_x49_numpy_differential_real_corpus(spark):
         .fn(spark, "/root/testdata/sf0.001")
         .collect()
     }
-    import duckdb
 
-    con = duckdb.connect()
+    con = duck_connect()
     pts = con.execute(
         """
         SELECT source, token, count(*) AS cnt FROM (
@@ -699,9 +696,8 @@ def test_dq8_hand_streams(spark, tmp_path):
         2, 1, 8, True,
     )
     # cross-engine agreement
-    import duckdb
 
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM "
         f"'{d}/events.parquet/*.parquet'"
@@ -887,10 +883,9 @@ def test_ab3_cuped_python_differential(spark):
     """theta and the variance ratio match an independent numpy
     computation over the real per-user (pre-activity, post-purchase)
     counts, and the ratio equals 1 - corr(X,Y)^2."""
-    import duckdb
     import numpy as np
 
-    con = duckdb.connect()
+    con = duck_connect()
     xy = con.execute(
         """
         SELECT user_id,
@@ -971,9 +966,8 @@ def test_m23_hand_series_exact_halves(spark, tmp_path):
 def test_m23_python_differential_real(spark):
     """Every part's (z, p) matches an independent Python fold over the
     real sf0.001 demand events — bit-exact, no tolerance."""
-    import duckdb
 
-    con = duckdb.connect()
+    con = duck_connect()
     ev = con.execute(
         """
         SELECT l_partkey, CAST(l_shipdate AS DATE) d,
@@ -1187,9 +1181,7 @@ def test_n17_engine_oracle_agreement_real(spark):
 
 
 def _oracle_sf(sf, sql):
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
     )

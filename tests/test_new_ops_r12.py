@@ -15,6 +15,8 @@ from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     _corpus_fingerprint,
 )
 
+from conftest import duck_connect
+
 
 def _plan(df):
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -241,7 +243,6 @@ def test_h10_large_cents_cross_engine_exact(spark, tmp_path):
     at exactly these magnitudes."""
     import random
 
-    import duckdb
 
     rng = random.Random(123)
     # ~25 days of sf0.1-sized daily revenue (1.4e9..2.0e9 cents) with
@@ -275,7 +276,7 @@ def test_h10_large_cents_cross_engine_exact(spark, tmp_path):
         .sort_values("day")
         .reset_index(drop=True)
     )
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"
@@ -345,7 +346,6 @@ def _staged_rel_corpus(spark, tmp_path):
 def test_dq9_broken_fks_exact_counts(spark, tmp_path):
     """Orphaned keys/rows, NULL fks, and verdicts are exact on a
     hand-broken corpus — and the oracle agrees on the same files."""
-    import duckdb
 
     sf = _staged_rel_corpus(spark, tmp_path)
     got = {
@@ -365,7 +365,7 @@ def test_dq9_broken_fks_exact_counts(spark, tmp_path):
     # clean relationships pass
     assert got["nation.n_regionkey->region.r_regionkey"].ok
 
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem"]:
         con.execute(
@@ -425,14 +425,13 @@ def test_m24_numpy_differential_real(spark):
     and the SES level an independent numpy recursion, per group, on
     the real corpus — oracle never consulted."""
     import numpy as np
-    import duckdb
 
     sf = "/root/testdata/sf0.001"
     got = {
         (r.o_orderpriority, r.h): r.forecast
         for r in QUERIES["m24_theta_method"].fn(spark, sf).collect()
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW orders AS SELECT * FROM '{sf}/orders.parquet'"
     )
@@ -585,14 +584,13 @@ def test_n18_prune_fraction_and_numpy_differential(spark):
     every score equals an independent numpy cosine against the
     vec_id-ordered fold sum."""
     import numpy as np
-    import duckdb
 
     sf = "/root/testdata/sf0.001"
     rows = QUERIES["n18_prototype_pruning"].fn(spark, sf).collect()
     by_label: dict = {}
     for r in rows:
         by_label.setdefault(r.label, []).append(r)
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
     )
@@ -649,7 +647,6 @@ def test_r12_edge_empty_tables_parity(spark, tmp_path):
     """Empty inputs: x53 and m24 on an empty corpus, pr8 on an empty
     lineitem — engine and oracle agree on the (empty / header-only)
     result instead of one side erroring."""
-    import duckdb
 
     d = tmp_path / "sfempty"
     d.mkdir()
@@ -669,7 +666,7 @@ def test_r12_edge_empty_tables_parity(spark, tmp_path):
         "l_shipdate timestamp",
     ).coalesce(1).write.parquet(str(d / "lineitem.parquet"))
 
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ("documents", "orders", "lineitem"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet/*.parquet'"
@@ -685,7 +682,6 @@ def test_r12_edge_n18_zero_vector_and_singleton_class(spark, tmp_path):
     """A zero vector scores NULL (never a divide-by-zero crash) and
     ranks last; a single-member class scores exactly 1.0 and is kept
     (floor(1/5) = 0 pruned). Engine matches oracle on both."""
-    import duckdb
 
     rows = [
         (0, [0.0, 0.0, 0.0], 7),      # zero vector
@@ -707,7 +703,7 @@ def test_r12_edge_n18_zero_vector_and_singleton_class(spark, tmp_path):
     assert abs(got[9].proto_score - 1.0) < 1e-12
     assert got[9].rnk == 1 and got[9].keep
     assert all(got[i].keep for i in (0, 1, 2))  # floor(3/5) = 0 pruned
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{d}/embeddings.parquet/*.parquet'"
@@ -722,7 +718,6 @@ def test_r12_edge_dq9_empty_child_and_parent(spark, tmp_path):
     """An EMPTY child table audits clean (0 rows, 0 orphans, ok); an
     empty PARENT makes every child key an orphan. Cross-engine parity
     on the full 7-row output."""
-    import duckdb
 
     sf = _staged_rel_corpus(spark, tmp_path)
     # overwrite customer with an empty table: orders.o_custkey all orphan
@@ -743,7 +738,7 @@ def test_r12_edge_dq9_empty_child_and_parent(spark, tmp_path):
     assert (oc.orphan_keys, oc.orphan_rows, oc.ok) == (2, 2, False)
     cn = got["customer.c_nationkey->nation.n_nationkey"]
     assert (cn.n_rows, cn.n_keys, cn.orphan_keys, cn.ok) == (0, 0, 0, True)
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem"]:
         con.execute(
@@ -906,10 +901,9 @@ def test_ev8_python_differential(spark):
     import hashlib
     import math
 
-    import duckdb
 
     sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
     )
@@ -949,7 +943,6 @@ def test_r12_review_h12_short_series_null_not_nan(spark, tmp_path):
     trend (all resid NULL) must emit (0, NULL, NULL) in BOTH engines —
     the engine's empty double folds produce 0/0 = NaN without the
     n < 2 guard while the oracle's list() aggregate yields NULL."""
-    import duckdb
     import pandas as pd
 
     rows = [
@@ -968,7 +961,7 @@ def test_r12_review_h12_short_series_null_not_nan(spark, tmp_path):
     got = QUERIES["h12_seasonal_strength"].fn(spark, str(d)).collect()[0]
     assert got.n_days == 0
     assert got.trend_strength is None and got.seasonal_strength is None
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"
@@ -1001,7 +994,6 @@ def test_r12_review_pr8_null_node_tie_order(spark):
 def test_dq10_duplicates_and_null_keys_exact(spark, tmp_path):
     """Staged duplicate single-column and composite keys plus NULL-key
     rows produce exact counts; the oracle agrees on the same files."""
-    import duckdb
 
     sf = _staged_rel_corpus(spark, tmp_path)
     # add the remaining tables dq10 audits but the rel corpus lacks
@@ -1033,7 +1025,7 @@ def test_dq10_duplicates_and_null_keys_exact(spark, tmp_path):
     # NULL l_partkey — but the PK cols are all non-null and unique
     assert (li.null_rows, li.dup_rows, li.is_unique) == (0, 0, True)
     assert got["orders(o_orderkey)"].is_unique
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "events", "documents", "embeddings"]:
         con.execute(

@@ -15,6 +15,8 @@ from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     _corpus_fingerprint,
 )
 
+from conftest import duck_connect
+
 
 def _plan(df):
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -103,7 +105,6 @@ def test_h10_num_survives_bigint_overflow_magnitudes(spark, tmp_path):
     window) — short of the decimal headroom dvar already has. num now
     computes in DECIMAL; at ~7e17 daily cents the query must run and
     agree with the HUGEINT oracle exactly."""
-    import duckdb
     import pandas as pd
     import random
 
@@ -147,7 +148,7 @@ def test_h10_num_survives_bigint_overflow_magnitudes(spark, tmp_path):
         .sort_values("day")
         .reset_index(drop=True)
     )
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"
@@ -237,7 +238,6 @@ def test_x55_null_rows_quarantine_cross_engine(spark, tmp_path):
     """Hostile input parity: NULL doc_id rows land in shard -1 and
     NULL text hashes as '' in BOTH engines — the manifest never drops
     or nulls-out a row it is supposed to receipt."""
-    import duckdb
 
     d = tmp_path / "hostile"
     d.mkdir()
@@ -252,7 +252,7 @@ def test_x55_null_rows_quarantine_cross_engine(spark, tmp_path):
     ).coalesce(1).write.parquet(str(d / "documents.parquet"))
 
     got = _x55(spark, str(d))
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -298,7 +298,6 @@ def test_e16_start_state_vs_null_type(spark, tmp_path):
     are distinct states: lag() alone returns NULL for both, so rn = 1
     must disambiguate. Hand-verified chain: u1 = [view, NULL,
     purchase], u2 = [NULL]."""
-    import duckdb
 
     d = tmp_path / "ev"
     d.mkdir()
@@ -327,7 +326,7 @@ def test_e16_start_state_vs_null_type(spark, tmp_path):
         ("view", "__NULL__"): (1, 1.0),
         ("__NULL__", "purchase"): (1, 1.0),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"'{d}/events.parquet/*.parquet'"
@@ -354,7 +353,6 @@ def test_e16_probabilities_sum_to_one(spark):
 def test_dq11_detects_fill_drift(spark, tmp_path):
     """A producer that stops emitting props mid-month must flag the
     props column (and only it); NULL-ts rows belong to neither half."""
-    import duckdb
 
     d = tmp_path / "ev"
     d.mkdir()
@@ -383,7 +381,7 @@ def test_dq11_detects_fill_drift(spark, tmp_path):
     assert got.loc["props", "drift"] == -0.9
     for c in ("event_id", "ts", "user_id", "event_type", "value"):
         assert not bool(got.loc[c, "flagged"]), c
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"'{d}/events.parquet/*.parquet'"
@@ -401,7 +399,6 @@ def test_dq11_detects_fill_drift(spark, tmp_path):
 def test_x56_finds_seeded_pii_cross_engine(spark, tmp_path):
     """Seed documents with known email/IPv4/id-number payloads and
     verify counts — and Java-regex vs RE2 agreement — match-for-match."""
-    import duckdb
 
     d = tmp_path / "docs"
     d.mkdir()
@@ -431,7 +428,7 @@ def test_x56_finds_seeded_pii_cross_engine(spark, tmp_path):
     ) == (1, 2, 1, 2, 4)
     forum = got[got["source"] == "forum"].iloc[0]
     assert (int(forum.n_email), int(forum.n_idnum)) == (2, 1)
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -474,7 +471,6 @@ def test_ops7_two_hop_blast_radius(spark, tmp_path):
     2's is 'view' (not a subject). Subject 1 owns 2 orders with 3
     lineitems total — the lineitem count must come through the 2-hop
     join, and the NULL-user error row must not mint a subject."""
-    import duckdb
 
     d = tmp_path / "ers"
     d.mkdir()
@@ -516,7 +512,7 @@ def test_ops7_two_hop_blast_radius(spark, tmp_path):
         "lineitem": (1, 3),
         "events": (1, 2),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ("events", "customer", "orders", "lineitem"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
@@ -582,7 +578,6 @@ def test_e17_flags_three_bot_signatures(spark, tmp_path):
     """One user per signal: u1 fires at 1 s cadence (machine-fast), u2
     sends 25 events on 5 timestamps (dup bursts), u3 is 96% one action,
     u4 is a slow human browser — plus cross-engine agreement."""
-    import duckdb
 
     rows = []
     eid = 0
@@ -624,7 +619,7 @@ def test_e17_flags_three_bot_signatures(spark, tmp_path):
     assert flags == {1: True, 2: True, 3: True, 4: False}
     assert int(got[got.user_id == 2]["n_dup_ts"].iloc[0]) == 20
     assert got[got.user_id == 3]["top_type"].iloc[0] == "click"
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"'{d}/events.parquet/*.parquet'"
@@ -646,7 +641,6 @@ def test_x57_budget_math_hand_fixture(spark, tmp_path):
     """Two sources, 300 vs 2,700 tokens (tiny vs big): the temperature
     mix upsamples the small one; with a 1B budget BOTH blow the
     4-epoch ceiling, and effective_tokens caps at 4x available."""
-    import duckdb
 
     d = tmp_path / "docs"
     d.mkdir()
@@ -672,7 +666,7 @@ def test_x57_budget_math_hand_fixture(spark, tmp_path):
     assert bool(small.over_cap) and bool(big.over_cap)
     assert small.effective_tokens == 4.0 * 300
     assert big.effective_tokens == 4.0 * 2700
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -709,7 +703,6 @@ def test_x57_weights_match_smp5(spark):
 def test_x58_redaction_hand_fixture_cross_engine(spark, tmp_path):
     """Seeded PII redacts to the typed tokens; the digest pins the
     redacted bytes; the chain is confluent (tokens never re-match)."""
-    import duckdb
 
     d = tmp_path / "docs"
     d.mkdir()
@@ -729,7 +722,7 @@ def test_x58_redaction_hand_fixture_cross_engine(spark, tmp_path):
     # 'a@b.io'(6) -> '<EMAIL>'(7) x2 = +2; '10.0.0.1'(8) -> '<IP>'(4)
     # = -4; '123456789'(9) -> '<ID>'(4) = -5 ==> net -7
     assert int(got.bytes_delta) == 2 - 4 - 5
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -788,7 +781,6 @@ def test_h13_kaplan_meier_hand_fixture(spark, tmp_path):
     """Textbook check: 4 users — durations 1 (churned), 2 (churned),
     2 (censored), 4 (censored at corpus end). S(1) = 3/4; S(2) =
     3/4 * (1 - 1/3) = 1/2; S(4) = 1/2 (no event at 4)."""
-    import duckdb
 
     rows = []
     eid = 0
@@ -824,7 +816,7 @@ def test_h13_kaplan_meier_hand_fixture(spark, tmp_path):
         2: (3, 1, 0.5),
         4: (1, 0, 0.5),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"'{d}/events.parquet/*.parquet'"
@@ -863,7 +855,6 @@ def test_h14_fills_and_flags_gaps(spark, tmp_path):
     """Orders on days 1, 2, 5 of one month: the spine must emit days
     3 and 4 as zero-revenue flagged gaps and nothing beyond the
     min/max bounds — cross-engine equal."""
-    import duckdb
 
     d = tmp_path / "o"
     d.mkdir()
@@ -890,7 +881,7 @@ def test_h14_fills_and_flags_gaps(spark, tmp_path):
         "1995-03-04": (0, True),
         "1995-03-05": (3000, False),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"
@@ -907,7 +898,6 @@ def test_g6_takes_last_value_per_customer_month(spark, tmp_path):
     orderkey), customer 2 orders 50 once; April has one order. March
     balance = 99 + 50, never 10 + 99 + 50 (the double-count plain
     GROUP BY would give) — cross-engine equal."""
-    import duckdb
 
     d = tmp_path / "o"
     d.mkdir()
@@ -932,7 +922,7 @@ def test_g6_takes_last_value_per_customer_month(spark, tmp_path):
         "1995-03-01": (2, 9900 + 5000),
         "1995-04-01": (1, 700),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"

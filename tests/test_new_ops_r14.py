@@ -12,6 +12,8 @@ from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
 )
 
+from conftest import duck_connect
+
 _EV_SCHEMA = (
     "event_id long, ts string, user_id long, event_type string, "
     "value double, props string"
@@ -51,7 +53,6 @@ def test_h13_full_churn_extinction_cross_engine(spark, tmp_path):
     Fixture: users 1+3 end at t=1 (user 3 censored, defining corpus
     end), user 2 alone remains and churns at t=4 — so at t=4
     d = n_risk = 1 and survival must be 0.0, in BOTH engines."""
-    import duckdb
 
     rows = [
         # user 1: 01-01 .. 01-02, t=1, churned (end 01-20 - last > 3)
@@ -73,7 +74,7 @@ def test_h13_full_churn_extinction_cross_engine(spark, tmp_path):
         1: (3, 1, round(2.0 / 3.0, 9)),
         4: (1, 1, 0.0),  # extinction day: survival EXACTLY 0, not 2/3
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
         f"'{d}/events.parquet/*.parquet'"
@@ -160,7 +161,6 @@ def test_x59_three_tiers_hand_fixture_cross_engine(spark, tmp_path):
       doc_id row with DUPLICATED content is excluded entirely (no
       nibble -> no split); val x val exact dups (0 vs 1) and train x
       train dups (4 vs 14) must NOT appear as pairs."""
-    import duckdb
 
     rows = [
         (4, "alpha beta gamma delta"),
@@ -192,7 +192,7 @@ def test_x59_three_tiers_hand_fixture_cross_engine(spark, tmp_path):
         (10, "val", "near_dup", 2, 4, 4, 0),
         (10, "val", "ngram", 2, 4, 4, 0),
     ]
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -211,7 +211,6 @@ def test_x60_scrub_policy_hand_fixture_cross_engine(spark, tmp_path):
     text) are untouched. Shards that lose everything emit kept=0 with
     the digest '0'; the kept digest is the exact u64 md5(doc_id:text)
     multiset sum."""
-    import duckdb
     import hashlib
 
     rows = [
@@ -251,7 +250,7 @@ def test_x60_scrub_policy_hand_fixture_cross_engine(spark, tmp_path):
         (8, 1, 0, 1, 1, 4, dig("7:red green blue purple")),
         (10, 2, 2, 0, 0, None, "0"),         # exact dups both dropped
     ]
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -286,7 +285,6 @@ def test_dq13_shares_and_tv_hand_fixture_cross_engine(spark, tmp_path):
     has NULL text so train tokens must skip it). Source mix: corpus =
     a:5, b:4, <null>:1 over N=10; TV(train) = 0.5*(0.1+0+0.1) = 0.1,
     TV(val) = 0.1, TV(test) = 0.5*(1/6 + 1/15 + 1/10) = 1/6."""
-    import duckdb
 
     rows = [
         (4, "a", "w w"),
@@ -317,7 +315,7 @@ def test_dq13_shares_and_tv_hand_fixture_cross_engine(spark, tmp_path):
         "val": (2, 5, 0.2, 0.238095238, 0.1),
         "test": (3, 6, 0.3, 0.285714286, 0.166666667),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -333,7 +331,6 @@ def test_dq13_empty_split_absent_in_both_engines(spark, tmp_path):
     """A corpus whose ids all hash into train/val (no test nibble)
     must emit NO 'test' row — in both engines — rather than a
     zero-count or NULL-share row."""
-    import duckdb
 
     # ids 4, 6 -> train; 0, 1 -> val (md5-nibble map); no test ids
     rows = [(4, "a", "w w"), (6, "a", "w"), (0, "b", "w"), (1, "b", "w w")]
@@ -347,7 +344,7 @@ def test_dq13_empty_split_absent_in_both_engines(spark, tmp_path):
         for r in QUERIES["dq13_split_balance"].fn(spark, str(d)).collect()
     )
     assert {r[0] for r in got} == {"train", "val"}
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -368,7 +365,6 @@ def test_a20_token_weighted_vs_doc_median_hand_fixture(spark, tmp_path):
     median of 2, the skew the weighted quantile exists to expose; p90
     and p99 land on 4. NULL-text docs are excluded. Cross-engine
     exact (the decision is all-integer)."""
-    import duckdb
 
     rows = [
         (1, "w"),
@@ -388,7 +384,7 @@ def test_a20_token_weighted_vs_doc_median_hand_fixture(spark, tmp_path):
         for r in QUERIES["a20_weighted_quantile"].fn(spark, str(d)).collect()
     )
     assert got == [(50, 3, 12), (90, 4, 12), (99, 4, 12)]
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{d}/documents.parquet/*.parquet'"
@@ -405,7 +401,6 @@ def test_g7_parent_shares_hand_fixture_cross_engine(spark, tmp_path):
     region B = n3 (20.00). share_in_region: 0.25 / 0.75 / 1.0;
     share_of_total: 1/6, 1/2, 1/3 — exact cents, round(9) doubles
     only at the edge."""
-    import duckdb
 
     d = tmp_path / "t"
     d.mkdir()
@@ -437,7 +432,7 @@ def test_g7_parent_shares_hand_fixture_cross_engine(spark, tmp_path):
         ("RA", "N2", 3000, 4000, 0.75, 0.5),
         ("RB", "N3", 2000, 2000, 1.0, 0.333333333),
     ]
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ["region", "nation", "customer", "orders"]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
@@ -459,7 +454,6 @@ def test_ev9_full_dim_anchor_and_seeded_cross_engine(spark, tmp_path):
     result must equal the DuckDB oracle cell-for-cell, and the d=8
     budget (>= true dim, slice clamps in both engines) must be the
     built-in sanity anchor — recall exactly 1.0."""
-    import duckdb
     import random
 
     rng = random.Random(31)
@@ -482,7 +476,7 @@ def test_ev9_full_dim_anchor_and_seeded_cross_engine(spark, tmp_path):
     anchor = [r for r in got if r[0] == 8]
     assert anchor and anchor[0][3] == 1.0  # full-dim recall is exact 1
     assert all(r[1] == 100 for r in got)  # 20 queries x top-5 slots
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{d}/embeddings.parquet/*.parquet'"
@@ -500,7 +494,6 @@ def test_g8_ytd_resets_at_year_boundary(spark, tmp_path):
     """Orders in 1994-11/12 and 1995-01/03: YTD accumulates within a
     year (1000 -> 3000) and RESETS at the boundary (500, then 1200
     across the month gap) — cross-engine equal."""
-    import duckdb
 
     rows = [
         (1, 1, "O", 10.0, "1994-11-05 00:00:00", "1-U"),
@@ -519,7 +512,7 @@ def test_g8_ytd_resets_at_year_boundary(spark, tmp_path):
         "1995-01-01": (500, 500),
         "1995-03-01": (700, 1200),
     }
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"
@@ -537,7 +530,6 @@ def test_h14_g6_big_cents_magnitudes_cross_engine(spark, tmp_path):
     overflows at 1e14 dollars). Cross-engine exact at the proven
     ~7e13-dollar zone (below 2^53 cents, where double->decimal agrees
     engine-to-engine) with a gap day and a two-customer month."""
-    import duckdb
 
     rows = [
         # March: cust 1 orders on day 1 and day 2 (last = day 2),
@@ -548,7 +540,7 @@ def test_h14_g6_big_cents_magnitudes_cross_engine(spark, tmp_path):
         (4, 2, "O", 68_000_000_000_000.0, "1995-03-04 00:00:00", "1-U"),
     ]
     d = _write_orders(spark, tmp_path, rows)
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "
         f"'{d}/orders.parquet/*.parquet'"
@@ -580,7 +572,7 @@ def test_h14_g6_big_cents_magnitudes_cross_engine(spark, tmp_path):
     # DuckDB-only headroom pin: a 2e16-dollar order is inside the
     # BIGINT-cents contract but PAST DECIMAL(18,2) — the old staging
     # raised a conversion error here; DECIMAL(28,2) must stage it.
-    con2 = duckdb.connect()
+    con2 = duck_connect()
     con2.execute(
         "CREATE VIEW orders AS SELECT 1 AS o_orderkey, 1 AS o_custkey,"
         " 'O' AS o_orderstatus, 2e16 AS o_totalprice,"
@@ -610,9 +602,7 @@ def _write_docs(spark, tmp_path, rows):
 
 
 def _duck_views(tmp_path_dir, *tables):
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     for t in tables:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
@@ -1105,7 +1095,6 @@ def test_g11_abc_boundary_exact_classes(spark, tmp_path):
     and B (<=, not <) in both engines because classification runs on
     the unrounded share; a second brand pins the revenue-tie ->
     partkey order."""
-    import duckdb
 
     # lineitem: l_orderkey, l_partkey, l_suppkey, l_quantity,
     # l_extendedprice, l_discount, l_returnflag, l_shipdate...
@@ -1142,7 +1131,7 @@ def test_g11_abc_boundary_exact_classes(spark, tmp_path):
         202: (700, 1.0, "C"),
     }
     assert got == want
-    con = duckdb.connect()
+    con = duck_connect()
     for t in ["lineitem", "part"]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
@@ -1186,7 +1175,6 @@ def test_pr10_star_is_minus_one_regular_is_null(spark, tmp_path):
     triangle (one basket of three parts) is degree-regular: zero
     variance -> NULL via nullif, never a divide-by-zero artifact.
     Cross-engine equal."""
-    import duckdb
 
     def write_li(sub, li_rows):
         dd = tmp_path / sub
@@ -1199,7 +1187,7 @@ def test_pr10_star_is_minus_one_regular_is_null(spark, tmp_path):
     star = write_li("star", [(1, 0), (1, 1), (2, 0), (2, 2), (3, 0), (3, 3)])
     got = QUERIES["pr10_assortativity"].fn(spark, str(star)).collect()[0]
     assert (got["n_edges_directed"], got["assortativity"]) == (6, -1.0)
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
         f"'{star}/lineitem.parquet/*.parquet'"
@@ -1211,7 +1199,7 @@ def test_pr10_star_is_minus_one_regular_is_null(spark, tmp_path):
     tri = write_li("tri", [(1, 1), (1, 2), (1, 3)])
     got = QUERIES["pr10_assortativity"].fn(spark, str(tri)).collect()[0]
     assert (got["n_edges_directed"], got["assortativity"]) == (6, None)
-    con2 = duckdb.connect()
+    con2 = duck_connect()
     con2.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
         f"'{tri}/lineitem.parquet/*.parquet'"
@@ -1247,7 +1235,6 @@ def test_sky1_hand_fixture_ties_and_duplicates(spark, tmp_path):
     survive); a same-price smaller part falls to the group max; an
     equally-sized more-expensive part falls to the strictly-cheaper
     cummax; the cheapest part always survives (NULL cummax)."""
-    import duckdb
 
     # (key, brand, size, price)
     p_rows = [
@@ -1275,7 +1262,7 @@ def test_sky1_hand_fixture_ties_and_duplicates(spark, tmp_path):
     )
     assert got == want
     assert [k for _b, k, _p, _s in got] == [1, 2, 4, 7, 8]
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW part AS SELECT * FROM "
         f"'{d}/part.parquet/*.parquet'"
@@ -1294,7 +1281,6 @@ def test_sky1_seeded_triple_differential_vs_bruteforce(spark, tmp_path):
     collisions: the window formulation must equal the quadratic
     dominance DEFINITION (independent Python) and the DuckDB oracle
     exactly."""
-    import duckdb
     import random
 
     rng = random.Random(71)
@@ -1316,7 +1302,7 @@ def test_sky1_seeded_triple_differential_vs_bruteforce(spark, tmp_path):
         [(b, k, round(pr * 100), s) for k, b, s, pr in p_rows]
     )
     assert got == want
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW part AS SELECT * FROM "
         f"'{d}/part.parquet/*.parquet'"
@@ -1638,7 +1624,6 @@ def test_ev10_silhouette_hand_geometry(spark, tmp_path):
     and an 8/9 silhouette (mean 0.898990 after round6), interior
     clusters are 8/9 on both sides (0.888889). Hand-derived from the
     simplified-silhouette formula; cross-engine equal."""
-    import duckdb
 
     xs = [0.0, 10.0, 20.0, 30.0, 2.0, 12.0, 22.0, 32.0]
     rows = [(i, [x, 0.0], 0) for i, x in enumerate(xs)]
@@ -1658,7 +1643,7 @@ def test_ev10_silhouette_hand_geometry(spark, tmp_path):
         3: (2, 0.89899),
     }
     assert got == want
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{d}/embeddings.parquet/*.parquet'"

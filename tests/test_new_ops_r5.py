@@ -18,6 +18,8 @@ from retail_data_pipeline_and_forecasting_system_spark.operators.textstats impor
     ngram_repetition,
 )
 
+from conftest import duck_connect
+
 
 def test_segment_dedup_drops_repeated_segments(spark):
     # 3-word segments; doc 2 repeats doc 1's first segment (boilerplate),
@@ -311,7 +313,6 @@ def test_x28_sampled_tertile_arm_matches_oracle(spark):
     result against the SAME-threshold DuckDB oracle — the sampled arm
     is exact-checkable too, and it genuinely diverges from the exact
     arm (different tertile inputs), proving it activated."""
-    import duckdb
 
     from retail_data_pipeline_and_forecasting_system_spark.functions import (
         sql_md5_fraction,
@@ -328,7 +329,7 @@ def test_x28_sampled_tertile_arm_matches_oracle(spark):
         .sort_values(["source", "bucket"])
         .reset_index(drop=True)
     )
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
     )

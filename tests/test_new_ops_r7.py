@@ -15,6 +15,7 @@ from __future__ import annotations
 import hashlib
 import math
 import re
+import threading
 import time
 
 import pytest
@@ -106,10 +107,12 @@ def test_registry_queries_release_predecessor_caches(spark, sf_dir):
     # untracked persists on the shared session; pin the product default
     # flag (defence against any module flipping it) and measure
     # RELATIVE to a clean tracker and the session's current block count.
-    keep_prior = caching.KEEP_SESSION_CACHES
-    caching.KEEP_SESSION_CACHES = False
+    st = caching.state(spark)
+    me = threading.get_ident()
+    keep_prior = st.keep_caches
+    st.keep_caches = False
     try:
-        caching.drop_stale()
+        caching.drop_stale(spark)
         sc = spark.sparkContext
 
         def blocks() -> int:
@@ -122,11 +125,11 @@ def test_registry_queries_release_predecessor_caches(spark, sf_dir):
         base = blocks()
 
         QUERIES["x5_tfidf"].fn(spark, sf_dir).count()  # tf cache
-        assert len(caching._LIVE) == 1
+        assert len(st.live[me]) == 1
         assert blocks() >= base + 1
 
         QUERIES["p1_filter_null"].fn(spark, sf_dir).count()
-        assert caching._LIVE == []
+        assert st.live.get(me, []) == []
         for _ in range(50):
             if blocks() <= base:
                 break
@@ -135,7 +138,7 @@ def test_registry_queries_release_predecessor_caches(spark, sf_dir):
     finally:
         # a mid-assert failure must not leak the forced flag into the
         # rest of the shared-session suite (round-7 review finding)
-        caching.KEEP_SESSION_CACHES = keep_prior
+        st.keep_caches = keep_prior
 
 
 def test_codebook_contiguity_guard():
@@ -287,31 +290,35 @@ def test_nn_descent_recovers_cross_bucket_neighbor(spark):
 
 
 def test_nested_registry_entry_does_not_drop_outer_cache(spark, sf_dir):
-    """Composite queries invoke other registry entries mid-build; only
-    the OUTERMOST entry may drop stale caches, or the outer query's
-    tracked persists die before first use."""
+    """Composite queries build on other registry entries; no part may
+    drop the composite's tracked persists mid-build. ev5_dedup_recall
+    persists d2's and d3's outputs and then consumes both: every frame
+    it tracked (d2's and d3's own persists plus those two) is still
+    cached after its action, and only the next outermost entry
+    releases them."""
     from retail_data_pipeline_and_forecasting_system_spark import caching
-    from retail_data_pipeline_and_forecasting_system_spark.plans import (
-        analytics,
-    )
 
-    keep_prior = caching.KEEP_SESSION_CACHES
-    caching.KEEP_SESSION_CACHES = False
+    st = caching.state(spark)
+    me = threading.get_ident()
+    keep_prior = st.keep_caches
+    st.keep_caches = False
     try:
-        caching.drop_stale()
-        analytics._ENTRY_DEPTH[0] += 1  # simulate an outer query
-        try:
-            outer = caching.persist_tracked(spark.range(10))
-            outer.count()
-            # nested entry at depth 1: must NOT drop the outer cache
-            QUERIES["p1_filter_null"].fn(spark, sf_dir).count()
-            assert len(caching._LIVE) == 1
-        finally:
-            analytics._ENTRY_DEPTH[0] -= 1
-        # a genuine outermost entry DOES drop it
+        QUERIES["d2_jaccard_pairs"].fn(spark, sf_dir)
+        n_d2 = len(st.live.get(me, []))
+        QUERIES["d3_minhash_lsh"].fn(spark, sf_dir)
+        n_d3 = len(st.live.get(me, []))
+        assert n_d2 >= 1 and n_d3 >= 1
+
+        row = QUERIES["ev5_dedup_recall"].fn(spark, sf_dir).collect()[0]
+        tracked = list(st.live.get(me, []))
+        assert len(tracked) == n_d2 + n_d3 + 2
+        assert all(df.storageLevel.useMemory for df in tracked)
+        assert row["n_true"] > 0 and row["n_detected"] > 0
+
         QUERIES["p2_filter_compare"].fn(spark, sf_dir)
-        assert caching._LIVE == []
+        assert st.live.get(me, []) == []
+        assert not any(df.storageLevel.useMemory for df in tracked)
     finally:
         # a mid-assert failure must not leak the forced flag into the
         # rest of the shared-session suite (round-7 review finding)
-        caching.KEEP_SESSION_CACHES = keep_prior
+        st.keep_caches = keep_prior

@@ -15,6 +15,8 @@ from retail_data_pipeline_and_forecasting_system_spark.operators.multimodal impo
     synthesize_gradient_png_payloads,
 )
 
+from conftest import duck_connect
+
 
 def _png(w, h, c, px, filt=0):
     return bytearray(encode_png(w, h, c, bytes(px), filter_type=filt))
@@ -645,7 +647,6 @@ def test_e14_null_spend_customer_matches_oracle(spark, tmp_path):
     its score) in BOTH engines."""
     from datetime import datetime, timezone
 
-    import duckdb
 
     from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
         QUERIES,
@@ -667,7 +668,7 @@ def test_e14_null_spend_customer_matches_oracle(spark, tmp_path):
     got = (
         QUERIES["e14_rfm_segmentation"].fn(spark, str(sf)).toPandas()
     )
-    con = duckdb.connect()
+    con = duck_connect()
     # Spark writes a parquet DIRECTORY; DuckDB needs the part glob
     con.execute(
         "CREATE VIEW orders AS SELECT * FROM "

@@ -17,6 +17,8 @@ from retail_data_pipeline_and_forecasting_system_spark.operators.multimodal impo
     extract_png_metadata,
 )
 
+from conftest import duck_connect
+
 
 def _png(w, h, c, px, filt=0):
     return bytearray(encode_png(w, h, c, bytes(px), filter_type=filt))
@@ -475,9 +477,8 @@ def test_x39_compression_counts_nonspace_chars(spark):
     sf = "/root/testdata/sf0.001"
     rows = {r["source"]: r for r in QUERIES["x39_bpe_compression"].fn(
         spark, sf).collect()}
-    import duckdb
 
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
     )
@@ -543,9 +544,7 @@ def _staged_docs(spark, tmp_path, rows):
 
 
 def _oracle(sql, sf):
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
         f"'{sf}/documents.parquet/*.parquet'"

@@ -19,6 +19,8 @@ from retail_data_pipeline_and_forecasting_system_spark.operators import (
     textstats as TX,
 )
 
+from conftest import duck_connect
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -359,7 +361,6 @@ def test_max_df_cap_binds_and_matches_oracle(spark):
     at sf0.1 < 50), so this synthetic corpus is the binding-case proof:
     Spark's capped output must equal the capped DuckDB oracle exactly, and
     pairs whose only overlap is the hot shingle must vanish."""
-    import duckdb
     import pandas as pd
 
     from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
@@ -380,7 +381,7 @@ def test_max_df_cap_binds_and_matches_oracle(spark):
     uncapped = D.jaccard_pairs(docs, k=3, threshold=0.1, max_df=None)
     assert uncapped.count() == 7  # 6 hot-shingle pairs + (5, 6)
 
-    con = duckdb.connect()
+    con = duck_connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     oracle = {
         (a, b): j

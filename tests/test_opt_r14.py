@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -180,7 +181,8 @@ def test_connected_components_edges_cached_v_partitioned(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc_a bigint, doc_b bigint"
     )
-    live_before = list(caching._LIVE)
+    live = caching.state(spark).live
+    live_before = list(live.get(threading.get_ident(), []))
     out = connected_components(pairs)
     assert persisted, "edge frame is no longer persisted for the loop"
     edge_plans = [
@@ -193,7 +195,7 @@ def test_connected_components_edges_cached_v_partitioned(spark, monkeypatch):
     # released on return (not leaked to a registry release that library
     # callers never trigger); nothing newly registered in the registry
     assert all(not df.storageLevel.useMemory for df in persisted)
-    assert list(caching._LIVE) == live_before
+    assert list(live.get(threading.get_ident(), [])) == live_before
     # and the result is still the exact component labelling
     got = {(r["doc_id"], r["component"]) for r in out.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}

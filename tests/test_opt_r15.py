@@ -1,6 +1,6 @@
-"""Round-15 optimization internals: the prefix-filtered jaccard path,
-the tightened fan gate, the weak-keyed plan memos, nn_descent's
-per-round cache boundaries, and the s2 scaling canary.
+"""Round-15 optimization internals: the tightened fan gate, the
+per-session plan memos, nn_descent's per-round cache boundaries, and
+the s2 scaling canary.
 
 Results are pinned value-exactly by test_oracle_parity / the driver
 gate; these tests pin the MECHANISMS."""
@@ -20,100 +20,6 @@ from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
 )
 
 
-def _hostile_corpus(spark):
-    """Near-dup structure that stresses the prefix filter: exact dups,
-    boundary-jaccard pairs, subset docs, singletons, a hot boilerplate
-    run shared by everything (df-cap fodder)."""
-    boiler = "the quick brown fox jumps over the lazy dog again and again"
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (1, base + " " + boiler),
-        (2, base + " " + boiler),  # exact dup of 1
-        (3, base.replace("kappa", "lambda") + " " + boiler),  # near dup
-        (4, "one two three four five six seven eight nine ten"),
-        (5, "one two three four five six seven eight nine eleven"),
-        (6, "totally different words entirely unrelated content here now"),
-        (7, "alpha beta gamma delta"),  # subset of 1's head
-        (8, "single doc with no partner at all in this corpus okay"),
-    ]
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-def test_prefix_filter_jaccard_identical(spark):
-    """The AllPairs prefix-filter path returns EXACTLY the baseline
-    inverted-index path's rows (completeness theorem + same exact
-    jaccard filter) — the precondition for flipping x7's dup branch."""
-    from retail_data_pipeline_and_forecasting_system_spark.functions import (
-        tokens,
-    )
-    from retail_data_pipeline_and_forecasting_system_spark.operators import (
-        dedup as D,
-    )
-
-    words = _hostile_corpus(spark).select(
-        "doc_id", tokens("text").alias("words")
-    )
-    for max_df in (50, 3, None):
-        base = sorted(
-            map(
-                repr,
-                D.jaccard_pairs_from_words(
-                    words, k=3, threshold=0.5, max_df=max_df
-                ).collect(),
-            )
-        )
-        pref = sorted(
-            map(
-                repr,
-                D.jaccard_pairs_from_words(
-                    words, k=3, threshold=0.5, max_df=max_df,
-                    prefix_filter=True,
-                ).collect(),
-            )
-        )
-        assert base == pref, f"max_df={max_df}: prefix path diverged"
-        assert base, f"max_df={max_df}: fixture found no pairs (vacuous)"
-
-
-def test_prefix_filter_prunes_candidates(spark):
-    """The point of the prefix filter: candidate pair volume over the
-    prefix index must be strictly below the full inverted-index join's
-    (here, and ~4x at sf0.1 — recorded in OPTIMIZATION_r15.md)."""
-    from pyspark.sql import Window as W
-
-    from retail_data_pipeline_and_forecasting_system_spark.functions import (
-        tokens,
-    )
-    from retail_data_pipeline_and_forecasting_system_spark.operators import (
-        dedup as D,
-    )
-
-    words = _hostile_corpus(spark).select(
-        "doc_id", tokens("text").alias("words")
-    )
-    sh = D._shingle_partitioned_distinct(
-        D.word_shingles_from_words(words, k=3, distinct=False)
-    )
-    shr = D._rare_shingles(sh, 50, keep_df=True)
-    a = shr.select(F.col("doc_id").alias("a"), "shingle")
-    b = shr.select(F.col("doc_id").alias("b"), "shingle")
-    full = a.join(b, "shingle").filter(F.col("a") < F.col("b")).count()
-    w_n = W.partitionBy("doc_id")
-    w_rk = W.partitionBy("doc_id").orderBy("__df", "shingle")
-    pref = (
-        shr.withColumn("__n", F.count(F.lit(1)).over(w_n))
-        .withColumn("__rk", F.row_number().over(w_rk))
-        .filter(
-            F.col("__rk")
-            <= F.col("__n") - F.ceil(F.lit(0.5) * F.col("__n")) + 1
-        )
-    )
-    pa = pref.select(F.col("doc_id").alias("a"), "shingle")
-    pb = pref.select(F.col("doc_id").alias("b"), "shingle")
-    pruned = pa.join(pb, "shingle").filter(F.col("a") < F.col("b")).count()
-    assert 0 < pruned < full
-
-
 def test_fan_gate_needs_partition_deficit(spark, sf_dir):
     """r15 gate tightening (r14 ADVICE): a frame that already scans as
     many partitions as cores is NOT fanned, however small its bytes —
@@ -128,9 +34,26 @@ def test_fan_gate_needs_partition_deficit(spark, sf_dir):
 
 def test_invalidate_tables_drops_memo(spark, sf_dir):
     """The r15 invalidation hook for callers that rewrite parquet
-    mid-session (the _TABLES immutability contract's escape hatch)."""
+    mid-session (the table memo's immutability contract's escape
+    hatch) resets every memo in the session's state: table plans,
+    fan-gate decisions and depletion dim counts."""
+    from retail_data_pipeline_and_forecasting_system_spark import caching
+    from retail_data_pipeline_and_forecasting_system_spark.operators.depletion import (
+        _dim_count,
+    )
+
     a = _t(spark, sf_dir, "lineitem")
+    fan_key = ("invalidate_probe", sf_dir)
+    _fan(a, "l_orderkey", ckey=fan_key)
+    products = spark.createDataFrame(
+        [(1, 5), (2, 3)], "product_id bigint, stock bigint"
+    )
+    assert _dim_count(products) == 2
+    dim_key = ("dim_count", products.semanticHash())
+    probes = caching.state(spark).probes
+    assert fan_key in probes and dim_key in probes
     invalidate_tables(spark)
+    assert fan_key not in probes and dim_key not in probes
     b = _t(spark, sf_dir, "lineitem")
     assert a is not b
     assert _t(spark, sf_dir, "lineitem") is b  # re-memoized
@@ -217,8 +140,8 @@ def test_depletion_buckets_bounded_by_dim_cardinality(spark):
     the depletion differential suite)."""
     import re as _re
 
+    from retail_data_pipeline_and_forecasting_system_spark import caching
     from retail_data_pipeline_and_forecasting_system_spark.operators.depletion import (
-        _DIM_COUNT_MEMO,
         greedy_inventory_depletion,
     )
 
@@ -236,8 +159,8 @@ def test_depletion_buckets_bounded_by_dim_cardinality(spark):
     assert m, "bucketed pmod missing from plan"
     assert int(m.group(1)) == 5, f"expected 5 buckets, got {m.group(1)}"
     # memo populated for this session + plan
-    per = _DIM_COUNT_MEMO.get(spark)
-    assert per and products.semanticHash() in per
+    probes = caching.state(spark).probes
+    assert probes.get(("dim_count", products.semanticHash())) == 5
     # and the fold still computes (greedy semantics pinned elsewhere)
     assert out.count() == 20
 

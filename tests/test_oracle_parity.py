@@ -12,7 +12,6 @@ import datetime as dt
 import decimal
 import os
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -20,6 +19,8 @@ import pytest
 from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
 )
+
+from conftest import duck_connect
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
@@ -29,18 +30,8 @@ TABLES = [
 
 
 @pytest.fixture(scope="module")
-def duck(tmp_path_factory):
-    # Bounded, with spill room under pytest's tmp: an oracle that outgrows
-    # the limit fails its own test with DuckDB's OutOfMemoryException,
-    # instead of the kernel's OOM killer taking the Spark JVM (and every
-    # later test with it).
-    con = duckdb.connect(
-        config={
-            "memory_limit": "2GB",
-            "threads": min(4, os.cpu_count() or 1),
-            "temp_directory": str(tmp_path_factory.mktemp("duckdb")),
-        }
-    )
+def duck():
+    con = duck_connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con

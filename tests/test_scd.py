@@ -37,20 +37,6 @@ def test_merge_upsert_matched_unmatched_insert(spark):
     assert out.count() == 4
 
 
-def test_merge_upsert_broadcast_source_same_result(spark):
-    target = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0)], "id long, bal double"
-    )
-    source = spark.createDataFrame([(2, 99.0)], "id long, new_bal double")
-    plain = merge_upsert(target, source, "id", {"bal": "new_bal"})
-    bcast = merge_upsert(
-        target, source, "id", {"bal": "new_bal"}, broadcast_source=True
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, bcast.collect())
-    )
-
-
 def test_scd2_collapses_runs_and_closes_intervals(spark):
     t0 = dt.datetime(2024, 1, 1)
 

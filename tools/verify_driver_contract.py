@@ -8,7 +8,9 @@ stringified value equality). Pass query names as argv to scope the run:
     python tools/verify_driver_contract.py d14_semantic_dedup n9_knn_join_ivf
 """
 
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -21,10 +23,18 @@ only = set(sys.argv[1:])  # optional: verify just these query names
 
 spark = get_session("verify")
 print("entry rows:", e.entry(spark).count())
-con = duckdb.connect()
+# the test suite's bounds (tests/conftest.py duck_connect): an oracle
+# that outgrows 2 GB fails with DuckDB's OutOfMemoryException instead of
+# the OOM killer taking the Spark JVM; spill goes to a throwaway dir
+spill = tempfile.TemporaryDirectory(prefix="duckdb-")
+con = duckdb.connect(
+    config={
+        "memory_limit": "2GB",
+        "threads": min(4, os.cpu_count() or 1),
+        "temp_directory": spill.name,
+    }
+)
 # override with VERIFY_SF_DIR to run the same compare at another scale
-import os  # noqa: E402
-
 sf = os.environ.get("VERIFY_SF_DIR", "/root/testdata/sf0.01")
 for t in [
     "region", "nation", "customer", "supplier", "part",
