@@ -21,11 +21,9 @@ correct under late data: an order arriving for a PAST day updates that
 day's cents, and every window that contains the day re-scores
 automatically on the next read.
 
-Replay safety — same epoch-guard contract as rollup_stream: a cents
-merge double-counts if an epoch re-fires, so the sink stores the last
-applied epoch id in the state table and skips batch_id == last
-(Structured Streaming's crash-replay), failing loudly on batch_id <
-last (a fresh checkpoint pointed at an old table is operator error).
+Replay safety: a cents merge double-counts if an epoch re-fires, so
+the sink runs under ``sinks.versioned_state_sink``'s epoch guard (the
+contract is stated in rollup_stream).
 
 Scale: state is day-cardinality-sized; each epoch aggregates only its
 delta (map-side combined) and merges with one day-keyed union-agg over
@@ -41,7 +39,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.analytics import daily_revenue_cents, zscore_flags
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain_available_now, versioned_state_sink
+
+
+def _merge_cents(cur: DataFrame, delta: DataFrame) -> DataFrame:
+    return (
+        cur.select("day", "revenue_cents")
+        .union(delta)
+        .groupBy("day")
+        .agg(F.sum("revenue_cents").cast("bigint").alias("revenue_cents"))
+    )
 
 
 def anomaly_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
@@ -54,45 +62,9 @@ def anomaly_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
             anomaly_state_sink(table_dir)
         ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = daily_revenue_cents(batch_df)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD: cent merges double-count under replay (see
-            # rollup_stream for the full contract discussion)
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"anomaly_state_sink: batch_id {batch_id} is "
-                    f"behind the table's last applied epoch {last} — "
-                    "a new checkpoint lineage is pointed at an "
-                    "existing state table; use a fresh table_dir (or "
-                    "resume the original checkpoint)"
-                )
-            out = (
-                cur.select("day", "revenue_cents")
-                .union(delta)
-                .groupBy("day")
-                .agg(
-                    F.sum("revenue_cents").cast("bigint").alias(
-                        "revenue_cents"
-                    )
-                )
-            )
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return versioned_state_sink(
+        "anomaly_state_sink", table_dir, daily_revenue_cents, _merge_cents
+    )
 
 
 def read_anomaly_scores(
@@ -123,15 +95,7 @@ def run_anomaly_ingest(
     """Drain a parquet drop-dir of order rows into the anomaly state
     with ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(anomaly_state_sink(table_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_dir, schema, max_files_per_trigger,
+        anomaly_state_sink(table_dir), checkpoint_dir,
     )

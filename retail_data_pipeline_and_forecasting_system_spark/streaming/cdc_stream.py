@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from ..operators.scd import merge_upsert
 from ..sources.versioned import current_version, read_version, write_version
+from .sinks import drain_available_now
 
 
 def cdc_apply_sink(
@@ -206,17 +207,8 @@ def run_cdc_apply(
     """Drain a JSON-lines change feed into the versioned table with
     ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            cdc_apply_sink(table_dir, key_col, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_glob, schema, max_files_per_trigger,
+        cdc_apply_sink(table_dir, key_col, **sink_kwargs), checkpoint_dir,
+        fmt="json",
     )

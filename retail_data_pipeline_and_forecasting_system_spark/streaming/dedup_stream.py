@@ -15,14 +15,13 @@ the same convention as ``sinks.idempotent_parquet_sink``):
   batch readers scan the root and see the whole corpus.
 - ``verdicts_dir/batch_id=<n>/`` — (doc_id, status, match_id) per epoch.
 
-Crash/replay: Structured Streaming re-runs the last uncommitted epoch
-after a crash. Both writes use dynamic partition overwrite into the
-epoch's own partition, so the replay overwrites its possibly-partial
-output instead of appending beside it — the corpus converges to the same
-files. The corpus read for the replayed epoch excludes the epoch's OWN
-partition explicitly, so a partially-committed epoch never dedups against
-itself (without that, a replayed doc would match its own half-written
-copy and be rejected as 'exact', corrupting the corpus).
+Crash/replay: both writes go through ``sinks.write_epoch``, so a replay
+overwrites its possibly-partial output and the corpus converges to the
+same files. The corpus read goes through ``sinks.read_other_epochs``,
+which excludes the epoch's OWN partition, so a partially-committed epoch
+never dedups against itself (without that, a replayed doc would match
+its own half-written copy and be rejected as 'exact', corrupting the
+corpus).
 
 Scale: each epoch signs and shingles ONLY the arriving batch plus the
 accepted corpus; candidates come exclusively from new x corpus bucket
@@ -46,9 +45,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.dedup import incremental_dedup
+from .sinks import drain_available_now, read_other_epochs, write_epoch
 
 
 def incremental_dedup_sink(
@@ -76,19 +75,14 @@ def incremental_dedup_sink(
         batch = batch_df.select(id_col, text_col).withColumn(
             "__new", F.lit(True)
         )
-        try:
-            corpus = (
-                spark.read.parquet(corpus_dir)
-                # a replayed epoch must not dedup against its own
-                # partial output from the crashed attempt
-                .filter(F.col("batch_id") != int(batch_id))
-                .select(id_col, text_col)
-                .withColumn("__new", F.lit(False))
-            )
-            full = corpus.unionByName(batch)
-        except AnalysisException:
+        corpus = read_other_epochs(spark, corpus_dir, batch_id)
+        if corpus is None:
             # first epoch: no corpus yet — everything is new vs empty
             full = batch
+        else:
+            full = corpus.select(id_col, text_col).withColumn(
+                "__new", F.lit(False)
+            ).unionByName(batch)
 
         tracker: list[DataFrame] = []
         verdicts = incremental_dedup(
@@ -104,39 +98,18 @@ def incremental_dedup_sink(
             cache_tracker=tracker,
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # verdicts are consumed twice (write + unique-filter join):
             # persist the small frame instead of re-running the dedup
             verdicts = verdicts.persist()
             tracker.append(verdicts)
-            (
-                verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdicts_dir)
-            )
+            write_epoch(verdicts, verdicts_dir, batch_id)
             accepted = batch.select(id_col, text_col).join(
                 verdicts.filter(F.col("status") == "unique").select(id_col),
                 id_col,
             )
-            (
-                accepted.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
-            )
+            write_epoch(accepted, corpus_dir, batch_id)
         finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # conf was UNSET before this epoch: unset it again rather
-                # than leaving the session pinned to 'dynamic' (same
-                # hygiene as sinks.idempotent_parquet_sink)
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             for frame in tracker:
                 frame.unpersist()
 
@@ -158,17 +131,8 @@ def run_dedup_ingest(
     ``max_files_per_trigger=1``), blocking until caught up — the batch
     harness for the sink above; a service would ``start()`` without
     AvailableNow and run forever."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            incremental_dedup_sink(corpus_dir, verdicts_dir, **dedup_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_glob, schema, max_files_per_trigger,
+        incremental_dedup_sink(corpus_dir, verdicts_dir, **dedup_kwargs),
+        checkpoint_dir, fmt="json",
     )

@@ -23,7 +23,7 @@ agree result-for-result when events arrive in order (asserted in tests).
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.depletion import _fulfilled_qty
 from ..schemas import TRANSACTIONS_RAW
 
 LINE_SCHEMA = T.StructType(
@@ -109,13 +110,8 @@ def streaming_depletion(
             pdf = pdf.sort_values(
                 ["timestamp", "transaction_id", "line_pos"], kind="mergesort"
             ).reset_index(drop=True)
-            out = []
-            for qty in pdf["qty"].tolist():
-                if qty is not None and 0 <= qty <= remaining:
-                    out.append(qty)
-                    remaining -= qty
-                else:
-                    out.append(0)
+            out = _fulfilled_qty(remaining, pdf["qty"].tolist())
+            remaining -= sum(out)
             pdf["quantity"] = out
             yield pdf
         state.update((int(remaining),))
@@ -126,88 +122,6 @@ def streaming_depletion(
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_depletion_tws(
-    lines: DataFrame, initial_stock_df: DataFrame
-) -> DataFrame:
-    """Greedy depletion on Spark 4's ``transformWithStateInPandas`` — the
-    modern arbitrary-state API (SPARK-49564 "state v2"), the successor to
-    :func:`streaming_depletion`'s ``applyInPandasWithState``.
-
-    What the new API buys at scale, demonstrated here:
-
-    - **Typed state handles** (``getValueState``) instead of one opaque
-      state tuple — independently evolvable, TTL-capable per handle.
-    - **Distributed initial state**: ``initial_stock_df`` (product_id,
-      stock) is passed as a GROUPED DATAFRAME and lands in each group's
-      ``handleInitialState`` — the reference's driver-side stock dict
-      (src/data_processor.py:346-355) never transits the driver here,
-      which matters when the dimension is millions of products.
-    - Same cross-chunk contract as the old API: all Arrow chunks of a
-      group are concatenated and sorted once before the fold.
-
-    Result-identical to :func:`streaming_depletion` and to the batch
-    kernel (asserted in tests/test_streaming.py; the test skips where
-    protobuf — required by the state-v2 Python worker, absent from this
-    container — is not installed, and the ``applyInPandasWithState``
-    twin carries the parity proof there). Requires the RocksDB state
-    store provider (``spark.sql.streaming.stateStore.providerClass``).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class DepletionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._remaining = handle.getValueState(
-                "remaining", "remaining INT"
-            )
-
-        def handleInitialState(self, key, initial_state, timerValues) -> None:
-            self._remaining.update((int(initial_state["stock"].iloc[0]),))
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            remaining = (
-                int(self._remaining.get()[0])
-                if self._remaining.exists()
-                else 0
-            )
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                pdf = (
-                    pd.concat(chunks, ignore_index=True)
-                    if len(chunks) > 1
-                    else chunks[0]
-                )
-                pdf = pdf.sort_values(
-                    ["timestamp", "transaction_id", "line_pos"],
-                    kind="mergesort",
-                ).reset_index(drop=True)
-                out = []
-                for qty in pdf["qty"].tolist():
-                    if qty is not None and 0 <= qty <= remaining:
-                        out.append(qty)
-                        remaining -= qty
-                    else:
-                        out.append(0)
-                pdf["quantity"] = out
-                yield pdf
-            self._remaining.update((int(remaining),))
-
-        def close(self) -> None:
-            pass
-
-    return lines.groupBy("product_id").transformWithStateInPandas(
-        statefulProcessor=DepletionProcessor(),
-        outputStructType=FILLED_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-        initialState=initial_stock_df.groupBy("product_id"),
     )
 
 

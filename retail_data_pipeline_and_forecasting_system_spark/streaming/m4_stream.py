@@ -25,10 +25,10 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.m4 import finalize_m4, m4_state, merge_m4_states
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain_available_now, versioned_state_sink
 
 
 def m4_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
@@ -36,23 +36,9 @@ def m4_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
     state. No epoch guard: the extreme-struct merge is idempotent, so
     replay convergence holds by construction (see module docstring).
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = m4_state(batch_df)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir).drop("__epoch")
-            out = merge_m4_states(cur, delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return versioned_state_sink(
+        "m4_state_sink", table_dir, m4_state, merge_m4_states, guard=False
+    )
 
 
 def read_m4(
@@ -79,15 +65,7 @@ def run_m4_ingest(
     """Drain a parquet drop-dir of event rows into the M4 state with
     ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(m4_state_sink(table_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_dir, schema, max_files_per_trigger,
+        m4_state_sink(table_dir), checkpoint_dir,
     )

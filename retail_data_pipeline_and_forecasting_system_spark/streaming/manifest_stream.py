@@ -19,12 +19,10 @@ delta-proportional cost per epoch (the full-corpus rehash is never
 paid again), and the ingest side can verify any snapshot against the
 maintained root.
 
-Replay safety — same contract as rollup_stream: a digest/count merge
-is NOT naturally convergent (re-applying an epoch double-counts,
-unlike the CDC upsert), so the sink stores the last applied epoch id
-in the state table and SKIPS the crash-replayed epoch; a batch id
-BEHIND the stored epoch means a fresh checkpoint was pointed at an
-existing state table and fails loudly.
+Replay safety: a digest/count merge is NOT naturally convergent
+(re-applying an epoch double-counts, unlike the CDC upsert), so the
+sink runs under ``sinks.versioned_state_sink``'s epoch guard (the
+contract is stated in rollup_stream).
 
 Scale: the stored state is shard-cardinality-sized (16 rows here,
 ~100k at 100 TB — still trivially small); each epoch hashes ONLY its
@@ -39,14 +37,14 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.manifest import (
     finalize_manifest,
     manifest_state,
     merge_manifest_states,
 )
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain_available_now, versioned_state_sink
 
 
 def manifest_state_sink(
@@ -60,38 +58,12 @@ def manifest_state_sink(
             manifest_state_sink(table_dir)
         ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = manifest_state(batch_df, **manifest_kwargs)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD (the rollup_stream contract): digest sums
-            # double-count under replay, so the crash-replayed epoch
-            # is dropped; an epoch BEHIND the table is a new
-            # checkpoint lineage against an old table — fail loudly.
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"manifest_state_sink: batch_id {batch_id} is "
-                    f"behind the table's last applied epoch {last} — "
-                    "a new checkpoint lineage is pointed at an "
-                    "existing state table; use a fresh table_dir (or "
-                    "resume the original checkpoint)"
-                )
-            out = merge_manifest_states(cur.drop("__epoch"), delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return versioned_state_sink(
+        "manifest_state_sink",
+        table_dir,
+        lambda b: manifest_state(b, **manifest_kwargs),
+        merge_manifest_states,
+    )
 
 
 def read_manifest(
@@ -116,17 +88,7 @@ def run_manifest_ingest(
     """Drain a parquet drop-dir of document rows into the manifest
     state with ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            manifest_state_sink(table_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_dir, schema, max_files_per_trigger,
+        manifest_state_sink(table_dir, **sink_kwargs), checkpoint_dir,
     )

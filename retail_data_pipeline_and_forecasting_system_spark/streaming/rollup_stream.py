@@ -16,10 +16,15 @@ Replay safety — the part that DIFFERS from the CDC sink: an agg merge
 is NOT naturally convergent (re-applying an epoch double-counts, where
 re-upserting a row is a no-op). The sink therefore stores the last
 applied epoch id in the state table (constant ``__epoch`` column) and
-SKIPS any batch whose id is <= it — Structured Streaming's replay
+SKIPS the batch whose id equals it — Structured Streaming's replay
 contract (re-run the last uncommitted epoch after a crash) then applies
-each epoch exactly once. The guard costs one driver-side read of a
-single value off the model-sized state table.
+each epoch exactly once. A batch id BELOW it means a DIFFERENT
+checkpoint lineage (a fresh or cleared checkpoint against an existing
+table) whose batches would otherwise be silently discarded: that is an
+operator error, so the sink fails loudly instead of no-oping. The guard
+costs one driver-side read of a single value off the model-sized state
+table. This is the contract of ``sinks.versioned_state_sink`` with
+``guard=True``, which every counted-state service shares.
 
 Scale: the stored state is key-cardinality-sized (customers, not
 orders); each epoch aggregates ONLY its delta (map-side combined) and
@@ -37,7 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.rollup import merge_rollup_states, rollup_state
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain_available_now, versioned_state_sink
 
 
 def rollup_state_sink(
@@ -54,44 +60,12 @@ def rollup_state_sink(
             rollup_state_sink(table_dir)
         ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = rollup_state(batch_df, key_col, value_col, ts_col)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD: agg merges double-count under replay, so a
-            # re-fired epoch (crash before checkpoint commit) must be
-            # dropped, not re-merged. One scalar off the state table.
-            # batch_id == last is that legitimate replay; batch_id <
-            # last means a DIFFERENT checkpoint lineage (fresh/cleared
-            # checkpoint against an existing table) whose batches
-            # would otherwise be silently discarded — that is an
-            # operator error, so fail loudly instead of no-oping.
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"rollup_state_sink: batch_id {batch_id} is behind "
-                    f"the table's last applied epoch {last} — a new "
-                    "checkpoint lineage is pointed at an existing "
-                    "state table; use a fresh table_dir (or resume "
-                    "the original checkpoint)"
-                )
-            out = merge_rollup_states(
-                cur.drop("__epoch"), delta, key_col
-            )
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return versioned_state_sink(
+        "rollup_state_sink",
+        table_dir,
+        lambda b: rollup_state(b, key_col, value_col, ts_col),
+        lambda cur, delta: merge_rollup_states(cur, delta, key_col),
+    )
 
 
 def read_rollup_state(
@@ -120,17 +94,7 @@ def run_rollup_ingest(
     """Drain a parquet drop-dir of order rows into the rollup state
     with ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            rollup_state_sink(table_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_dir, schema, max_files_per_trigger,
+        rollup_state_sink(table_dir, **sink_kwargs), checkpoint_dir,
     )

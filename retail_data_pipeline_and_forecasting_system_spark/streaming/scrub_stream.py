@@ -28,11 +28,10 @@ cap under either definition — true at every test SF (measured corpus
 max df: 7 at sf0.01) — the two definitions coincide and stream ==
 ``x60_leakage_scrub`` EXACTLY; the parity test pins this.
 
-Replay safety — the rollup/manifest contract: count/digest merges are
-not naturally convergent (re-applying an epoch double-counts), so the
-sink stores the last applied epoch id and SKIPS the crash-replayed
-epoch; an epoch BEHIND the stored one (a fresh checkpoint pointed at
-an existing state table) fails loudly.
+Replay safety: count/digest merges are not naturally convergent
+(re-applying an epoch double-counts), so the sink runs under
+``sinks.versioned_state_sink``'s epoch guard (the contract is stated
+in rollup_stream).
 
 Scale: the frozen index is eval-sized (a held-out set — KBs-to-MBs
 against a 100 TB corpus), persisted once and probed by every epoch;
@@ -52,7 +51,8 @@ from ..functions import word_shingle_sets, word_shingles
 from ..operators.dedup import _band_buckets
 from ..operators.manifest import U64_MOD, manifest_rows
 from ..operators.splitaudit import split_nibble
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain_available_now, versioned_state_sink
 
 
 def freeze_eval_index(
@@ -244,34 +244,12 @@ def scrub_state_sink(
     against the frozen eval index, with the manifest/rollup epoch
     guard (exactly-once under crash replay; loud failure on a fresh
     checkpoint lineage pointed at an old table)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        delta = scrub_delta_state(batch_df, idx)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"scrub_state_sink: batch_id {batch_id} is behind "
-                    f"the table's last applied epoch {last} — a new "
-                    "checkpoint lineage is pointed at an existing "
-                    "state table; use a fresh table_dir (or resume "
-                    "the original checkpoint)"
-                )
-            out = merge_scrub_states(cur.drop("__epoch"), delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return versioned_state_sink(
+        "scrub_state_sink",
+        table_dir,
+        lambda b: scrub_delta_state(b, idx),
+        merge_scrub_states,
+    )
 
 
 def read_scrub(
@@ -303,15 +281,7 @@ def run_scrub_ingest(
     """Drain a parquet drop-dir of document rows through the gate with
     ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(scrub_state_sink(idx, table_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_dir, schema, max_files_per_trigger,
+        scrub_state_sink(idx, table_dir), checkpoint_dir,
     )

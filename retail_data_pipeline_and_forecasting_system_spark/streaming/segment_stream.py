@@ -15,8 +15,9 @@ Layout (epoch-partitioned, the convention shared by all four services):
 - ``docs_dir/batch_id=<n>/``  — per-doc output of epoch n:
   (doc_id, n_segs, n_kept, text_dedup).
 
-Crash/replay: dynamic partition overwrite + own-partition exclusion on
-the seen-store read, as everywhere. Convergence here is strong: a
+Crash/replay: both writes go through ``sinks.write_epoch`` and the
+seen-store read through ``sinks.read_other_epochs``. Convergence here is
+strong: a
 segment first seen in epoch k exists ONLY in partition k (later epochs
 found it in the store and did not re-add it), so a replay of ANY epoch
 — last or mid-history — reads exactly the store state that epoch
@@ -37,7 +38,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+
+from .sinks import drain_available_now, read_other_epochs, write_epoch
 
 
 def segment_dedup_sink(
@@ -77,17 +79,16 @@ def segment_dedup_sink(
                 F.transform(seg_arr, lambda s: F.md5(s))
             ).alias("seg_idx", "h"),
         )
-        try:
-            seen = (
-                spark.read.parquet(segs_dir)
-                .filter(F.col("batch_id") != batch_id)
-                .select("h")
-                .withColumn("__seen", F.lit(True))
-            )
-            cand = hashed.join(seen, "h", "left")
-        except AnalysisException:
+        seen = read_other_epochs(spark, segs_dir, batch_id)
+        if seen is None:
             cand = hashed.withColumn(
                 "__seen", F.lit(None).cast("boolean")
+            )
+        else:
+            cand = hashed.join(
+                seen.select("h").withColumn("__seen", F.lit(True)),
+                "h",
+                "left",
             )
         # within-epoch first occurrence of each NOVEL hash: groupBy-min
         # (map-side combine — the hot-boilerplate key partially
@@ -110,12 +111,6 @@ def segment_dedup_sink(
                 & (F.col("__w").getField(id_col) == F.col(id_col))
                 & (F.col("__w").getField("seg_idx") == F.col("seg_idx"))
             ).alias("__keep"),
-        )
-        old = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
         try:
             flags = flags.persist()
@@ -142,29 +137,11 @@ def segment_dedup_sink(
                     " ",
                 ).alias("text_dedup"),
             )
-            (
-                docs.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(docs_dir)
-            )
+            write_epoch(docs, docs_dir, batch_id)
             novel = flags.filter(F.col("__keep")).select("h")
-            (
-                novel.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(segs_dir)
-            )
+            write_epoch(novel, segs_dir, batch_id)
         finally:
             flags.unpersist()
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -188,21 +165,14 @@ def segment_dedup_sink(
             F.posexplode(seg_arr).alias("seg_idx", "seg"),
         )
 
-        try:
-            seen = (
-                spark.read.parquet(segs_dir)
-                # a replayed epoch must not test against its own
-                # partial output from the crashed attempt
-                .filter(F.col("batch_id") != int(batch_id))
-                .select("seg")
-                .withColumn("__seen", F.lit(True))
-            )
-        except AnalysisException:
-            seen = None  # first epoch: empty store
-
+        seen = read_other_epochs(spark, segs_dir, batch_id)
         if seen is not None:
-            cand = segs.join(seen, "seg", "left")
-        else:
+            cand = segs.join(
+                seen.select("seg").withColumn("__seen", F.lit(True)),
+                "seg",
+                "left",
+            )
+        else:  # first epoch: empty store
             cand = segs.withColumn("__seen", F.lit(None).cast("boolean"))
 
         first = Window.partitionBy("seg").orderBy(id_col, "seg_idx")
@@ -211,8 +181,6 @@ def segment_dedup_sink(
             F.col("__seen").isNull() & (F.row_number().over(first) == 1),
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # consumed twice (docs rollup + novel-segment append)
             ranked = ranked.persist()
@@ -232,27 +200,11 @@ def segment_dedup_sink(
                     " ",
                 ).alias("text_dedup"),
             )
-            (
-                docs.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(docs_dir)
-            )
+            write_epoch(docs, docs_dir, batch_id)
             novel = ranked.filter(F.col("__keep")).select("seg")
-            (
-                novel.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(segs_dir)
-            )
+            write_epoch(novel, segs_dir, batch_id)
         finally:
             ranked.unpersist()
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
 
     return write
 
@@ -270,17 +222,8 @@ def run_segment_ingest(
     """Drain a JSON-lines document feed through the segment-dedup gate
     with ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            segment_dedup_sink(segs_dir, docs_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_glob, schema, max_files_per_trigger,
+        segment_dedup_sink(segs_dir, docs_dir, **sink_kwargs),
+        checkpoint_dir, fmt="json",
     )

@@ -14,11 +14,11 @@ idempotence):
 - ``corpus_dir/batch_id=<n>/``   — accepted (unique) vectors of epoch n.
 - ``verdicts_dir/batch_id=<n>/`` — (vec_id, cent_id, status, match_id).
 
-Crash/replay: dynamic partition overwrite into the epoch's own
-partition + excluding the epoch's OWN partition from the corpus read —
-a replayed epoch overwrites its partial output and never dedups against
-its own half-written copy (see dedup_stream's module docstring for the
-full argument; the convergence proof is identical).
+Crash/replay: ``sinks.write_epoch`` for every write and
+``sinks.read_other_epochs`` for every store read — a replayed epoch
+overwrites its partial output and never dedups against its own
+half-written copy (see dedup_stream's module docstring for the full
+argument; the convergence proof is identical).
 
 Model lifecycle: the cell model is refitted per epoch on the accepted
 corpus (first epoch: on the batch itself — there is nothing else to fit
@@ -50,7 +50,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.similarity import (
     assign_cells,
@@ -59,6 +58,12 @@ from ..operators.similarity import (
     kmeans_lloyd,
     kmeans_minibatch_update,
     semantic_verdicts,
+)
+from .sinks import (
+    drain_available_now,
+    overwrite_partitions,
+    read_other_epochs,
+    write_epoch,
 )
 
 
@@ -87,18 +92,12 @@ def incremental_semantic_sink(
         batch = batch_df.select(id_col, vec_col).withColumn(
             "__new", F.lit(True)
         )
-        try:
-            corpus = (
-                spark.read.parquet(corpus_dir)
-                # a replayed epoch must not dedup against its own
-                # partial output from the crashed attempt
-                .filter(F.col("batch_id") != int(batch_id))
-                .select(id_col, vec_col)
-                .withColumn("__new", F.lit(False))
+        corpus = read_other_epochs(spark, corpus_dir, batch_id)
+        if corpus is not None:
+            corpus = corpus.select(id_col, vec_col).withColumn(
+                "__new", F.lit(False)
             )
-            has_corpus = corpus.head(1)
-        except AnalysisException:
-            corpus, has_corpus = None, []
+        has_corpus = corpus is not None and corpus.head(1)
 
         if has_corpus:
             full = corpus.unionByName(batch)
@@ -123,34 +122,16 @@ def incremental_semantic_sink(
             salt=salt,
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # consumed twice (verdict write + unique-filter join)
             verdicts = verdicts.persist()
-            (
-                verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdicts_dir)
-            )
+            write_epoch(verdicts, verdicts_dir, batch_id)
             accepted = batch.select(id_col, vec_col).join(
                 verdicts.filter(F.col("status") == "unique").select(id_col),
                 id_col,
             )
-            (
-                accepted.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
-            )
+            write_epoch(accepted, corpus_dir, batch_id)
         finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             verdicts.unpersist()
 
     return write
@@ -236,17 +217,14 @@ def incremental_semantic_model_sink(
         batch = batch_df.select(id_col, vec_col)
 
         prev_model = None
-        try:
-            models = spark.read.parquet(model_dir).filter(
-                F.col("epoch") < int(batch_id)
-            )
+        models = read_other_epochs(spark, model_dir, batch_id, "epoch")
+        if models is not None:
+            models = models.filter(F.col("epoch") < int(batch_id))
             prev_epoch = models.agg(F.max("epoch")).collect()[0][0]
             if prev_epoch is not None:
                 prev_model = models.filter(
                     F.col("epoch") == prev_epoch
                 ).select("cent_id", "cent_vec", "n")
-        except AnalysisException:
-            pass
 
         if prev_model is None:
             # first epoch: structure from the batch itself, counts start
@@ -269,14 +247,11 @@ def incremental_semantic_model_sink(
             id_col=id_col, vec_col=vec_col,
         ).select(id_col, vec_col, F.col("cent_id").cast("int").alias("cent_id"))
 
-        try:
-            corpus_cells = (
-                spark.read.parquet(corpus_dir)
-                .filter(F.col("batch_id") != int(batch_id))
-                .select(id_col, vec_col, "cent_id")
-            )
-        except AnalysisException:
+        corpus_cells = read_other_epochs(spark, corpus_dir, batch_id)
+        if corpus_cells is None:
             corpus_cells = spark.createDataFrame([], batch_cells.schema)
+        else:
+            corpus_cells = corpus_cells.select(id_col, vec_col, "cent_id")
 
         verdicts = semantic_verdicts(
             batch_cells,
@@ -287,39 +262,16 @@ def incremental_semantic_model_sink(
             salt=salt,
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             verdicts = verdicts.persist()
-            (
-                verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdicts_dir)
-            )
+            write_epoch(verdicts, verdicts_dir, batch_id)
             accepted = batch_cells.join(
                 verdicts.filter(F.col("status") == "unique").select(id_col),
                 id_col,
             )
-            (
-                accepted.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
-            )
-            (
-                model.withColumn("epoch", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("epoch")
-                .parquet(model_dir)
-            )
+            write_epoch(accepted, corpus_dir, batch_id)
+            write_epoch(model, model_dir, batch_id, "epoch")
         finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             verdicts.unpersist()
 
         if auto_rebuild:
@@ -424,25 +376,8 @@ def rebuild_semantic_model(
         "left",
     ).select("cent_id", "cent_vec", F.coalesce("n", F.lit(0)).alias("n"))
 
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(corpus_dir)
-        )
-        (
-            model.withColumn("epoch", F.lit(int(epoch)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(model_dir)
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    overwrite_partitions(assigned, corpus_dir, "batch_id")
+    write_epoch(model, model_dir, epoch, "epoch")
     return k
 
 
@@ -460,19 +395,8 @@ def run_semantic_ingest(
     with ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up; a service
     would ``start()`` without AvailableNow and run forever."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            incremental_semantic_sink(
-                corpus_dir, verdicts_dir, **dedup_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_glob, schema, max_files_per_trigger,
+        incremental_semantic_sink(corpus_dir, verdicts_dir, **dedup_kwargs),
+        checkpoint_dir, fmt="json",
     )

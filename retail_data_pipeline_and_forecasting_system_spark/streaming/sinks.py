@@ -1,4 +1,5 @@
-"""Exactly-once streaming sinks via foreachBatch.
+"""Exactly-once streaming sinks via foreachBatch, and the epoch scaffold
+every streaming service here is built on.
 
 Structured Streaming's file sinks are append-only and its checkpoint
 guarantees at-least-once delivery to arbitrary sinks: after a crash
@@ -16,6 +17,25 @@ The reference appends per-day CSVs with no replay story
 (src/data_processor.py single-shot batch); this is what its output
 contract needs to survive a mid-batch crash when run continuously.
 
+The scaffold — the three decisions every service shares:
+
+- :func:`write_epoch` / :func:`overwrite_partitions`: the
+  epoch-partitioned overwrite above. Dynamic overwrite is a WRITER
+  option, so it covers exactly this write: the session's overwrite-mode
+  conf is never touched, and no other thread's concurrent write changes
+  meaning. :func:`read_other_epochs` is the matching read: a store minus
+  the replayed epoch's own (possibly partial) partition, or None before
+  the first epoch.
+- :func:`versioned_state_sink`: the agg-state services' foreachBatch
+  body — delta, merge into the stored state, commit one
+  ``sources.versioned`` version per epoch, with the ``__epoch`` replay
+  guard (``rollup_stream``'s docstring states the contract).
+- :func:`drain_available_now`: drain a json or parquet drop-dir through
+  a foreachBatch sink with ``Trigger.AvailableNow`` (one epoch per file
+  at ``max_files_per_trigger=1``), blocking until caught up — the batch
+  harness for a sink; a service would ``start()`` without AvailableNow
+  and run forever.
+
 At 100 TB: the sink adds no shuffle (partitionBy on a literal column),
 each epoch directory is independently compactable (see
 sources/writers.compact_partition), and downstream batch readers just
@@ -27,6 +47,119 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.utils import AnalysisException
+
+from ..sources.versioned import current_version, read_version, write_version
+
+
+def overwrite_partitions(frame: DataFrame, out_dir: str, col: str) -> None:
+    """Write ``frame`` partitioned by ``col``, replacing only the
+    partitions it carries (dynamic overwrite as a writer option)."""
+    (
+        frame.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(out_dir)
+    )
+
+
+def write_epoch(
+    frame: DataFrame, out_dir: str, batch_id: int, col: str = "batch_id"
+) -> None:
+    """Write ``frame`` as the ``<col>=<batch_id>`` partition of
+    ``out_dir``; a replayed epoch replaces its own partition only."""
+    overwrite_partitions(
+        frame.withColumn(col, F.lit(int(batch_id))), out_dir, col
+    )
+
+
+def read_other_epochs(
+    spark, store_dir: str, batch_id: int, col: str = "batch_id"
+) -> DataFrame | None:
+    """Every epoch of an epoch-partitioned store except ``batch_id``'s
+    own — a replayed epoch must never read its own partial output from
+    the crashed attempt. None when the store does not exist yet."""
+    try:
+        return spark.read.parquet(store_dir).filter(
+            F.col(col) != int(batch_id)
+        )
+    except AnalysisException:
+        return None
+
+
+def versioned_state_sink(
+    name: str,
+    table_dir: str,
+    delta: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    guard: bool = True,
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function maintaining a versioned state table:
+    ``delta(batch)`` reduces the micro-batch, ``merge(state, delta)``
+    folds it into the stored state, and the result is committed as the
+    table's next version with the epoch id in a constant ``__epoch``
+    column. An empty batch commits nothing.
+
+    ``guard=True`` is for merges that double-count under replay: the
+    crash-replayed epoch (``batch_id == __epoch``) is skipped, and a
+    batch id BEHIND the stored epoch (a new checkpoint lineage against
+    an existing table) raises. ``guard=False`` is for idempotent merges,
+    where re-applying an epoch is already a no-op.
+    """
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return  # no rows -> no new (identical) version committed
+        spark = batch_df.sparkSession
+        d = delta(batch_df)
+        if current_version(table_dir) is None:
+            out = d
+        else:
+            cur = read_version(spark, table_dir)
+            if guard:
+                last = cur.agg(F.max("__epoch")).first()[0]
+                if last is not None and batch_id == last:
+                    return  # crash-replayed epoch, already applied
+                if last is not None and batch_id < last:
+                    raise ValueError(
+                        f"{name}: batch_id {batch_id} is "
+                        f"behind the table's last applied epoch {last} — "
+                        "a new checkpoint lineage is pointed at an "
+                        "existing state table; use a fresh table_dir (or "
+                        "resume the original checkpoint)"
+                    )
+            out = merge(cur.drop("__epoch"), d)
+        write_version(
+            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
+            table_dir,
+        )
+
+    return apply
+
+
+def drain_available_now(
+    spark,
+    source: str,
+    schema: str,
+    max_files_per_trigger: int,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    fmt: str = "parquet",
+) -> None:
+    """Drain the ``fmt`` (json or parquet) files at ``source`` through
+    ``sink`` with ``Trigger.AvailableNow``, blocking until caught up."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .format(fmt)
+        .load(source)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def idempotent_parquet_sink(
@@ -39,28 +172,7 @@ def idempotent_parquet_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # conf was UNSET before this batch: unset it again rather
-                # than leaving the session pinned to 'dynamic', which would
-                # silently change overwrite semantics for unrelated writes
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        write_epoch(batch_df, out_dir, batch_id)
 
     return write
 
@@ -89,32 +201,11 @@ def quarantine_parquet_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from ..operators.quality import split_by_expectations
 
-        spark = batch_df.sparkSession
         clean, bad = split_by_expectations(batch_df, rules)
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            for frame, target in ((clean, clean_dir), (bad, quarantine_dir)):
-                (
-                    frame.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(target)
-                )
-        finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # conf was UNSET before this batch: unset it again rather
-                # than leaving the session pinned to 'dynamic', which would
-                # silently change overwrite semantics for unrelated writes
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        write_epoch(clean, clean_dir, batch_id)
+        write_epoch(bad, quarantine_dir, batch_id)
 
     return write
 
@@ -146,8 +237,6 @@ def idempotent_jdbc_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
         jvm = spark.sparkContext._jvm
         if driver:

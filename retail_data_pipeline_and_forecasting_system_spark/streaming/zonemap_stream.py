@@ -22,11 +22,9 @@ partition-cardinality-sized (~thousands of rows), each epoch reduces
 only its delta (map-side combined), and the merge is one
 month-keyed full-outer join on a tiny frame.
 
-Replay safety — the manifest_stream/rollup_stream contract: min/max
-merges are idempotent but COUNTS double-apply under replay, so the
-sink stores the last applied epoch id and SKIPS the crash-replayed
-epoch; a batch id BEHIND the stored epoch means a fresh checkpoint
-lineage was pointed at an existing state table and fails loudly.
+Replay safety: min/max merges are idempotent but COUNTS double-apply
+under replay, so the sink runs under ``sinks.versioned_state_sink``'s
+epoch guard (the contract is stated in rollup_stream).
 """
 
 from __future__ import annotations
@@ -34,14 +32,14 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.zonemap import (
     finalize_zone_map,
     merge_zone_states,
     zone_state,
 )
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain_available_now, versioned_state_sink
 
 
 def zone_state_sink(
@@ -55,38 +53,12 @@ def zone_state_sink(
             zone_state_sink(table_dir)
         ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = zone_state(batch_df, **zone_kwargs)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD: counts double-apply under replay, so the
-            # crash-replayed epoch is dropped; an epoch BEHIND the
-            # table is a new checkpoint lineage against an old table —
-            # fail loudly.
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"zone_state_sink: batch_id {batch_id} is behind "
-                    f"the table's last applied epoch {last} — a new "
-                    "checkpoint lineage is pointed at an existing "
-                    "state table; use a fresh table_dir (or resume "
-                    "the original checkpoint)"
-                )
-            out = merge_zone_states(cur.drop("__epoch"), delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return versioned_state_sink(
+        "zone_state_sink",
+        table_dir,
+        lambda b: zone_state(b, **zone_kwargs),
+        merge_zone_states,
+    )
 
 
 def read_zone_map(
@@ -114,17 +86,7 @@ def run_zonemap_ingest(
     """Drain a parquet drop-dir of order rows into the zone-map state
     with ``Trigger.AvailableNow`` (one epoch per file at
     ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            zone_state_sink(table_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_available_now(
+        spark, input_dir, schema, max_files_per_trigger,
+        zone_state_sink(table_dir, **sink_kwargs), checkpoint_dir,
     )

@@ -116,95 +116,6 @@ def test_streaming_matches_batch(spark, gen, tmp_path):
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
 
-def test_transform_with_state_matches_batch(spark, gen, tmp_path):
-    """The Spark 4 transformWithStateInPandas rendition (typed state
-    handles + DISTRIBUTED initial state) produces exactly the batch
-    engine's fulfilled quantities — state-v2 twin of
-    test_streaming_matches_batch, on a 3-day replay.
-
-    Requires protobuf (the state-v2 Python worker speaks proto to the
-    JVM state server); absent from this container, so the test skips —
-    the applyInPandasWithState twin above carries the parity proof."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState needs protobuf"
-    )
-    from retail_data_pipeline_and_forecasting_system_spark.streaming.inventory_stream import (
-        read_transaction_stream,
-        streaming_depletion_tws,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    days = sorted(gen.dir.glob("transactions_*.json"))[:3]
-    for i, f in enumerate(days):
-        dst = in_dir / f.name
-        shutil.copy(f, dst)
-        ts = time.time() - 1000 + i
-        os.utime(dst, (ts, ts))
-
-    products = read_products_csv(spark, str(gen.dir / "products.csv"))
-    initial = products.select(
-        "product_id", F.col("stock").cast("int").alias("stock")
-    )
-
-    lines = read_transaction_stream(
-        spark, str(in_dir / "*.json"), max_files_per_trigger=1
-    )
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # transformWithState requires the RocksDB state store
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            streaming_depletion_tws(lines, initial)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-
-    streamed = (
-        spark.read.parquet(out_dir)
-        .select("transaction_id", "product_id", "line_pos", "quantity")
-        .toPandas()
-        .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
-        .to_dict()
-    )
-
-    names = " ".join(f.name for f in days)
-    raw = read_transactions_json(
-        spark, str(in_dir / "*.json")
-    )
-    batch = (
-        process_lines(
-            explode_transactions(raw), products, process_order="timestamp"
-        )
-        .select("transaction_id", "product_id", "line_pos", "quantity")
-        .toPandas()
-        .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
-        .to_dict()
-    )
-    assert len(streamed) == len(batch) > 0, names
-    diffs = {k for k in batch if streamed.get(k) != batch[k]}
-    assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
-
-
 def _stream_and_batch_in_16_row_chunks(spark, in_dir, products_csv, out):
     """Fulfilled quantity per line, streamed with Arrow batches of 16 rows
     and from the batch engine, over the day files in ``in_dir``."""

@@ -129,6 +129,9 @@ def main() -> None:
             + ", ".join(f"{t:.1f}s" for t in rebuild_times)
         )
     h = EPOCHS // 2
+    if h < 2:
+        print("trend: needs EPOCHS >= 4 (epoch 0 is skipped)")
+        return
     for label, t in results.items():
         first = sum(t[1:h]) / (h - 1)  # skip epoch 0 (init/codegen)
         last = sum(t[h:]) / (EPOCHS - h)
