@@ -253,34 +253,27 @@ def holt_winters_kernel(
     ]
 
 
-def holt_winters_forecast(
+def _per_series_forecast(
     daily: DataFrame,
-    group_col: str = "g",
-    order_col: str = "d",
-    value_col: str = "y",
-    m: int = 7,
-    horizon: int = 14,
-    num_buckets: int = 64,
+    group_col: str,
+    order_col: str,
+    value_col: str,
+    fit,
+    num_buckets: int,
 ) -> DataFrame:
-    """Distributed Holt-Winters over per-group ordered series: one
-    hash-bucketed ``applyInPandas`` (the depletion/packing fold shape —
-    sequential within a group, parallel across groups), emitting
-    ``(group, h, forecast)`` rows. Groups shorter than ``2*m`` are
-    dropped (not enough history to initialize a seasonal model).
-
-    Scale: the recursion runs on the per-group DAILY rollup, so state
-    is (level, trend, m seasonal slots) per group and rows into Python
-    are 2 scalars wide; the fact-table cost is the rollup any daily
-    metric already pays.
-    """
-    import pandas as pd
+    """Run ``fit(ys) -> [(h, forecast)] | None`` over every group's
+    series ordered by ``order_col``: one hash-bucketed ``applyInPandas``
+    (the depletion/packing fold shape — sequential within a group,
+    parallel across groups), emitting ``(group, h, forecast)`` rows.
+    Groups where ``fit`` returns None are dropped."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T_
+
+    from ..operators.bucketed import bucketed_fold
 
     slim = daily.select(
         F.col(group_col), F.col(order_col), F.col(value_col)
     )
-
     out_schema = T_.StructType(
         [
             T_.StructField(
@@ -301,7 +294,7 @@ def holt_winters_forecast(
                 g = None
             ys = [float(v) for v in
                   grp.sort_values(order_col)[value_col].values]
-            fc = holt_winters_kernel(ys, m=m, horizon=horizon)
+            fc = fit(ys)
             if fc is None:
                 continue
             for h, v in fc:
@@ -314,10 +307,34 @@ def holt_winters_forecast(
              "forecast": pd.array([], dtype="float64")}
         )
 
-    from ..operators.bucketed import bucketed_fold
-
     return bucketed_fold(
         slim, group_col, kernel, out_schema, num_buckets=num_buckets
+    )
+
+
+def holt_winters_forecast(
+    daily: DataFrame,
+    group_col: str = "g",
+    order_col: str = "d",
+    value_col: str = "y",
+    m: int = 7,
+    horizon: int = 14,
+    num_buckets: int = 64,
+) -> DataFrame:
+    """Distributed Holt-Winters over per-group ordered series
+    (:func:`holt_winters_kernel` per group), emitting
+    ``(group, h, forecast)`` rows. Groups shorter than ``2*m`` are
+    dropped (not enough history to initialize a seasonal model).
+
+    Scale: the recursion runs on the per-group DAILY rollup, so state
+    is (level, trend, m seasonal slots) per group and rows into Python
+    are 2 scalars wide; the fact-table cost is the rollup any daily
+    metric already pays.
+    """
+    return _per_series_forecast(
+        daily, group_col, order_col, value_col,
+        lambda ys: holt_winters_kernel(ys, m=m, horizon=horizon),
+        num_buckets,
     )
 
 
@@ -362,61 +379,21 @@ def theta_kernel(
 
 
 def theta_forecast(
-    daily: "DataFrame",
+    daily: DataFrame,
     group_col: str = "g",
     order_col: str = "d",
     value_col: str = "y",
     horizon: int = 14,
     num_buckets: int = 64,
-) -> "DataFrame":
+) -> DataFrame:
     """Distributed Theta-method forecast over per-group ordered
-    series — the holt_winters_forecast scaffold (hash-bucketed
-    ``applyInPandas``: sequential within a group, parallel across
-    groups) with :func:`theta_kernel` as the fold. Groups shorter
-    than 3 observations are dropped."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T_
-
-    from ..operators.bucketed import bucketed_fold
-
-    slim = daily.select(
-        F.col(group_col), F.col(order_col), F.col(value_col)
-    )
-    out_schema = T_.StructType(
-        [
-            T_.StructField(
-                group_col, slim.schema[group_col].dataType, True
-            ),
-            T_.StructField("h", T_.IntegerType(), False),
-            T_.StructField("forecast", T_.DoubleType(), False),
-        ]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out: dict[str, list] = {group_col: [], "h": [], "forecast": []}
-        for g, grp in pdf.groupby(group_col, dropna=False, sort=True):
-            if isinstance(g, float) and pd.isna(g):
-                g = None  # see holt_winters_forecast (round-9 review)
-            ys = [
-                float(v)
-                for v in grp.sort_values(order_col)[value_col].values
-            ]
-            fc = theta_kernel(ys, horizon=horizon)
-            if fc is None:
-                continue
-            for h, v in fc:
-                out[group_col].append(g)
-                out["h"].append(h)
-                out["forecast"].append(v)
-        res = pd.DataFrame(out)
-        return res.astype({"h": "int32"}) if len(res) else pd.DataFrame(
-            {group_col: [], "h": pd.array([], dtype="int32"),
-             "forecast": pd.array([], dtype="float64")}
-        )
-
-    return bucketed_fold(
-        slim, group_col, kernel, out_schema, num_buckets=num_buckets
+    series (:func:`theta_kernel` per group), emitting
+    ``(group, h, forecast)`` rows. Groups shorter than 3 observations
+    are dropped."""
+    return _per_series_forecast(
+        daily, group_col, order_col, value_col,
+        lambda ys: theta_kernel(ys, horizon=horizon),
+        num_buckets,
     )
 
 

@@ -151,35 +151,6 @@ def char_shingles(
     return out.distinct() if distinct else out
 
 
-def minhash_signature(shingled: DataFrame, num_hashes: int, id_col: str = "doc_id") -> DataFrame:
-    """Per-doc minhash signature from sliced salted md5s.
-
-    Hash i is the 8-hex-char (32-bit) slice ``i % 4`` of
-    ``md5(str(i // 4) || ':' || shingle)`` — one md5 yields four
-    independent min-wise hashes, so k hashes cost ceil(k/4) md5
-    evaluations per shingle instead of k (md5 dominates; slicing is
-    free). The md5s are materialized in a projection BEFORE the groupBy
-    so each is computed exactly once regardless of aggregate-side CSE.
-    Min over fixed-length hex strings is lexicographic == numeric, and
-    portable across engines. Output: (id, mh_0..mh_{n-1}).
-    """
-    groups = (num_hashes + 3) // 4
-    pre = shingled.select(
-        F.col(id_col),
-        *[
-            F.md5(F.concat(F.lit(f"{g}:"), F.col("shingle"))).alias(f"_h{g}")
-            for g in range(groups)
-        ],
-    )
-    aggs = [
-        F.min(F.substring(F.col(f"_h{i // 4}"), (i % 4) * 8 + 1, 8)).alias(
-            f"mh_{i}"
-        )
-        for i in range(num_hashes)
-    ]
-    return pre.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signature_local(
     df: DataFrame,
     num_hashes: int,
@@ -187,8 +158,11 @@ def minhash_signature_local(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Row-local minhash signatures: same values as
-    :func:`minhash_signature` over exploded shingles, ZERO shuffle.
+    """Row-local minhash signatures, ZERO shuffle. Hash i is the
+    8-hex-char (32-bit) slice ``i % 4`` of ``md5(str(i // 4) || ':' ||
+    shingle)`` — one md5 yields four min-wise hashes — and ``mh_i`` is
+    its minimum over the doc's shingle set: the same value as a
+    ``groupBy(doc).agg(min(...))`` over exploded shingles.
 
     The shingle set is built inside the row (:func:`word_shingle_sets`),
     each salted md5 family is materialized once per row as an array, and

@@ -89,10 +89,7 @@ def _fulfilled_qty(
 def greedy_inventory_depletion(
     lines: DataFrame,
     products: DataFrame,
-    qty_col: str = "qty",
-    stock_col: str = "stock",
     order_cols: tuple[str, ...] = ("timestamp", "transaction_id", "line_pos"),
-    num_buckets: int | None = None,
     reset_col: str | None = None,
     result_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
@@ -101,23 +98,9 @@ def greedy_inventory_depletion(
 
     Parameters
     ----------
-    lines : demand rows; must contain ``product_id``, ``qty_col`` and the
+    lines : demand rows; must contain ``product_id``, ``qty`` and the
         ``order_cols`` that define the (total) processing order.
-    products : one row per product with ``product_id`` and ``stock_col``.
-    num_buckets : parallelism of the grouped-map stage. Products are
-        hash-bucketed so each Arrow batch carries MANY product timelines —
-        per-group pandas/Arrow overhead is amortized (one group per product
-        would pay ~0.2 ms × millions of products), while state stays strictly
-        per-product inside the kernel. Size it ≈ a few × total cores; the
-        default (None) derives min(2 × defaultParallelism, |products|)
-        from the session — scale-adaptive instead of a constant tuned
-        for one machine (r14: the old fixed 128 cost ~8%% extra
-        Arrow/pandas per-group overhead at 32 cores vs 64 buckets,
-        same-JVM A/B at sf0.1), and bounded by the dim cardinality (r15:
-        buckets beyond the distinct-key count buy no parallelism, only
-        overhead — retail's 36-product catalog measured 2.61 -> 2.30 s
-        under 64 -> 36 buckets). Bucket count never changes results —
-        only group-to-task placement.
+    products : one row per product with ``product_id`` and ``stock``.
     reset_col : optional column name; when set, stock resets to the initial
         value at every distinct value of this column (the reference's
         RELOAD_INVENTORY_DAILY mode, src/data_processor.py:53-59: pass the
@@ -142,7 +125,7 @@ def greedy_inventory_depletion(
     # in the reference; dims are small by definition) -> broadcast join, no
     # shuffle of the fact side for the join itself.
     stocked = lines.join(
-        F.broadcast(products.select("product_id", F.col(stock_col).alias("__stock"))),
+        F.broadcast(products.select("product_id", F.col("stock").alias("__stock"))),
         on="product_id",
         how="inner",
     )
@@ -219,7 +202,7 @@ def greedy_inventory_depletion(
                 change[1:] |= vals[1:] != vals[:-1]
             bounds = np.nonzero(change)[0].tolist() + [len(pdf)]
             qty_np = (
-                pdf[qty_col].fillna(-1).to_numpy("int64")
+                pdf["qty"].fillna(-1).to_numpy("int64")
             )  # null -> -1 -> cancel
             stock_all = pdf["__stock"].to_numpy()
             for lo, hi in zip(bounds[:-1], bounds[1:]):
@@ -232,17 +215,20 @@ def greedy_inventory_depletion(
     # sequentially and independently — identical to one-group-per-product.
     from .bucketed import bucketed_fold
 
-    if num_buckets is None:
-        # scale-adaptive default, BOUNDED by the dim's cardinality (r15,
-        # r14 verdict item 5): parallelism can never exceed the number
-        # of distinct products, so buckets beyond that only add
-        # per-group Arrow/pandas and task overhead — measured at 32
-        # cores on the 36-product retail catalog: 2.61 s (64 buckets)
-        # -> 2.30 s (36) best-of-5 same-JVM; a5 (20 k products, cap
-        # never binds) flat. The count is memoized per (session, plan)
-        # — see _dim_count; placement-only, results unchanged.
-        par = lines.sparkSession.sparkContext.defaultParallelism
-        num_buckets = max(1, min(2 * par, _dim_count(products)))
+    # Products are hash-bucketed so each Arrow batch carries MANY product
+    # timelines: per-group pandas/Arrow overhead is amortized (one group
+    # per product would pay ~0.2 ms x millions of products), while state
+    # stays strictly per-product inside the kernel. The count is
+    # 2 x defaultParallelism, BOUNDED by the dim's cardinality (r15, r14
+    # verdict item 5): buckets beyond the distinct-product count only add
+    # per-group Arrow/pandas and task overhead — measured at 32 cores on
+    # the 36-product retail catalog: 2.61 s (64 buckets) -> 2.30 s (36)
+    # best-of-5 same-JVM; a5 (20 k products, cap never binds) flat; the
+    # old fixed 128 cost ~8% over 64 at sf0.1 (r14). The count is
+    # memoized per (session, plan) — see _dim_count; placement only,
+    # results unchanged.
+    par = lines.sparkSession.sparkContext.defaultParallelism
+    num_buckets = max(1, min(2 * par, _dim_count(products)))
     return bucketed_fold(
         stocked, "product_id", deplete, out_schema, num_buckets=num_buckets
     )

@@ -4,7 +4,7 @@ No codec library ships in this environment (no PIL/ffmpeg), but PNG is
 zlib + struct + per-scanline unfiltering and PPM is a text header over
 raw bytes — both decodable with the standard library alone. This module
 is the real body behind :func:`operators.multimodal.decode_media_real`
-and the format-sniffing branch of ``_decode_batch``.
+and the format-sniffing branch of :func:`operators.multimodal.decode_media`.
 
 Supported:
 

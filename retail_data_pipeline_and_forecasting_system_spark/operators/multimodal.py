@@ -1,12 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through Spark as ``binary`` columns with struct
-metadata. The *plumbing* — schema, Arrow batch shape, ``mapInPandas``
-signature, partitioning — is real and tested, and IMAGE decode is real
-too: a stdlib-only PNG/PPM/PGM codec (:mod:`operators.imagecodec` —
-zlib + struct + scanline unfiltering; no PIL in this container) behind
-format sniffing in ``_decode_batch`` and the full
-:func:`decode_media_real` path. AUDIO decode is real too
+metadata. IMAGE decode is real: a stdlib-only PNG/PPM/PGM codec
+(:mod:`operators.imagecodec` — zlib + struct + scanline unfiltering; no
+PIL in this container) behind format sniffing in :func:`decode_media`
+and the full :func:`decode_media_real` path. AUDIO decode is real too
 (:func:`decode_audio_real` over :mod:`operators.audiocodec` — RIFF
 chunk walk, 8/16-bit PCM) and VIDEO via the stdlib Y4M codec
 (:func:`sample_frames_real` over :mod:`operators.videocodec`). Payloads
@@ -15,21 +13,133 @@ compressed codecs that genuinely need ffmpeg) keep a deterministic
 stub: a pure function of the bytes, so tests and SQL oracles verify
 the pipeline end-to-end.
 
+Every operator here is one partition-local ``mapInPandas`` (streaming
+Arrow batches, no grouping, no shuffle) built by :func:`_map_payloads`,
+which owns the whole contract:
+
+- Columns in: ``doc_id`` and ``payload`` (binary). The operator gives
+  one per-payload call, ``bytes -> iterable of rows``, each row holding
+  the output columns after ``doc_id`` in schema order. A payload may
+  yield no rows or several; ``doc_id`` passes through onto each.
+- Failure policy: a ``ValueError`` from the per-payload call re-raises
+  under ``strict=True``; otherwise the payload yields ONE quarantine
+  row, NULL in every column except ``doc_id`` and the operator's fixed
+  values (``n_bytes`` for the two decoders, ``frame_idx`` 0 for the two
+  frame samplers). A 100 TB corpus quarantines bad payloads, it does not
+  die on one; corrupt and empty stay distinguishable.
+- Dtypes: each output column's pandas dtype is derived once from the
+  output ``StructType`` (integers as ``Int32``/``Int64``, nullable or
+  not as declared; doubles as ``float64``), so a NULL stays NULL and an
+  integer stays an integer on the way into Arrow.
+
+Test corpora come from :func:`_synthesize`: id -> one genuinely encoded
+payload, partition-local the same way.
+
 At scale: binary payloads dominate partition size, so the reader should cap
-``spark.sql.files.maxPartitionBytes`` and the decode stage is a
-``mapInPandas`` (streaming batches, no group materialization) — one pass,
-no shuffle, CPU-bound; exactly the shape a real decoder (PIL/ffmpeg) slots
-into by replacing ``_decode_batch``'s body.
+``spark.sql.files.maxPartitionBytes``; the decode stage is one pass, no
+shuffle, CPU-bound — exactly the shape a real decoder (PIL/ffmpeg) slots
+into by replacing one per-payload call.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+import math
+from typing import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import audiocodec, imagecodec, videocodec
+
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+_INT_BITS = {T.IntegerType: 32, T.LongType: 64}
+
+
+def _pandas_dtypes(schema: T.StructType) -> dict[str, str]:
+    """pandas dtype of every integer and double column after ``doc_id``;
+    string and binary columns stay ``object``."""
+    dtypes = {}
+    for f in schema.fields[1:]:
+        kind = type(f.dataType)
+        if kind in _INT_BITS:
+            prefix = "Int" if f.nullable else "int"
+            dtypes[f.name] = f"{prefix}{_INT_BITS[kind]}"
+        elif kind is T.DoubleType:
+            dtypes[f.name] = "float64"
+    return dtypes
+
+
+def _map_payloads(
+    df: DataFrame,
+    schema: T.StructType,
+    per_payload: Callable[[bytes], Iterable[tuple]],
+    strict: bool = False,
+    quarantine: Callable[[bytes], dict] | None = None,
+) -> DataFrame:
+    """The one ``mapInPandas`` driver behind every operator in this
+    module (contract in the module docstring). ``quarantine(payload)``
+    names the non-NULL columns of a failed payload's row."""
+    names = schema.names
+    dtypes = _pandas_dtypes(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            rows = []
+            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
+                data = bytes(payload)
+                try:
+                    out = list(per_payload(data))
+                except ValueError:
+                    if strict:
+                        raise
+                    fixed = quarantine(data) if quarantine else {}
+                    out = [tuple(fixed.get(n) for n in names[1:])]
+                rows.extend((doc_id, *row) for row in out)
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    n: pd.Series(c, dtype=dtypes.get(n))
+                    for n, c in zip(names, cols)
+                }
+            )
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _synthesize(
+    df: DataFrame, id_col: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """Test-corpus builder: each id in ``id_col`` becomes the payload
+    ``encode(id)`` — (doc_id, payload) rows, mirroring a real payload
+    fetch (id -> bytes)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            ids = batch[id_col].astype("int64")
+            yield pd.DataFrame(
+                {"doc_id": ids, "payload": [encode(int(i)) for i in ids]}
+            )
+
+    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+
+
+def _keep_n_bytes(data: bytes) -> dict:
+    return {"n_bytes": len(data)}
+
+
+def _first_frame(data: bytes) -> dict:
+    return {"frame_idx": 0}
+
 
 DECODED_SCHEMA = T.StructType(
     [
@@ -42,47 +152,23 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def _fake_dims(n_bytes: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Deterministic stand-in for decoded media dimensions."""
+def _fake_dims(n_bytes):
+    """Deterministic stand-in for decoded media dimensions (an int or a
+    pandas Series of byte counts)."""
     width = 16 + (n_bytes % 617)
     height = 16 + ((n_bytes * 31) % 469)
     return width, height
 
 
-def _decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
-    """The codec slot: REAL stdlib decode (PNG/PPM/PGM via
-    operators.imagecodec — zlib + struct, all filter types, CRC-checked)
-    behind format sniffing; payloads that aren't a supported image (the
-    synthetic text-bytes rows) keep the deterministic stub dims so the
-    SQL oracles stay exact."""
-    import hashlib
-
-    from . import imagecodec
-
-    n_bytes = batch["payload"].map(len)
-    width, height = _fake_dims(n_bytes)
-    width, height = list(width), list(height)
-    for i, payload in enumerate(batch["payload"]):
-        if imagecodec.sniff_format(bytes(payload)) is not None:
-            try:
-                img = imagecodec.decode_image(bytes(payload))
-            except ValueError:
-                # Sniffed like an image but didn't decode (corrupt body,
-                # unsupported variant): keep the stub dims — mirrors
-                # decode_media_real's quarantine; never kill the job.
-                continue
-            width[i], height[i] = img.width, img.height
-    return pd.DataFrame(
-        {
-            "doc_id": batch["doc_id"],
-            "n_bytes": n_bytes.astype("int32"),
-            "content_md5": batch["payload"].map(
-                lambda b: hashlib.md5(bytes(b)).hexdigest()
-            ),
-            "width": pd.Series(width, index=batch.index).astype("int32"),
-            "height": pd.Series(height, index=batch.index).astype("int32"),
-        }
-    )
+def _stub_decoded(data: bytes) -> dict:
+    n = len(data)
+    width, height = _fake_dims(n)
+    return {
+        "n_bytes": n,
+        "content_md5": hashlib.md5(data).hexdigest(),
+        "width": width,
+        "height": height,
+    }
 
 
 def read_binary_files(spark, path_glob: str) -> DataFrame:
@@ -113,17 +199,25 @@ def attach_binary_payload(
 
 
 def decode_media(df: DataFrame) -> DataFrame:
-    """binary payload -> typed metadata via Arrow-batched mapInPandas.
+    """binary payload -> (n_bytes, content_md5, width, height).
 
-    ``mapInPandas`` (not applyInPandas): no grouping, no shuffle — batches
-    stream through the decoder partition-local.
+    The codec slot: a payload that sniffs as PNG/PPM/PGM gets its TRUE
+    dims from the stdlib decoder (all filter types, CRC-checked); any
+    other payload (the synthetic text-bytes rows) keeps the
+    deterministic :func:`_fake_dims` stub so the SQL oracles stay exact.
+    A payload that sniffs like an image but does not decode (corrupt
+    body, unsupported variant) quarantines to the same stub row — it
+    never kills the job.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            yield _decode_batch(batch)
+    def decode(data: bytes):
+        if imagecodec.sniff_format(data) is None:
+            return [tuple(_stub_decoded(data).values())]
+        img = imagecodec.decode_image(data)
+        md5 = hashlib.md5(data).hexdigest()
+        return [(len(data), md5, img.width, img.height)]
 
-    return df.mapInPandas(run, schema=DECODED_SCHEMA)
+    return _map_payloads(df, DECODED_SCHEMA, decode, quarantine=_stub_decoded)
 
 
 REAL_DECODED_SCHEMA = T.StructType(
@@ -148,54 +242,21 @@ def decode_media_real(df: DataFrame, strict: bool = False) -> DataFrame:
     prove the decode actually ran: ``pixel_md5`` (md5 of the raw decoded
     pixel bytes — filter-independent, so the same image encoded with
     different PNG filters hashes identically) and ``mean_luma`` (mean of
-    all samples, double). Non-image / unsupported payloads yield NULL
-    metadata rows (``format`` NULL) unless ``strict=True``, which
-    re-raises — a 100 TB corpus must quarantine bad payloads, not die.
-
-    Same plumbing as :func:`decode_media`: partition-local Arrow-batched
-    mapInPandas, no shuffle.
+    all samples, double). Non-image / unsupported payloads quarantine
+    (``format`` NULL, ``n_bytes`` kept).
     """
-    import hashlib
 
-    from . import imagecodec
+    def decode(data: bytes):
+        img = imagecodec.decode_image(data)
+        px = img.pixels
+        yield (
+            len(data), img.format, img.width, img.height, img.channels,
+            hashlib.md5(px).hexdigest(), sum(px) / len(px) if px else None,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in REAL_DECODED_SCHEMA}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                data = bytes(payload)
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(data))
-                try:
-                    img = imagecodec.decode_image(data)
-                except ValueError:
-                    if strict:
-                        raise
-                    for k in (
-                        "format", "width", "height", "channels",
-                        "pixel_md5", "mean_luma",
-                    ):
-                        out[k].append(None)
-                    continue
-                out["format"].append(img.format)
-                out["width"].append(img.width)
-                out["height"].append(img.height)
-                out["channels"].append(img.channels)
-                out["pixel_md5"].append(hashlib.md5(img.pixels).hexdigest())
-                out["mean_luma"].append(
-                    sum(img.pixels) / len(img.pixels) if img.pixels else None
-                )
-            yield pd.DataFrame(out).astype(
-                {
-                    "n_bytes": "int32",
-                    "width": "Int32",
-                    "height": "Int32",
-                    "channels": "Int32",
-                    "mean_luma": "float64",
-                }
-            )
-
-    return df.mapInPandas(run, schema=REAL_DECODED_SCHEMA)
+    return _map_payloads(
+        df, REAL_DECODED_SCHEMA, decode, strict, quarantine=_keep_n_bytes
+    )
 
 
 AUDIO_SCHEMA = T.StructType(
@@ -217,8 +278,7 @@ AUDIO_SCHEMA = T.StructType(
 def decode_audio_real(df: DataFrame, strict: bool = False) -> DataFrame:
     """REAL audio decode path — stdlib RIFF/WAVE PCM codec
     (:mod:`operators.audiocodec`), no external library; the audio twin of
-    :func:`decode_media_real` with the identical sniff→decode→quarantine
-    contract.
+    :func:`decode_media_real`.
 
     Emits per-clip typed metadata plus two sample-derived columns that
     prove the decode actually ran: ``pcm_md5`` (md5 of the raw data-chunk
@@ -226,62 +286,25 @@ def decode_audio_real(df: DataFrame, strict: bool = False) -> DataFrame:
     headers/JUNK chunks) and ``mean_amp`` (mean of all decoded samples,
     centred — 8-bit WAV's unsigned+128-bias handled by
     :func:`audiocodec.samples_int`). Non-WAV / corrupt / unsupported
-    payloads yield NULL metadata rows (``format`` NULL) unless
-    ``strict=True`` — a 100 TB corpus quarantines bad payloads, never dies.
-
-    Same plumbing as :func:`decode_media_real`: partition-local
-    Arrow-batched mapInPandas, zero shuffle.
+    payloads quarantine (``format`` NULL, ``n_bytes`` kept).
     """
-    import hashlib
 
-    from . import audiocodec
+    def decode(data: bytes):
+        audio = audiocodec.decode_audio(data)
+        samples = audiocodec.samples_int(audio)
+        yield (
+            len(data), "wav", audio.sample_rate, audio.channels,
+            audio.bit_depth, audio.n_samples,
+            # raw IEEE division (no round): bit-identical in any
+            # engine computing n*1000.0/rate as doubles — rule 2
+            audio.n_samples * 1000.0 / audio.sample_rate,
+            hashlib.md5(audio.pcm).hexdigest(),
+            sum(samples) / len(samples) if samples else None,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in AUDIO_SCHEMA}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                data = bytes(payload)
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(data))
-                try:
-                    audio = audiocodec.decode_audio(data)
-                except ValueError:
-                    if strict:
-                        raise
-                    for k in (
-                        "format", "sample_rate", "channels", "bit_depth",
-                        "n_samples", "duration_ms", "pcm_md5", "mean_amp",
-                    ):
-                        out[k].append(None)
-                    continue
-                samples = audiocodec.samples_int(audio)
-                out["format"].append("wav")
-                out["sample_rate"].append(audio.sample_rate)
-                out["channels"].append(audio.channels)
-                out["bit_depth"].append(audio.bit_depth)
-                out["n_samples"].append(audio.n_samples)
-                # raw IEEE division (no round): bit-identical in any
-                # engine computing n*1000.0/rate as doubles — rule 2
-                out["duration_ms"].append(
-                    audio.n_samples * 1000.0 / audio.sample_rate
-                )
-                out["pcm_md5"].append(hashlib.md5(audio.pcm).hexdigest())
-                out["mean_amp"].append(
-                    sum(samples) / len(samples) if samples else None
-                )
-            yield pd.DataFrame(out).astype(
-                {
-                    "n_bytes": "int32",
-                    "sample_rate": "Int32",
-                    "channels": "Int32",
-                    "bit_depth": "Int32",
-                    "n_samples": "Int64",
-                    "duration_ms": "float64",
-                    "mean_amp": "float64",
-                }
-            )
-
-    return df.mapInPandas(run, schema=AUDIO_SCHEMA)
+    return _map_payloads(
+        df, AUDIO_SCHEMA, decode, strict, quarantine=_keep_n_bytes
+    )
 
 
 def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -295,38 +318,18 @@ def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     chunk walk (incl. the pad byte) rather than a fixed 44-byte-header
     assumption — and the junk never changes the decoded output, which
     is what keeps the oracle closed-form.
-
-    Partition-local mapInPandas, no shuffle; mirrors a real payload
-    fetch (id -> bytes).
     """
-    from .audiocodec import encode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                n, v = int(16 + i % 37), int(32 + i % 95)
-                payloads.append(
-                    encode_wav(
-                        bytes([v]) * n,
-                        sample_rate=int(8000 + 1000 * (i % 5)),
-                        bit_depth=8,
-                        channels=1,
-                        junk_chunk=(i % 3 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        return audiocodec.encode_wav(
+            bytes([32 + i % 95]) * (16 + i % 37),
+            sample_rate=8000 + 1000 * (i % 5),
+            bit_depth=8,
+            channels=1,
+            junk_chunk=(i % 3 == 0),
+        )
 
-    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
-
-
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -337,24 +340,15 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     same pixel bytes via ``repeat(chr(v), n)``). Decoding these through
     :func:`decode_media_real` closes a real compress->decompress->
     unfilter loop on the executors — not a stub.
-
-    Partition-local mapInPandas, no shuffle; mirrors the shape of a real
-    payload fetch (id -> bytes).
     """
-    from .imagecodec import encode_png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h, v = int(4 + i % 13), int(3 + i % 11), int(32 + i % 95)
-                payloads.append(
-                    encode_png(w, h, 1, bytes([v]) * (w * h), filter_type=4)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 11
+        return imagecodec.encode_png(
+            w, h, 1, bytes([32 + i % 95]) * (w * h), filter_type=4
+        )
 
-    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -388,66 +382,39 @@ FEATURES_SCHEMA = T.StructType(
 def resize_media(df: DataFrame, target: int = 224) -> DataFrame:
     """Aspect-preserving resize to ``target`` on the long edge (stub codec
     — dimension math only, declared-dims in, no pixel access; the REAL
-    pixel path is :func:`resize_media_real`).
-
-    Same plumbing contract as :func:`decode_media`: partition-local
-    mapInPandas, no shuffle. Scale factor and floor are plain IEEE
-    double ops so the SQL oracle reproduces them bit-for-bit.
+    pixel path is :func:`resize_media_real`). Scale factor and floor are
+    plain IEEE double ops so the SQL oracle reproduces them bit-for-bit.
     """
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_bytes = batch["payload"].map(len)
-            width, height = _fake_dims(n_bytes)
-            long_edge = np.maximum(width, height).astype("float64")
-            scale = float(target) / long_edge
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "width": width.astype("int32"),
-                    "height": height.astype("int32"),
-                    "rs_width": np.floor(width * scale).astype("int32"),
-                    "rs_height": np.floor(height * scale).astype("int32"),
-                }
-            )
+    def resize(data: bytes):
+        width, height = _fake_dims(len(data))
+        scale = float(target) / max(width, height)
+        yield (
+            width, height,
+            math.floor(width * scale), math.floor(height * scale),
+        )
 
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _map_payloads(df, RESIZED_SCHEMA, resize)
 
 
 def sample_frames(df: DataFrame, max_frames: int = 4) -> DataFrame:
     """Evenly-spaced frame sampling from a (stub) video payload.
 
-    One input row fans out to ``1 + n_bytes % max_frames`` frame rows —
-    mapInPandas is a generator over batches, so the fan-out never
-    materializes a whole group (unlike explode-after-collect designs).
-    The stub treats 1 payload byte = 1 ms of video; a real sampler would
-    call ffmpeg per batch with the same (doc_id, frame_idx, ts_ms) shape.
+    One input row fans out to ``1 + n_bytes % max_frames`` frame rows
+    inside the batch generator, so the fan-out never materializes a
+    whole group (unlike explode-after-collect designs). The stub treats
+    1 payload byte = 1 ms of video; a real sampler would call ffmpeg per
+    payload with the same (doc_id, frame_idx, ts_ms) shape.
     """
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "frame_idx": [],
-                "ts_ms": [],
-                "frame_md5": [],
-            }
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                n_bytes = len(payload)
-                n_frames = 1 + (n_bytes % max_frames)
-                step = n_bytes // n_frames
-                for i in range(n_frames):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(i * step)
-                    out["frame_md5"].append(
-                        hashlib.md5(bytes(payload) + f":{i}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def frames(data: bytes):
+        n_frames = 1 + len(data) % max_frames
+        step = len(data) // n_frames
+        for i in range(n_frames):
+            md5 = hashlib.md5(data + f":{i}".encode()).hexdigest()
+            yield i, i * step, md5
 
-    return df.mapInPandas(run, schema=FRAMES_SCHEMA)
+    return _map_payloads(df, FRAMES_SCHEMA, frames)
 
 
 FRAMES_REAL_SCHEMA = T.StructType(
@@ -469,8 +436,7 @@ def sample_frames_real(
 ) -> DataFrame:
     """REAL video frame sampling — stdlib Y4M codec
     (:mod:`operators.videocodec`), no ffmpeg; the video twin of
-    :func:`decode_media_real` with the same sniff→decode→quarantine
-    contract.
+    :func:`decode_media_real`.
 
     Decodes the stream's true frame count, selects up to ``max_frames``
     evenly-spaced frames (``floor(j * n / max_frames)``), and emits per
@@ -478,63 +444,27 @@ def sample_frames_real(
     stream's fps (``idx * 1000 * fps_den // fps_num`` ms, exact integer
     math), ``frame_md5`` (md5 of the decoded LUMA plane — proves the
     planar slicing ran) and ``mean_luma``. Non-Y4M / corrupt payloads
-    yield ONE quarantine row (``frame_idx`` 0, ``n_frames`` NULL) unless
-    ``strict=True`` — bad payloads must be visible, not job-fatal.
-
-    Same plumbing as :func:`sample_frames`: the fan-out happens inside
-    streaming Arrow batches — partition-local mapInPandas, no shuffle,
-    no group materialization.
+    yield ONE quarantine row (``frame_idx`` 0, ``n_frames`` NULL).
     """
-    import hashlib
 
-    from . import videocodec
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in FRAMES_REAL_SCHEMA}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                try:
-                    vid = videocodec.decode_y4m(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(0)
-                    for k in (
-                        "n_frames", "width", "height", "ts_ms",
-                        "frame_md5", "mean_luma",
-                    ):
-                        out[k].append(None)
-                    continue
-                n = vid.n_frames
-                if n <= max_frames:
-                    picks = range(n)
-                else:
-                    picks = [j * n // max_frames for j in range(max_frames)]
-                for idx in picks:
-                    y = vid.y_plane(idx)
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(idx)
-                    out["n_frames"].append(n)
-                    out["width"].append(vid.width)
-                    out["height"].append(vid.height)
-                    out["ts_ms"].append(
-                        idx * 1000 * vid.fps_den // vid.fps_num
-                    )
-                    out["frame_md5"].append(hashlib.md5(y).hexdigest())
-                    out["mean_luma"].append(sum(y) / len(y) if y else None)
-            yield pd.DataFrame(out).astype(
-                {
-                    "frame_idx": "int32",
-                    "n_frames": "Int32",
-                    "width": "Int32",
-                    "height": "Int32",
-                    "ts_ms": "Int64",
-                    "mean_luma": "float64",
-                }
+    def frames(data: bytes):
+        vid = videocodec.decode_y4m(data)
+        n = vid.n_frames
+        if n <= max_frames:
+            picks = range(n)
+        else:
+            picks = [j * n // max_frames for j in range(max_frames)]
+        for idx in picks:
+            y = vid.y_plane(idx)
+            yield (
+                idx, n, vid.width, vid.height,
+                idx * 1000 * vid.fps_den // vid.fps_num,
+                hashlib.md5(y).hexdigest(), sum(y) / len(y) if y else None,
             )
 
-    return df.mapInPandas(run, schema=FRAMES_REAL_SCHEMA)
+    return _map_payloads(
+        df, FRAMES_REAL_SCHEMA, frames, strict, quarantine=_first_frame
+    )
 
 
 def synthesize_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -547,29 +477,18 @@ def synthesize_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     are neutral 128 and deliberately excluded from the hash). Each FRAME
     line carries an ``Xsynth`` parameter so decoding the corpus proves
     per-frame-parameter tolerance, not a bare-marker assumption.
-
-    Partition-local mapInPandas, no shuffle.
     """
-    from .videocodec import encode_y4m
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(2 * (2 + i % 4)), int(2 * (1 + i % 3))
-                frames = [
-                    bytes([int(32 + (i + 7 * k) % 95)]) * (w * h)
-                    for k in range(int(1 + i % 6))
-                ]
-                payloads.append(
-                    encode_y4m(
-                        w, h, frames, fps=(25, 1), frame_param=b" Xsynth"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        w, h = 2 * (2 + i % 4), 2 * (1 + i % 3)
+        frames = [
+            bytes([32 + (i + 7 * k) % 95]) * (w * h) for k in range(1 + i % 6)
+        ]
+        return videocodec.encode_y4m(
+            w, h, frames, fps=(25, 1), frame_param=b" Xsynth"
+        )
 
-    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def extract_features(df: DataFrame, dims: int = 8) -> DataFrame:
@@ -583,20 +502,13 @@ def extract_features(df: DataFrame, dims: int = 8) -> DataFrame:
     headaches and writes to columnar storage efficiently. The REAL
     decoded-pixel statistics path is :func:`extract_features_real`.
     """
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {"doc_id": [], "dim_idx": [], "feat": []}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                hx = hashlib.md5(bytes(payload)).hexdigest()
-                for i in range(1, dims + 1):
-                    out["doc_id"].append(doc_id)
-                    out["dim_idx"].append(i)
-                    out["feat"].append(int(hx[i - 1], 16))
-            yield pd.DataFrame(out)
+    def features(data: bytes):
+        hx = hashlib.md5(data).hexdigest()
+        for i in range(1, dims + 1):
+            yield i, int(hx[i - 1], 16)
 
-    return df.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return _map_payloads(df, FEATURES_SCHEMA, features)
 
 
 AUDIO_FRAMES_SCHEMA = T.StructType(
@@ -624,62 +536,29 @@ def audio_frame_features(
     and mean amplitude. Multi-channel clips are framed on the
     interleaved stream (callers wanting per-channel features split
     first). Non-WAV / corrupt payloads yield one quarantine row
-    (``frame_idx`` 0, ``n_frames`` NULL) unless ``strict=True``.
-
-    Same plumbing as every codec stage here: partition-local
-    Arrow-batched mapInPandas, zero shuffle; a real mel/MFCC extractor
-    replaces the numpy kernel inside the same batch iterator.
+    (``frame_idx`` 0, ``n_frames`` NULL). A real mel/MFCC extractor
+    replaces the numpy kernel.
     """
-    import numpy as np
 
-    from . import audiocodec
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in AUDIO_FRAMES_SCHEMA}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                try:
-                    audio = audiocodec.decode_audio(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(0)
-                    for k in ("n_frames", "rms", "zcr", "mean_amp"):
-                        out[k].append(None)
-                    continue
-                x = np.asarray(audiocodec.samples_int(audio), dtype="float64")
-                n_frames = max(0, (len(x) - frame) // hop + 1)
-                if n_frames == 0:
-                    # a VALID clip shorter than one window must stay
-                    # visible (n_frames 0), not vanish — else short
-                    # clips are indistinguishable from never-ingested
-                    # docs downstream (round-7 review finding)
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(0)
-                    out["n_frames"].append(0)
-                    for k in ("rms", "zcr", "mean_amp"):
-                        out[k].append(None)
-                    continue
-                for k in range(n_frames):
-                    w = x[k * hop : k * hop + frame]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(k)
-                    out["n_frames"].append(n_frames)
-                    out["rms"].append(float(np.sqrt(np.mean(w * w))))
-                    out["zcr"].append(int(np.sum(w[1:] * w[:-1] < 0)))
-                    out["mean_amp"].append(float(np.mean(w)))
-            yield pd.DataFrame(out).astype(
-                {
-                    "frame_idx": "int32",
-                    "n_frames": "Int32",
-                    "rms": "float64",
-                    "zcr": "Int32",
-                    "mean_amp": "float64",
-                }
+    def frames(data: bytes):
+        audio = audiocodec.decode_audio(data)
+        x = np.asarray(audiocodec.samples_int(audio), dtype="float64")
+        n_frames = max(0, (len(x) - frame) // hop + 1)
+        if n_frames == 0:
+            # a VALID clip shorter than one window must stay visible
+            # (n_frames 0), not vanish — else short clips are
+            # indistinguishable from never-ingested docs downstream
+            yield 0, 0, None, None, None
+        for k in range(n_frames):
+            w = x[k * hop : k * hop + frame]
+            yield (
+                k, n_frames, float(np.sqrt(np.mean(w * w))),
+                int(np.sum(w[1:] * w[:-1] < 0)), float(np.mean(w)),
             )
 
-    return df.mapInPandas(run, schema=AUDIO_FRAMES_SCHEMA)
+    return _map_payloads(
+        df, AUDIO_FRAMES_SCHEMA, frames, strict, quarantine=_first_frame
+    )
 
 
 def synthesize_square_wav_payloads(
@@ -695,26 +574,26 @@ def synthesize_square_wav_payloads(
     can state them without decoding anything, while the engine path
     genuinely decodes, centres, and frames real bytes.
     """
-    from .audiocodec import encode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                n = 16 * int(1 + i % 4)
-                p = 2 ** int(1 + i % 3)
-                v = int(1 + i % 90)
-                pcm = bytes(
-                    128 + v if (j % p) < p // 2 else 128 - v
-                    for j in range(n)
-                )
-                payloads.append(
-                    encode_wav(pcm, sample_rate=8000, bit_depth=8, channels=1)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        p, v = 2 ** (1 + i % 3), 1 + i % 90
+        pcm = bytes(
+            128 + v if (j % p) < p // 2 else 128 - v
+            for j in range(16 * (1 + i % 4))
+        )
+        return audiocodec.encode_wav(
+            pcm, sample_rate=8000, bit_depth=8, channels=1
+        )
 
-    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return _synthesize(df, id_col, encode)
+
+
+def _gradient_png(i: int, phase: int = 0) -> bytes:
+    """The ``(4 + i%13) x (3 + i%11)`` Paeth-filtered gradient PNG with
+    ``pixel(x, y) = 32 + (x + 3*y + phase) % 95``."""
+    w, h = 4 + i % 13, 3 + i % 11
+    px = bytes(32 + (x + 3 * y + phase) % 95 for y in range(h) for x in range(w))
+    return imagecodec.encode_png(w, h, 1, px, filter_type=4)
 
 
 def synthesize_gradient_png_payloads(
@@ -733,44 +612,16 @@ def synthesize_gradient_png_payloads(
     varies per id and content-grouping operators have real work. Paeth
     filtering over a gradient exercises the decoder's unfilter path on
     non-trivial predictors.
-
-    Partition-local mapInPandas, no shuffle.
     """
-    from .imagecodec import encode_png
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(4 + i % 13), int(3 + i % 11)
-                phase = int(i) if per_id_phase else 0
-                px = bytes(
-                    32 + (x + 3 * y + phase) % 95
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(encode_png(w, h, 1, px, filter_type=4))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
-
-
-def _quarantine(out: dict[str, list], fields: tuple[str, ...]) -> None:
-    """Append one NULL quarantine row (all ``fields`` None) — the
-    shared decode-failure path of the real-pixel operators; deriving
-    the field list at the call site from the op's schema keeps the
-    NULL row aligned with schema changes by construction."""
-    for k in fields:
-        out[k].append(None)
+    return _synthesize(
+        df, id_col, lambda i: _gradient_png(i, i if per_id_phase else 0)
+    )
 
 
 def _nn_indices(out_n: int, src_n: int):
     """All-integer nearest-neighbor source indices for ``out_n``
     samples over a ``src_n``-long axis: ``idx[k] = (k*src_n)//out_n``
     — the exactly-oracle-able gather shared by resize and dHash."""
-    import numpy as np
-
     return (np.arange(out_n, dtype=np.int64) * src_n) // out_n
 
 
@@ -804,63 +655,25 @@ def resize_media_real(
     (long edge lands on ``target`` exactly when it divides), source
     index ``src[j] = (j * src_dim) // out_dim`` — the classic
     floor-NN mapping, upsample and downsample alike. Non-image /
-    unsupported payloads yield one quarantine row (NULL metadata)
-    unless ``strict=True``.
-
-    Same plumbing as :func:`decode_media_real`: partition-local
-    Arrow-batched mapInPandas, ZERO shuffle — resize is per-row CPU
-    work; a real box/Lanczos kernel replaces the numpy gather inside
-    the same batch iterator.
+    unsupported payloads quarantine (NULL row). A real box/Lanczos
+    kernel replaces the numpy gather.
     """
-    import hashlib
 
-    import numpy as np
+    def resize(data: bytes):
+        img = imagecodec.decode_image(data)
+        w, h, c = img.width, img.height, img.channels
+        long_edge = max(w, h)
+        rw = max(1, (w * target) // long_edge)
+        rh = max(1, (h * target) // long_edge)
+        arr = np.frombuffer(img.pixels, dtype=np.uint8).reshape(h, w, c)
+        rs = arr[_nn_indices(rh, h)][:, _nn_indices(rw, w)]
+        rs_bytes = rs.tobytes()
+        yield (
+            w, h, rw, rh, hashlib.md5(rs_bytes).hexdigest(),
+            float(int(rs.sum(dtype=np.int64))) / len(rs_bytes),
+        )
 
-    from . import imagecodec
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in RESIZED_REAL_SCHEMA}
-            nullable = tuple(
-                f.name for f in RESIZED_REAL_SCHEMA if f.name != "doc_id"
-            )
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                out["doc_id"].append(doc_id)
-                try:
-                    img = imagecodec.decode_image(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    _quarantine(out, nullable)
-                    continue
-                w, h, c = img.width, img.height, img.channels
-                long_edge = max(w, h)
-                rw = max(1, (w * target) // long_edge)
-                rh = max(1, (h * target) // long_edge)
-                arr = np.frombuffer(img.pixels, dtype=np.uint8).reshape(
-                    h, w, c
-                )
-                rs = arr[_nn_indices(rh, h)][:, _nn_indices(rw, w)]
-                rs_bytes = rs.tobytes()
-                out["width"].append(w)
-                out["height"].append(h)
-                out["rs_width"].append(rw)
-                out["rs_height"].append(rh)
-                out["resized_md5"].append(hashlib.md5(rs_bytes).hexdigest())
-                out["rs_mean_luma"].append(
-                    float(int(rs.sum(dtype=np.int64))) / len(rs_bytes)
-                )
-            yield pd.DataFrame(out).astype(
-                {
-                    "width": "Int32",
-                    "height": "Int32",
-                    "rs_width": "Int32",
-                    "rs_height": "Int32",
-                    "rs_mean_luma": "float64",
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZED_REAL_SCHEMA)
+    return _map_payloads(df, RESIZED_REAL_SCHEMA, resize, strict)
 
 
 VISUAL_FEATURES_SCHEMA = T.StructType(
@@ -896,67 +709,26 @@ def extract_features_real(
     grayscale, R for RGB) keeps the metric integer-exact; callers
     wanting true luma convert first. ``mean_px`` is one raw IEEE
     division of integer sum by integer count — bit-identical in any
-    engine. Non-image payloads quarantine (NULL row) unless
-    ``strict=True``.
-
-    Partition-local Arrow-batched mapInPandas, ZERO shuffle; the numpy
-    diff kernel is the slot a real feature extractor (CLIP embed)
-    fills with the same batch shape.
+    engine. Non-image payloads quarantine (NULL row). The numpy diff
+    kernel is the slot a real feature extractor (CLIP embed) fills.
     """
-    import numpy as np
 
-    from . import imagecodec
+    def features(data: bytes):
+        img = imagecodec.decode_image(data)
+        arr = np.frombuffer(img.pixels, dtype=np.uint8)
+        plane = arr.reshape(img.height, img.width, img.channels)[
+            :, :, 0
+        ].astype(np.int64)
+        hd = np.abs(np.diff(plane, axis=1))
+        vd = np.abs(np.diff(plane, axis=0))
+        total = int(arr.sum(dtype=np.int64))
+        yield (
+            img.width, img.height, img.channels, arr.size, total,
+            float(total) / arr.size, int(arr.min()), int(arr.max()),
+            int((hd >= edge_thresh).sum()), int((vd >= edge_thresh).sum()),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                k.name: [] for k in VISUAL_FEATURES_SCHEMA
-            }
-            nullable = tuple(
-                f.name for f in VISUAL_FEATURES_SCHEMA if f.name != "doc_id"
-            )
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                out["doc_id"].append(doc_id)
-                try:
-                    img = imagecodec.decode_image(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    _quarantine(out, nullable)
-                    continue
-                arr = np.frombuffer(img.pixels, dtype=np.uint8)
-                plane = arr.reshape(img.height, img.width, img.channels)[
-                    :, :, 0
-                ].astype(np.int64)
-                hd = np.abs(np.diff(plane, axis=1))
-                vd = np.abs(np.diff(plane, axis=0))
-                total = int(arr.sum(dtype=np.int64))
-                out["width"].append(img.width)
-                out["height"].append(img.height)
-                out["channels"].append(img.channels)
-                out["n_pixels"].append(arr.size)
-                out["sum_px"].append(total)
-                out["mean_px"].append(float(total) / arr.size)
-                out["min_px"].append(int(arr.min()))
-                out["max_px"].append(int(arr.max()))
-                out["h_edges"].append(int((hd >= edge_thresh).sum()))
-                out["v_edges"].append(int((vd >= edge_thresh).sum()))
-            yield pd.DataFrame(out).astype(
-                {
-                    "width": "Int32",
-                    "height": "Int32",
-                    "channels": "Int32",
-                    "n_pixels": "Int32",
-                    "sum_px": "Int64",
-                    "mean_px": "float64",
-                    "min_px": "Int32",
-                    "max_px": "Int32",
-                    "h_edges": "Int32",
-                    "v_edges": "Int32",
-                }
-            )
-
-    return df.mapInPandas(run, schema=VISUAL_FEATURES_SCHEMA)
+    return _map_payloads(df, VISUAL_FEATURES_SCHEMA, features, strict)
 
 
 DHASH_SCHEMA = T.StructType(
@@ -985,68 +757,37 @@ def perceptual_hash(
     (``dhash_hi`` = grid rows 0..3, ``dhash_lo`` = rows 4..7) so a SQL
     oracle sums powers of two without BIGINT sign overflow, and
     Hamming-band blocking (the d5 pigeonhole play) can reuse either
-    half as a coarse bucket. Non-image payloads quarantine (NULL row)
-    unless ``strict=True``.
-
-    Partition-local Arrow-batched mapInPandas, ZERO shuffle; grouping /
-    banding on the emitted 16 bytes is the caller's (m17's) one
-    digest-sized exchange.
+    half as a coarse bucket. Non-image payloads quarantine (NULL row).
+    Grouping / banding on the emitted 16 bytes is the caller's (m17's)
+    one digest-sized exchange.
     """
-    import numpy as np
-
-    from . import imagecodec
-
     half = grid_h // 2
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in DHASH_SCHEMA}
-            nullable = tuple(
-                f.name for f in DHASH_SCHEMA if f.name != "doc_id"
-            )
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                out["doc_id"].append(doc_id)
-                try:
-                    img = imagecodec.decode_image(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    _quarantine(out, nullable)
-                    continue
-                w, h = img.width, img.height
-                plane = np.frombuffer(img.pixels, dtype=np.uint8).reshape(
-                    h, w, img.channels
-                )[:, :, 0]
-                g = plane[_nn_indices(grid_h, h)][
-                    :, _nn_indices(grid_w, w)
-                ].astype(np.int64)
-                bits = g[:, 1:] > g[:, :-1]  # grid_h x (grid_w-1)
-                shifts = np.arange(grid_w - 1, dtype=np.int64)
-                row_vals = (bits.astype(np.int64) << shifts).sum(axis=1)
-                row_shift = np.int64(grid_w - 1)
-                hi = int(
-                    (row_vals[:half]
-                     << (np.arange(half, dtype=np.int64) * row_shift)).sum()
-                )
-                lo = int(
-                    (row_vals[half:]
-                     << (np.arange(grid_h - half, dtype=np.int64)
-                         * row_shift)).sum()
-                )
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dhash_hi"].append(hi)
-                out["dhash_lo"].append(lo)
-            yield pd.DataFrame(out).astype(
-                {
-                    "width": "Int32",
-                    "height": "Int32",
-                    "dhash_hi": "Int64",
-                    "dhash_lo": "Int64",
-                }
-            )
+    def dhash(data: bytes):
+        img = imagecodec.decode_image(data)
+        w, h = img.width, img.height
+        plane = np.frombuffer(img.pixels, dtype=np.uint8).reshape(
+            h, w, img.channels
+        )[:, :, 0]
+        g = plane[_nn_indices(grid_h, h)][:, _nn_indices(grid_w, w)].astype(
+            np.int64
+        )
+        bits = g[:, 1:] > g[:, :-1]  # grid_h x (grid_w-1)
+        shifts = np.arange(grid_w - 1, dtype=np.int64)
+        row_vals = (bits.astype(np.int64) << shifts).sum(axis=1)
+        row_shift = np.int64(grid_w - 1)
+        hi = int(
+            (row_vals[:half]
+             << (np.arange(half, dtype=np.int64) * row_shift)).sum()
+        )
+        lo = int(
+            (row_vals[half:]
+             << (np.arange(grid_h - half, dtype=np.int64)
+                 * row_shift)).sum()
+        )
+        yield w, h, hi, lo
 
-    return df.mapInPandas(run, schema=DHASH_SCHEMA)
+    return _map_payloads(df, DHASH_SCHEMA, dhash, strict)
 
 
 def dhash_neardup_pairs(
@@ -1180,59 +921,29 @@ def scene_cuts(
     the mean MAD across pairs (NULL for single-frame clips — no pair
     exists, which must stay distinguishable from a quiet clip).
     Chroma is deliberately excluded (luma carries scene identity; the
-    m12 convention). Non-Y4M / corrupt payloads yield one quarantine
-    row unless ``strict=True``.
-
-    Partition-local Arrow-batched mapInPandas, ZERO shuffle; frames
-    never leave the task that decoded them — at 100 TB the operator
-    scales by executors, and only clip-grain stats cross the wire.
+    m12 convention). Non-Y4M / corrupt payloads quarantine (NULL row).
+    Frames never leave the task that decoded them — at 100 TB the
+    operator scales by executors, and only clip-grain stats cross the
+    wire.
     """
-    import numpy as np
 
-    from . import videocodec
+    def cuts(data: bytes):
+        vid = videocodec.decode_y4m(data)
+        n = vid.n_frames
+        mads = []
+        prev = None
+        for idx in range(n):
+            y = np.frombuffer(vid.y_plane(idx), dtype=np.uint8).astype(np.int64)
+            if prev is not None:
+                mads.append(float(np.abs(y - prev).mean()))
+            prev = y
+        at = [k + 1 for k, m in enumerate(mads) if m >= thresh]
+        yield (
+            n, len(at), at[0] if at else None,
+            sum(mads) / len(mads) if mads else None,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in SCENE_CUTS_SCHEMA}
-            nullable = tuple(
-                f.name for f in SCENE_CUTS_SCHEMA if f.name != "doc_id"
-            )
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                out["doc_id"].append(doc_id)
-                try:
-                    vid = videocodec.decode_y4m(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    _quarantine(out, nullable)
-                    continue
-                n = vid.n_frames
-                mads = []
-                prev = None
-                for idx in range(n):
-                    y = np.frombuffer(
-                        vid.y_plane(idx), dtype=np.uint8
-                    ).astype(np.int64)
-                    if prev is not None:
-                        mads.append(float(np.abs(y - prev).mean()))
-                    prev = y
-                cuts = [k + 1 for k, m in enumerate(mads) if m >= thresh]
-                out["n_frames"].append(n)
-                out["n_cuts"].append(len(cuts))
-                out["first_cut_idx"].append(cuts[0] if cuts else None)
-                out["mean_mad"].append(
-                    sum(mads) / len(mads) if mads else None
-                )
-            yield pd.DataFrame(out).astype(
-                {
-                    "n_frames": "Int32",
-                    "n_cuts": "Int32",
-                    "first_cut_idx": "Int32",
-                    "mean_mad": "float64",
-                }
-            )
-
-    return df.mapInPandas(run, schema=SCENE_CUTS_SCHEMA)
+    return _map_payloads(df, SCENE_CUTS_SCHEMA, cuts, strict)
 
 
 PNG_META_SCHEMA = T.StructType(
@@ -1248,31 +959,15 @@ def synthesize_png_with_text(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     """Gradient PNGs carrying REAL ``tEXt`` metadata chunks (m20 corpus
     builder): every id gets ``source = cam-<id%7>``; ids divisible by 3
     also get ``author = u<id%11>`` — closed-form strings a SQL oracle
-    regenerates exactly. Partition-local mapInPandas, no shuffle."""
-    from .imagecodec import append_text_chunks, encode_png
+    regenerates exactly."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                w, h = int(4 + i % 13), int(3 + i % 11)
-                px = bytes(
-                    32 + (x + 3 * y) % 95
-                    for y in range(h)
-                    for x in range(w)
-                )
-                chunks = [("source", f"cam-{int(i) % 7}")]
-                if i % 3 == 0:
-                    chunks.append(("author", f"u{int(i) % 11}"))
-                payloads.append(
-                    append_text_chunks(
-                        encode_png(w, h, 1, px, filter_type=4), chunks
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        chunks = [("source", f"cam-{i % 7}")]
+        if i % 3 == 0:
+            chunks.append(("author", f"u{i % 11}"))
+        return imagecodec.append_text_chunks(_gradient_png(i), chunks)
 
-    return df.mapInPandas(run, schema=PAYLOAD_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def extract_png_metadata(df: DataFrame, strict: bool = False) -> DataFrame:
@@ -1281,31 +976,9 @@ def extract_png_metadata(df: DataFrame, strict: bool = False) -> DataFrame:
     meta_value) row per tEXt chunk, in stream order. A VALID PNG with
     no metadata emits no rows (absence is a legitimate answer —
     downstream joins are left joins); a NON-decodable or CRC-corrupt
-    payload emits one quarantine row (NULL key/value) unless
-    ``strict=True`` — corrupt and empty must stay distinguishable.
-
-    Partition-local Arrow-batched mapInPandas, zero shuffle; the
-    fan-out (chunks per image) streams inside batches like m4/m12.
+    payload emits one quarantine row (NULL key/value) — corrupt and
+    empty must stay distinguishable.
     """
-    from . import imagecodec
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {k.name: [] for k in PNG_META_SCHEMA}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                try:
-                    chunks = imagecodec.read_text_chunks(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    out["doc_id"].append(doc_id)
-                    out["meta_key"].append(None)
-                    out["meta_value"].append(None)
-                    continue
-                for k, v in chunks:
-                    out["doc_id"].append(doc_id)
-                    out["meta_key"].append(k)
-                    out["meta_value"].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=PNG_META_SCHEMA)
+    return _map_payloads(
+        df, PNG_META_SCHEMA, imagecodec.read_text_chunks, strict
+    )

@@ -412,7 +412,6 @@ def kmeans_lloyd(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_mean: bool = False,
     target_cell_size: int = 32,
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column.
@@ -436,14 +435,13 @@ def kmeans_lloyd(
     Returns the final centroids as (cent_id, cent_vec). Feed to
     :func:`ivf_topk` via ``centroids=`` for a learned coarse quantizer.
 
-    ``exact_mean=True`` computes each per-dimension mean as an exact
-    DECIMAL(28,10) sum divided once as a double. A plain double ``avg``
-    sums in partition order, so reruns at different parallelism can
-    differ in the last ulp and cascade through later iterations;
-    decimal sums are order-independent, making the whole iterative fit
-    BIT-IDENTICAL across partitionings AND across engines — the
-    property the k1 registry oracle checks. (Default stays the cheaper
-    double avg for callers that only need a quantizer.)
+    Each per-dimension mean is an exact DECIMAL(28,10) sum divided once
+    as a double. A plain double ``avg`` sums in partition order, so
+    reruns at different parallelism can differ in the last ulp and
+    cascade through later iterations; decimal sums are
+    order-independent, making the whole iterative fit BIT-IDENTICAL
+    across partitionings AND across engines — the property the k1
+    registry oracle checks.
     """
     spark = embeddings.sparkSession
     if k == "auto":
@@ -456,17 +454,14 @@ def kmeans_lloyd(
     )
     centroids = [[float(x) for x in r[vec_col]] for r in cents_rows]
 
-    if exact_mean:
-        # float -> DOUBLE -> decimal: the double hop is exact in every
-        # engine; a direct float->decimal cast is engine-defined
-        mean_expr = (
-            F.sum(
-                F.col("val").cast("double").cast("decimal(28,10)")
-            ).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mean")
-    else:
-        mean_expr = F.avg(F.col("val").cast("double")).alias("mean")
+    # float -> DOUBLE -> decimal: the double hop is exact in every
+    # engine; a direct float->decimal cast is engine-defined
+    mean_expr = (
+        F.sum(
+            F.col("val").cast("double").cast("decimal(28,10)")
+        ).cast("double")
+        / F.count(F.lit(1))
+    ).alias("mean")
 
     for _ in range(n_iter):
         nearest = F.array_min(

@@ -1167,7 +1167,7 @@ def d2_jaccard_pairs(spark, sf):
 def _sql_minhash(num_hashes: int, bands: int, thr: str) -> str:
     rows = num_hashes // bands
     # hash i = 8-hex-char slice (i % 4) of md5((i // 4) || ':' || shingle)
-    # — mirrors functions.minhash_signature's sliced-md5 scheme exactly
+    # — mirrors functions.minhash_signature_local's sliced-md5 scheme exactly
     mh_cols = ", ".join(
         f"min(substring(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8))"
         f" AS mh_{i}"
@@ -1477,7 +1477,7 @@ def x4_fingerprints(spark, sf):
     ref="LLM-ops: multimodal binary plumbing — Arrow mapInPandas decode "
     "stub (operators/multimodal.py); payload = utf-8 bytes as media stand-in",
     scale="decode is partition-local mapInPandas: no shuffle, batches stream "
-    "through the codec; real decoder replaces _decode_batch only",
+    "through the codec; a real decoder replaces its per-payload call only",
 )
 def m1_multimodal_decode(spark, sf):
     docs = _t(spark, sf, "documents")
@@ -7175,7 +7175,7 @@ def _k1_sql(k: int = 4, n_iter: int = 2) -> str:
     "2-iteration Lloyd k-means (k=4, first-k init, decimal-sum means) — "
     "the engine iterates map-only literal-matrix assignments with only "
     "k x dim model state crossing the driver per iteration "
-    "(operators/similarity.py kmeans_lloyd(exact_mean=True)); the "
+    "(operators/similarity.py kmeans_lloyd); the "
     "oracle unrolls the same fit as pure SQL CTEs. The hash-match "
     "proves a DISTRIBUTED iterative fit is bit-reproducible: "
     "order-independent decimal means make the fixpoint identical at "
@@ -7188,7 +7188,7 @@ def _k1_sql(k: int = 4, n_iter: int = 2) -> str:
 )
 def k1_kmeans_cells(spark, sf):
     emb = _t(spark, sf, "embeddings")
-    cents = SIM.kmeans_lloyd(emb, k=4, n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(emb, k=4, n_iter=2)
     assigned = SIM.assign_cells(emb, cents)
     return assigned.groupBy("cent_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
@@ -8316,7 +8316,7 @@ def w9_rolling_median(spark, sf):
 )
 def d14_semantic_dedup(spark, sf):
     emb = _t(spark, sf, "embeddings")
-    cents = SIM.kmeans_lloyd(emb, k="auto", n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(emb, k="auto", n_iter=2)
     cells = SIM.assign_cells(emb, cents)
     # salt=32: even with auto-k the cells can be few and big at small n,
     # so the unsalted block join would score every pair of a cell in ONE
@@ -8402,7 +8402,7 @@ def d15_incremental_semantic(spark, sf):
     corpus = emb.filter(~new_pred)
     # auto-k on the FIT SET (the accepted corpus) — the oracle's kk CTE
     # counts the same WHERE-filtered set, so both land on the same k
-    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2)
     return SIM.incremental_semantic_dedup(
         emb, new_pred, cents, threshold=0.35, salt=16
     )
@@ -9249,7 +9249,7 @@ def n9_knn_join_ivf(spark, sf):
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
-    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2)
     qc = SIM.assign_cells(queries, cents).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
@@ -9317,7 +9317,7 @@ def n10_knn_join_multiprobe(spark, sf):
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
-    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2)
     qc = SIM.assign_cells_multiprobe(queries, cents, n_probe=2).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
@@ -9437,7 +9437,7 @@ def n11_knn_join_ivfpq(spark, sf):
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
-    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(corpus, k="auto", n_iter=2)
     books = SIM.pq_codebooks(
         corpus.select(
             (F.col("vec_id") - 10).alias("vec_id"), "embedding"
@@ -21079,7 +21079,7 @@ def _ev10_sql() -> str:
 )
 def ev10_silhouette(spark, sf):
     emb = _t(spark, sf, "embeddings")
-    cents = SIM.kmeans_lloyd(emb, k=4, n_iter=2, exact_mean=True)
+    cents = SIM.kmeans_lloyd(emb, k=4, n_iter=2)
     ranked = F.slice(
         F.array_sort(
             SIM.centroid_dist_structs(

@@ -109,8 +109,7 @@ def incremental_semantic_sink(
             fit_set = batch.select(id_col, vec_col)
 
         cents = kmeans_lloyd(
-            fit_set, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
-            exact_mean=True,
+            fit_set, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
         )
         verdicts = incremental_semantic_dedup(
             full,
@@ -231,8 +230,7 @@ def incremental_semantic_model_sink(
             # at 0 so the running mean degenerates to exact batch means
             k_res = auto_k(batch.count()) if k == "auto" else k
             cents0 = kmeans_lloyd(
-                batch, k=k_res, n_iter=n_iter, id_col=id_col,
-                vec_col=vec_col, exact_mean=True,
+                batch, k=k_res, n_iter=n_iter, id_col=id_col, vec_col=vec_col
             )
             prev_model = cents0.select(
                 "cent_id", "cent_vec", F.lit(0).cast("bigint").alias("n")
@@ -349,7 +347,7 @@ def rebuild_semantic_model(
     k = auto_k(n, target_cell_size)
     cents = kmeans_lloyd(
         corpus.select(id_col, vec_col), k=k, n_iter=n_iter,
-        id_col=id_col, vec_col=vec_col, exact_mean=True,
+        id_col=id_col, vec_col=vec_col,
     )
     from ..operators.similarity import _collect_centroids, centroid_dist_structs
 

@@ -57,6 +57,16 @@ def duck_connect():
     )
 
 
+def png_payload(w, h, c, px, filt=0):
+    """A real PNG of ``w x h`` pixels with ``c`` channels, as the
+    ``bytearray`` a binary payload column takes."""
+    from retail_data_pipeline_and_forecasting_system_spark.operators.imagecodec import (
+        encode_png,
+    )
+
+    return bytearray(encode_png(w, h, c, bytes(px), filter_type=filt))
+
+
 @pytest.fixture(scope="session")
 def compilations(spark):
     """Count of generated classes Janino has compiled in this JVM so far

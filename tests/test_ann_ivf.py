@@ -331,7 +331,7 @@ def test_knn_join_ivfpq_exact_on_codebook_vectors(spark):
     )
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-    cents = kmeans_lloyd(corpus, k=2, n_iter=2, exact_mean=True)
+    cents = kmeans_lloyd(corpus, k=2, n_iter=2)
     books = pq_codebooks(
         corpus.select((F.col("vec_id") - 10).alias("vec_id"), "embedding"),
         m=4,

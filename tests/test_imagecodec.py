@@ -257,7 +257,7 @@ def test_decode_media_real_end_to_end(spark):
 
 
 def test_decode_batch_sniffs_real_images(spark):
-    """The m1 registry path (_decode_batch): real image payloads now get
+    """The m1 registry path (decode_media): real image payloads now get
     TRUE dimensions; non-image payloads keep the deterministic stub that
     the SQL oracle mirrors."""
     from retail_data_pipeline_and_forecasting_system_spark.operators.multimodal import (

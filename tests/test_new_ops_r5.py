@@ -122,7 +122,7 @@ def test_multiprobe_cells_recover_cross_cell_neighbor(spark):
     queries = spark.createDataFrame(
         query_rows, "vec_id long, embedding array<double>"
     )
-    cents = kmeans_lloyd(corpus, k=2, n_iter=3, exact_mean=True)
+    cents = kmeans_lloyd(corpus, k=2, n_iter=3)
 
     def top1(qc):
         cc = assign_cells(corpus, cents).select(

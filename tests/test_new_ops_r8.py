@@ -6,20 +6,13 @@ from __future__ import annotations
 
 import hashlib
 
-from retail_data_pipeline_and_forecasting_system_spark.operators.imagecodec import (
-    encode_png,
-)
 from retail_data_pipeline_and_forecasting_system_spark.operators.multimodal import (
     extract_features_real,
     resize_media_real,
     synthesize_gradient_png_payloads,
 )
 
-from conftest import duck_connect
-
-
-def _png(w, h, c, px, filt=0):
-    return bytearray(encode_png(w, h, c, bytes(px), filter_type=filt))
+from conftest import duck_connect, png_payload
 
 
 def test_resize_media_real_hand_values(spark):
@@ -28,7 +21,7 @@ def test_resize_media_real_hand_values(spark):
     rw=2, rh=max(1,(2*2)//4)=1; sy=[0], sx=[(0*4)//2,(1*4)//2]=[0,2]
     -> resized bytes [10,30]; garbage quarantines to a NULL row."""
     rows = [
-        (1, _png(4, 2, 1, [10, 20, 30, 40, 50, 60, 70, 80], filt=1)),
+        (1, png_payload(4, 2, 1, [10, 20, 30, 40, 50, 60, 70, 80], filt=1)),
         (2, bytearray(b"not an image")),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
@@ -48,9 +41,9 @@ def test_resize_media_real_upsample_and_rgb(spark):
     """Upsample (2x3 -> long-edge 6: rw=4, rh=6, sx=[0,0,1,1]) must
     REPLICATE source pixels, and RGB planes resize interleaved."""
     # 2x3 gray, column values [1, 2] on every row
-    gray = _png(2, 3, 1, [1, 2] * 3, filt=2)
+    gray = png_payload(2, 3, 1, [1, 2] * 3, filt=2)
     # 2x1 RGB: pixel0=(9,8,7), pixel1=(3,2,1) -> target 4: rw=4, rh=2
-    rgb = _png(2, 1, 3, [9, 8, 7, 3, 2, 1], filt=4)
+    rgb = png_payload(2, 1, 3, [9, 8, 7, 3, 2, 1], filt=4)
     df = spark.createDataFrame(
         [(1, gray), (2, rgb)], "doc_id long, payload binary"
     )
@@ -79,7 +72,7 @@ def test_extract_features_real_hand_values(spark):
     [[0,5,20],[100,6,21]], thresh 8 -> h diffs |5|,|15|;|94|,|15| = 3
     edges; v diffs |100|,|1|,|1| = 1 edge; sum 152, min 0, max 100."""
     rows = [
-        (1, _png(3, 2, 1, [0, 5, 20, 100, 6, 21], filt=3)),
+        (1, png_payload(3, 2, 1, [0, 5, 20, 100, 6, 21], filt=3)),
         (2, bytearray(b"\x89PNG truncated garbage")),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
@@ -102,7 +95,7 @@ def test_extract_features_real_rgb_channel0_edges(spark):
     report zero edges."""
     # 2x1 RGB: (50, 0, 0) and (50, 255, 0)
     df = spark.createDataFrame(
-        [(7, _png(2, 1, 3, [50, 0, 0, 50, 255, 0]))],
+        [(7, png_payload(2, 1, 3, [50, 0, 0, 50, 255, 0]))],
         "doc_id long, payload binary",
     )
     r = extract_features_real(df, edge_thresh=8).collect()[0]
@@ -290,8 +283,8 @@ def test_perceptual_hash_hand_values(spark):
     )
 
     rows = [
-        (1, _png(2, 2, 1, [10, 20, 30, 5])),
-        (2, _png(2, 2, 1, [60, 70, 80, 55])),  # +50 everywhere
+        (1, png_payload(2, 2, 1, [10, 20, 30, 5])),
+        (2, png_payload(2, 2, 1, [60, 70, 80, 55])),  # +50 everywhere
         (3, bytearray(b"not an image")),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
@@ -391,9 +384,9 @@ def test_dhash_neardup_pairs_hand_values(spark):
     )
 
     rows = [
-        (1, _png(2, 2, 1, [10, 20, 30, 5])),
-        (2, _png(2, 2, 1, [60, 70, 80, 55])),
-        (3, _png(2, 2, 1, [5, 5, 5, 200])),
+        (1, png_payload(2, 2, 1, [10, 20, 30, 5])),
+        (2, png_payload(2, 2, 1, [60, 70, 80, 55])),
+        (3, png_payload(2, 2, 1, [5, 5, 5, 200])),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     hashed = perceptual_hash(df).select("doc_id", "dhash_hi", "dhash_lo")
@@ -698,7 +691,7 @@ def test_png_metadata_extraction_hand_values(spark):
         extract_png_metadata,
     )
 
-    base = bytes(_png(2, 1, 1, [5, 6]))
+    base = bytes(png_payload(2, 1, 1, [5, 6]))
     tagged = append_text_chunks(
         base, [("source", "cam-3"), ("license", "cc-by")]
     )

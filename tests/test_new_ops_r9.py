@@ -9,7 +9,6 @@ import pytest
 
 from retail_data_pipeline_and_forecasting_system_spark.operators.imagecodec import (
     append_text_chunks,
-    encode_png,
     read_text_chunks,
 )
 from retail_data_pipeline_and_forecasting_system_spark.operators.multimodal import (
@@ -17,11 +16,7 @@ from retail_data_pipeline_and_forecasting_system_spark.operators.multimodal impo
     extract_png_metadata,
 )
 
-from conftest import duck_connect
-
-
-def _png(w, h, c, px, filt=0):
-    return bytearray(encode_png(w, h, c, bytes(px), filter_type=filt))
+from conftest import duck_connect, png_payload
 
 
 def test_read_text_chunks_truncated_mid_crc_raises_valueerror():
@@ -29,7 +24,7 @@ def test_read_text_chunks_truncated_mid_crc_raises_valueerror():
     ValueError like every other corruption — before the round-9 fix it
     escaped as struct.error and job-killed the quarantine path."""
     png = bytes(
-        append_text_chunks(bytes(_png(2, 2, 1, [1, 2, 3, 4])), [("k", "v")])
+        append_text_chunks(bytes(png_payload(2, 2, 1, [1, 2, 3, 4])), [("k", "v")])
     )
     # IEND is the last 12 bytes (len+type+crc); cutting 2 bytes off the
     # tail leaves IEND's body (empty) intact but its CRC short.
@@ -44,7 +39,7 @@ def test_extract_png_metadata_quarantines_truncated_mid_crc(spark):
     case: struct.error escaping the except ValueError path)."""
     good = bytes(
         append_text_chunks(
-            bytes(_png(2, 2, 1, [9, 9, 9, 9])), [("title", "ok")]
+            bytes(png_payload(2, 2, 1, [9, 9, 9, 9])), [("title", "ok")]
         )
     )
     rows = [(1, bytearray(good)), (2, bytearray(good[:-3]))]

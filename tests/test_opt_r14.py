@@ -202,8 +202,8 @@ def test_connected_components_edges_cached_v_partitioned(spark, monkeypatch):
 
 
 def test_depletion_bucket_default_tracks_parallelism(spark, sf_dir):
-    """num_buckets=None derives 2 x defaultParallelism (bounded by the
-    dim cardinality since r15 — part at sf0.001 has 200 rows, so the
+    """The depletion bucket count is 2 x defaultParallelism (bounded by
+    the dim cardinality since r15 — part at sf0.001 has 200 rows, so the
     bound does not bind here). Pinned via the plan's pmod."""
     plan = _plan(spark, "a5_inventory_depletion", sf_dir)
     want = 2 * spark.sparkContext.defaultParallelism
