@@ -3,8 +3,12 @@
 
 It holds the table-plan memo (``plans.analytics._t``), the plan-tuning
 probe memo (the fan gate's layout decisions and the depletion fold's
-dim counts), the ``keep_caches`` regime switch, and the registry-scoped
-cache tracking described below. The outer map holds each session
+dim counts), the driver-side model memo (the IVF quantizer and query
+vector of n3/n14, the trained BPE merges of x35-x42), the
+``keep_caches`` regime switch, and the registry-scoped cache tracking
+described below. The table and model memos share one contract: an
+``sf`` dir does not change during the session, or the caller calls
+``plans.analytics.invalidate_tables``, which clears both. The outer map holds each session
 WEAKLY (r14 ADVICE): a stopped-and-dropped session releases its state
 (and the JVM-side plans its frames hold) instead of leaking one entry
 per session for the life of the process.
@@ -51,6 +55,10 @@ class SessionState:
         #: caller's key) and dim row counts (``("dim_count", plan
         #: hash)``). They only place rows, never change them.
         self.probes: dict = {}
+        #: (sf_dir, model name, ...) -> driver-side model state
+        #: collected from that dir's tables (IVF quantizer and query
+        #: vector, trained BPE merges).
+        self.models: dict = {}
         #: When True, ``drop_stale`` is a no-op and session caches
         #: accumulate — the pre-round-7 behavior. bench.py sets this:
         #: its best-of-3 round-robin meter has ALWAYS let Spark's

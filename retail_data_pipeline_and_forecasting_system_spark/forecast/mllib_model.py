@@ -40,7 +40,6 @@ def fit_global_forecaster(
     series_col: str,
     date_col: str,
     value_col: str,
-    reg_param: float = 0.0,
 ) -> PipelineModel:
     """Fit the pooled model on (series, date, value) rows.
 
@@ -65,7 +64,7 @@ def fit_global_forecaster(
             LinearRegression(
                 featuresCol="features",
                 labelCol="_label",
-                regParam=reg_param,
+                regParam=0.0,
                 solver="normal",  # exact WLS — deterministic coefficients
             ),
         ]

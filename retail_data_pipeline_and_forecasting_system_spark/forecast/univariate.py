@@ -116,11 +116,11 @@ class UnivariateForecaster:
 
 
 def forecast_sales_and_profits(
-    spark: SparkSession, daily_summary: DataFrame, forecast_days: int = 1
+    spark: SparkSession, daily_summary: DataFrame
 ) -> DataFrame:
-    """daily_summary -> (date, forecasted_sales, forecasted_profit) rows.
+    """daily_summary -> one (date, forecasted_sales, forecasted_profit) row.
 
-    Output dates are business dates: last summary date + 1..horizon
+    The date is the business day after the last summary date
     (reference src/data_processor.py:573-575). The rows are built as a
     pandas frame, which Spark turns into a local relation through Arrow;
     a Python list would become a Python RDD, and every action on it would
@@ -140,25 +140,17 @@ def forecast_sales_and_profits(
     sales_model.fit(sales)
     profit_model.fit(profit)
 
-    horizon = range(1, forecast_days + 1)
     out = pd.DataFrame(
         {
-            "date": [dates[-1] + dt.timedelta(days=i) for i in horizon],
-            "forecasted_sales": sales_model.predict(forecast_days),
-            "forecasted_profit": profit_model.predict(forecast_days),
+            "date": [dates[-1] + dt.timedelta(days=1)],
+            "forecasted_sales": sales_model.predict(1),
+            "forecasted_profit": profit_model.predict(1),
         }
     )
     return spark.createDataFrame(out, schema=FORECAST_OUT)
 
 
-def forecast_many(
-    series: DataFrame,
-    horizon: int = 1,
-    key_col: str = "series_id",
-    date_col: str = "date",
-    value_col: str = "value",
-    num_buckets: int = 64,
-) -> DataFrame:
+def forecast_many(series: DataFrame, horizon: int = 1) -> DataFrame:
     """Grouped per-series forecasting — the scale path for thousands of
     independent series (per-store, per-SKU, per-metric).
 
@@ -176,8 +168,8 @@ def forecast_many(
 
     out_schema = T.StructType(
         [
-            T.StructField(key_col, T.StringType(), False),
-            T.StructField(date_col, T.DateType(), False),
+            T.StructField("series_id", T.StringType(), False),
+            T.StructField("date", T.DateType(), False),
             T.StructField("forecast", T.DoubleType(), True),
         ]
     )
@@ -186,28 +178,24 @@ def forecast_many(
         import pandas as _pd
 
         rows = []
-        for key, grp in pdf.groupby(key_col, sort=True):
-            grp = grp.sort_values(date_col)
+        for key, grp in pdf.groupby("series_id", sort=True):
+            grp = grp.sort_values("date")
             model = UnivariateForecaster()
-            model.fit(grp[value_col].to_numpy(dtype="float64"))
+            model.fit(grp["value"].to_numpy(dtype="float64"))
             preds = model.predict(horizon)
-            last = grp[date_col].iloc[-1]
+            last = grp["date"].iloc[-1]
             for i, yhat in enumerate(preds, start=1):
                 rows.append(
                     (str(key), last + _dt.timedelta(days=i), float(yhat))
                 )
-        return _pd.DataFrame(rows, columns=[key_col, date_col, "forecast"])
+        return _pd.DataFrame(rows, columns=["series_id", "date", "forecast"])
 
     from ..operators.bucketed import bucketed_fold
 
-    return bucketed_fold(
-        series, key_col, fit_bucket, out_schema, num_buckets=num_buckets
-    )
+    return bucketed_fold(series, "series_id", fit_bucket, out_schema)
 
 
-def holt_winters_kernel(
-    ys: list[float], m: int = 7, horizon: int = 14
-) -> list[tuple[int, float]] | None:
+def holt_winters_kernel(ys: list[float]) -> list[tuple[int, float]] | None:
     """Additive Holt-Winters (triple exponential smoothing) with DYADIC
     smoothing weights — alpha=0.5, beta=0.25, gamma=0.25 — over an
     observation-indexed series (seasonality by position, period ``m``).
@@ -226,6 +214,7 @@ def holt_winters_kernel(
     difference / m, seasonal = season-1 deviations from the level;
     the recursion starts at t=m+1.
     """
+    m, horizon = 7, 14  # weekly season, two weeks ahead
     T = len(ys)
     if T < 2 * m:
         return None
@@ -253,16 +242,9 @@ def holt_winters_kernel(
     ]
 
 
-def _per_series_forecast(
-    daily: DataFrame,
-    group_col: str,
-    order_col: str,
-    value_col: str,
-    fit,
-    num_buckets: int,
-) -> DataFrame:
-    """Run ``fit(ys) -> [(h, forecast)] | None`` over every group's
-    series ordered by ``order_col``: one hash-bucketed ``applyInPandas``
+def _per_series_forecast(daily: DataFrame, fit) -> DataFrame:
+    """Run ``fit(ys) -> [(h, forecast)] | None`` over every group ``g``'s
+    series of ``y`` ordered by ``d``: one hash-bucketed ``applyInPandas``
     (the depletion/packing fold shape — sequential within a group,
     parallel across groups), emitting ``(group, h, forecast)`` rows.
     Groups where ``fit`` returns None are dropped."""
@@ -271,56 +253,41 @@ def _per_series_forecast(
 
     from ..operators.bucketed import bucketed_fold
 
-    slim = daily.select(
-        F.col(group_col), F.col(order_col), F.col(value_col)
-    )
+    slim = daily.select(F.col("g"), F.col("d"), F.col("y"))
     out_schema = T_.StructType(
         [
-            T_.StructField(
-                group_col, slim.schema[group_col].dataType, True
-            ),
+            T_.StructField("g", slim.schema["g"].dataType, True),
             T_.StructField("h", T_.IntegerType(), False),
             T_.StructField("forecast", T_.DoubleType(), False),
         ]
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out: dict[str, list] = {group_col: [], "h": [], "forecast": []}
-        for g, grp in pdf.groupby(group_col, dropna=False, sort=True):
+        out: dict[str, list] = {"g": [], "h": [], "forecast": []}
+        for g, grp in pdf.groupby("g", dropna=False, sort=True):
             if isinstance(g, float) and pd.isna(g):
                 # pandas groupby(dropna=False) surfaces a NULL key as
                 # float nan even for string columns — restore None or
                 # Arrow rejects the typed group column (round-9 review)
                 g = None
-            ys = [float(v) for v in
-                  grp.sort_values(order_col)[value_col].values]
+            ys = [float(v) for v in grp.sort_values("d")["y"].values]
             fc = fit(ys)
             if fc is None:
                 continue
             for h, v in fc:
-                out[group_col].append(g)
+                out["g"].append(g)
                 out["h"].append(h)
                 out["forecast"].append(v)
         res = pd.DataFrame(out)
         return res.astype({"h": "int32"}) if len(res) else pd.DataFrame(
-            {group_col: [], "h": pd.array([], dtype="int32"),
+            {"g": [], "h": pd.array([], dtype="int32"),
              "forecast": pd.array([], dtype="float64")}
         )
 
-    return bucketed_fold(
-        slim, group_col, kernel, out_schema, num_buckets=num_buckets
-    )
+    return bucketed_fold(slim, "g", kernel, out_schema)
 
 
-def holt_winters_forecast(
-    daily: DataFrame,
-    group_col: str = "g",
-    order_col: str = "d",
-    value_col: str = "y",
-    m: int = 7,
-    horizon: int = 14,
-    num_buckets: int = 64,
-) -> DataFrame:
+def holt_winters_forecast(daily: DataFrame) -> DataFrame:
     """Distributed Holt-Winters over per-group ordered series
     (:func:`holt_winters_kernel` per group), emitting
     ``(group, h, forecast)`` rows. Groups shorter than ``2*m`` are
@@ -331,11 +298,7 @@ def holt_winters_forecast(
     are 2 scalars wide; the fact-table cost is the rollup any daily
     metric already pays.
     """
-    return _per_series_forecast(
-        daily, group_col, order_col, value_col,
-        lambda ys: holt_winters_kernel(ys, m=m, horizon=horizon),
-        num_buckets,
-    )
+    return _per_series_forecast(daily, holt_winters_kernel)
 
 
 def theta_kernel(
@@ -378,23 +341,12 @@ def theta_kernel(
     ]
 
 
-def theta_forecast(
-    daily: DataFrame,
-    group_col: str = "g",
-    order_col: str = "d",
-    value_col: str = "y",
-    horizon: int = 14,
-    num_buckets: int = 64,
-) -> DataFrame:
+def theta_forecast(daily: DataFrame) -> DataFrame:
     """Distributed Theta-method forecast over per-group ordered
     series (:func:`theta_kernel` per group), emitting
     ``(group, h, forecast)`` rows. Groups shorter than 3 observations
     are dropped."""
-    return _per_series_forecast(
-        daily, group_col, order_col, value_col,
-        lambda ys: theta_kernel(ys, horizon=horizon),
-        num_buckets,
-    )
+    return _per_series_forecast(daily, theta_kernel)
 
 
 def croston_kernel(
@@ -436,7 +388,6 @@ def croston_forecast(
     key_col: str = "l_partkey",
     date_col: str = "d",
     qty_col: str = "qty",
-    num_buckets: int = 64,
 ) -> "DataFrame":
     """Per-key Croston intermittent-demand forecast over (key, date,
     qty) demand events — the retail forecasting shape Prophet-style
@@ -515,6 +466,4 @@ def croston_forecast(
             }
         )
 
-    return bucketed_fold(
-        events, key_col, kernel, out_schema, num_buckets=num_buckets
-    )
+    return bucketed_fold(events, key_col, kernel, out_schema)

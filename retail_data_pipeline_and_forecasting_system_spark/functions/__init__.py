@@ -18,18 +18,16 @@ def tokens(text: Column | str) -> Column:
     return F.split(text, " ")
 
 
-def explode_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def explode_tokens(df: DataFrame) -> DataFrame:
     """One row per (doc, position, token)."""
     return df.select(
-        id_col, F.posexplode(tokens(text_col)).alias("pos", "token")
+        "doc_id", F.posexplode(tokens("text")).alias("pos", "token")
     )
 
 
 def word_shingles(
     df: DataFrame,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     distinct: bool = True,
 ) -> DataFrame:
     """k-word shingles per document (distinct by default).
@@ -52,9 +50,8 @@ def word_shingles(
     DuckDB oracle, whose ``range(1, n+1)`` is empty for n <= 0.
     """
     return word_shingles_from_words(
-        df.select(F.col(id_col), tokens(text_col).alias("__words")),
+        df.select(F.col("doc_id"), tokens("text").alias("__words")),
         k=k,
-        id_col=id_col,
         words_col="__words",
         distinct=distinct,
     )
@@ -63,7 +60,6 @@ def word_shingles(
 def word_shingles_from_words(
     words: DataFrame,
     k: int = 3,
-    id_col: str = "doc_id",
     words_col: str = "words",
     distinct: bool = True,
 ) -> DataFrame:
@@ -76,7 +72,7 @@ def word_shingles_from_words(
     branch re-reading and re-splitting the corpus.
     """
     out = words.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.expr(
                 f"case when size({words_col}) >= {k} then"
@@ -121,8 +117,6 @@ def word_shingle_sets(
 def char_shingles(
     df: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     distinct: bool = True,
 ) -> DataFrame:
     """Distinct k-character shingles per document.
@@ -138,13 +132,13 @@ def char_shingles(
     for short texts.
     """
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.expr(
-                f"case when length({text_col}) >= {k} then"
-                f" transform(sequence(1, length({text_col}) - {k - 1}),"
-                f" i -> substring({text_col}, i, {k}))"
-                f" else array() end"
+                f"case when length(text) >= {k} then"
+                f" transform(sequence(1, length(text) - {k - 1}),"
+                f" i -> substring(text, i, {k}))"
+                " else array() end"
             )
         ).alias("shingle"),
     )

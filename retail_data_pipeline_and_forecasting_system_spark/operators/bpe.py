@@ -134,9 +134,6 @@ ENCODE_STATS_SCHEMA = T.StructType(
 def bpe_encode_stats(
     docs: DataFrame,
     merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """Per-document token statistics from applying ``merges`` (list of
     ``(left, right, rank)``) to the lowercased whitespace-tokenized
@@ -151,7 +148,7 @@ def bpe_encode_stats(
     import re
 
     ranks, tok_ranks = _rank_maps(merges)
-    cols = docs.select(id_col, source_col, text_col)
+    cols = docs.select("doc_id", "source", "text")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict[str, tuple[int, int, int]] = {}
@@ -161,7 +158,7 @@ def bpe_encode_stats(
                 "n_merged": [], "id_sum": [],
             }
             for doc_id, source, text in zip(
-                batch[id_col], batch[source_col], batch[text_col]
+                batch["doc_id"], batch["source"], batch["text"]
             ):
                 nt = nm = ids = 0
                 if isinstance(text, str) and text:
@@ -203,8 +200,6 @@ ENCODE_TOKENS_SCHEMA = T.StructType(
 def bpe_encode_tokens(
     docs: DataFrame,
     merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exploded per-token view (doc_id, pos, token, token_id) — the
     granular twin of :func:`bpe_encode_stats` for tests and sampling;
@@ -213,7 +208,7 @@ def bpe_encode_tokens(
     import re
 
     ranks, tok_ranks = _rank_maps(merges)
-    cols = docs.select(id_col, text_col)
+    cols = docs.select("doc_id", "text")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict[str, tuple[list[str], list[int]]] = {}
@@ -221,7 +216,7 @@ def bpe_encode_tokens(
             out: dict[str, list] = {
                 "doc_id": [], "pos": [], "token": [], "token_id": [],
             }
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
+            for doc_id, text in zip(batch["doc_id"], batch["text"]):
                 pos = 0
                 if isinstance(text, str) and text:
                     for w in re.split(WHITESPACE_CLASS, fold_case(text)):
@@ -255,7 +250,6 @@ VOCAB_SCHEMA = T.StructType(
 def bpe_vocab(
     docs: DataFrame,
     merges: list[tuple[str, str, int]],
-    text_col: str = "text",
 ) -> DataFrame:
     """The exported vocabulary artifact (token, token_id, corpus
     frequency) — what a pipeline writes next to merges.txt so training
@@ -275,7 +269,7 @@ def bpe_vocab(
     words = docs.select(
         F.explode(
             F.split(
-                F.translate(F.col(text_col), ASCII_UPPER, ASCII_LOWER),
+                F.translate(F.col("text"), ASCII_UPPER, ASCII_LOWER),
                 WHITESPACE_CLASS,
             )
         ).alias("word")
@@ -322,9 +316,6 @@ ENCODE_IDS_SCHEMA = T.StructType(
 def bpe_encode_ids(
     docs: DataFrame,
     merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """The shipped tokenized-corpus artifact: one row per document
     carrying its FULL token-id sequence (words separated by
@@ -339,7 +330,7 @@ def bpe_encode_ids(
     import re
 
     ranks, tok_ranks = _rank_maps(merges)
-    cols = docs.select(id_col, source_col, text_col)
+    cols = docs.select("doc_id", "source", "text")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict[str, list[int]] = {}
@@ -348,7 +339,7 @@ def bpe_encode_ids(
                 "doc_id": [], "source": [], "text": [], "ids": [],
             }
             for doc_id, source, text in zip(
-                batch[id_col], batch[source_col], batch[text_col]
+                batch["doc_id"], batch["source"], batch["text"]
             ):
                 ids: list[int] | None = None
                 if isinstance(text, str):
@@ -412,14 +403,7 @@ def decode_ids(ids, id2tok: dict[int, str]) -> str:
     )
 
 
-def bpe_decode_check(
-    encoded: DataFrame,
-    id2tok: dict[int, str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    ids_col: str = "ids",
-) -> DataFrame:
+def bpe_decode_check(encoded: DataFrame, id2tok: dict[int, str]) -> DataFrame:
     """Detokenize + artifact-integrity check over
     :func:`bpe_encode_ids`'s output: decode each document's id
     sequence using ONLY the id→token map (the decoder never sees merge
@@ -433,7 +417,7 @@ def bpe_decode_check(
     """
     import re
 
-    cols = encoded.select(id_col, source_col, text_col, ids_col)
+    cols = encoded.select("doc_id", "source", "text", "ids")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -442,8 +426,8 @@ def bpe_decode_check(
                 "decoded": [], "lossless": [],
             }
             for doc_id, source, text, ids in zip(
-                batch[id_col], batch[source_col],
-                batch[text_col], batch[ids_col],
+                batch["doc_id"], batch["source"],
+                batch["text"], batch["ids"],
             ):
                 decoded = lossless = None
                 n = 0
@@ -544,8 +528,6 @@ def pair_counts(sym: DataFrame) -> DataFrame:
 def bpe_train(
     docs: DataFrame,
     n_merges: int,
-    text_col: str = "text",
-    persist_every: int = 8,
 ) -> list[tuple[int, str, str, int]]:
     """TRUE iterative BPE training (Sennrich et al. 2016): learn
     ``n_merges`` merges by RECOUNTING adjacent-symbol pairs after each
@@ -564,9 +546,9 @@ def bpe_train(
     one vocab-sized pair-count agg plus a narrow JVM-side literal
     replace — no Python in the loop, and the only driver-side state is
     the KB-sized merge table (the k1/x27 model-state pattern). The
-    symbolization column re-persists every ``persist_every`` merges so
-    the replace-expression chain stays shallow (recompute depth is
-    bounded; lineage never exceeds ``persist_every`` replaces).
+    symbolization column re-persists every 8 merges so the
+    replace-expression chain stays shallow (recompute depth is bounded;
+    lineage never exceeds 8 replaces).
     """
     from pyspark.sql import functions as F
 
@@ -577,7 +559,7 @@ def bpe_train(
     words = docs.select(
         F.explode(
             F.split(
-                F.translate(F.col(text_col), ASCII_UPPER, ASCII_LOWER),
+                F.translate(F.col("text"), ASCII_UPPER, ASCII_LOWER),
                 WHITESPACE_CLASS,
             )
         ).alias("word")
@@ -609,7 +591,7 @@ def bpe_train(
                 "s", F.replace(F.col("s"), F.lit(pat), F.lit(rep))
             )
             depth += 1
-            if depth >= persist_every and k < n_merges:
+            if depth >= 8 and k < n_merges:
                 nxt = cur.persist()
                 nxt.count()
                 for p in persisted:

@@ -41,15 +41,15 @@ from ..functions import (
 )
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep the lowest id per distinct content (content keyed by md5).
 
     Output: (content_key, keep_id, n_copies). One hash-aggregate shuffle.
     """
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_key"))
+        df.groupBy(F.md5(F.col("text")).alias("content_key"))
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -59,8 +59,6 @@ def jaccard_pairs(
     df: DataFrame,
     k: int = 3,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = 50,
 ) -> DataFrame:
     """All document pairs (a < b) with k-shingle Jaccard >= threshold.
@@ -80,19 +78,16 @@ def jaccard_pairs(
     rare shingles, so the capped Jaccard is near-dup-faithful.
     ``max_df=None`` disables the cap. Output: (doc_a, doc_b, jaccard).
     """
-    sh = word_shingles(df, k=k, id_col=id_col, text_col=text_col,
-                       distinct=False)
+    sh = word_shingles(df, k=k, distinct=False)
     sh = _shingle_partitioned_distinct(sh)
     sh = _rare_shingles(sh, max_df)
-    return _jaccard_from_shingles(sh, threshold, id_col)
+    return _jaccard_from_shingles(sh, threshold)
 
 
 def jaccard_pairs_from_words(
     words: DataFrame,
     k: int = 3,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    words_col: str = "words",
     max_df: int | None = 50,
 ) -> DataFrame:
     """:func:`jaccard_pairs` starting from a PRE-SPLIT (id, words) frame.
@@ -103,12 +98,10 @@ def jaccard_pairs_from_words(
     and feeds both the per-doc signal aggregation and this shingle index
     from it), removing a full corpus re-scan + re-split.
     """
-    sh = word_shingles_from_words(
-        words, k=k, id_col=id_col, words_col=words_col, distinct=False
-    )
+    sh = word_shingles_from_words(words, k=k, distinct=False)
     sh = _shingle_partitioned_distinct(sh)
     sh = _rare_shingles(sh, max_df)
-    return _jaccard_from_shingles(sh, threshold, id_col)
+    return _jaccard_from_shingles(sh, threshold)
 
 
 def char_jaccard_pairs(
@@ -116,8 +109,6 @@ def char_jaccard_pairs(
     k: int = 5,
     threshold: float = 0.5,
     max_df: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Character-k-gram Jaccard pairs — the dedup path for text that has
     no whitespace segmentation (CJK, code, URLs).
@@ -130,11 +121,10 @@ def char_jaccard_pairs(
     rare-shingle sets on both the intersection and the sizes, a
     consistent (and near-dup-faithful) definition — true near-dups share
     plenty of rare shingles."""
-    sh = char_shingles(df, k=k, id_col=id_col, text_col=text_col,
-                       distinct=False)
+    sh = char_shingles(df, k=k, distinct=False)
     sh = _shingle_partitioned_distinct(sh)
     sh = _rare_shingles(sh, max_df)
-    return _jaccard_from_shingles(sh, threshold, id_col)
+    return _jaccard_from_shingles(sh, threshold)
 
 
 def _shingle_partitioned_distinct(sh: DataFrame) -> DataFrame:
@@ -172,9 +162,7 @@ def _rare_shingles(sh: DataFrame, max_df: int | None) -> DataFrame:
     return sh.join(rare, on="shingle")
 
 
-def _jaccard_from_shingles(
-    sh: DataFrame, threshold: float, id_col: str
-) -> DataFrame:
+def _jaccard_from_shingles(sh: DataFrame, threshold: float) -> DataFrame:
     # the rare-shingle frame is consumed THREE times (per-doc sizes +
     # both sides of the pair join); without a persist each consumer
     # re-runs the shingle explode + distinct + df-cap join (measured
@@ -186,18 +174,18 @@ def _jaccard_from_shingles(
     from ..caching import track
 
     sh = track(sh.persist(StorageLevel.MEMORY_AND_DISK))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
 
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, on="shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
     return (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -259,9 +247,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_buckets: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
@@ -275,34 +260,31 @@ def minhash_lsh_pairs(
     (tiny) candidate set — this is the 100 TB path where all-pairs Jaccard
     is infeasible.
     """
-    buckets = _band_buckets(
-        df, num_hashes, bands, k=k, id_col=id_col, text_col=text_col
+    buckets = _band_buckets(df, num_hashes, bands, k=k)
+    # The candidate step self-joins the bucket frame; without a persist
+    # Spark evaluates the whole shingle -> md5 -> signature pipeline
+    # once PER SIDE (md5 over every shingle dominates d3's cost).
+    # The cached frame is tiny — (id, band, bucket-hash) × bands rows
+    # per doc, independent of document length — so MEMORY_AND_DISK is
+    # bounded; tracked in ..caching so the next registry query
+    # releases it (callers can also spark.catalog.clearCache()).
+    # Persist it ALREADY hash-partitioned on the self-join key
+    # (band, bucket): the cached partitioning satisfies both join
+    # sides' clustering, so the candidate join re-exchanges NOTHING
+    # — one repartition at build replaces two exchanges of the same
+    # rows per consumer (guide §2.4). No explicit partition count:
+    # shuffle sizing / AQE stays scale-adaptive.
+    from pyspark import StorageLevel
+
+    from ..caching import track
+
+    buckets = track(
+        buckets.repartition("band", "bucket")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if cache_buckets:
-        # The candidate step self-joins the bucket frame; without a persist
-        # Spark evaluates the whole shingle -> md5 -> signature pipeline
-        # once PER SIDE (md5 over every shingle dominates d3's cost).
-        # The cached frame is tiny — (id, band, bucket-hash) × bands rows
-        # per doc, independent of document length — so MEMORY_AND_DISK is
-        # bounded; tracked in ..caching so the next registry query
-        # releases it (callers can also spark.catalog.clearCache()).
-        # Persist it ALREADY hash-partitioned on the self-join key
-        # (band, bucket): the cached partitioning satisfies both join
-        # sides' clustering, so the candidate join re-exchanges NOTHING
-        # — one repartition at build replaces two exchanges of the same
-        # rows per consumer (guide §2.4). No explicit partition count:
-        # shuffle sizing / AQE stays scale-adaptive.
-        from pyspark import StorageLevel
 
-        from ..caching import track
-
-        buckets = track(
-            buckets.repartition("band", "bucket")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    ca = buckets.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-    cb = buckets.select(F.col(id_col).alias("doc_b"), "band", "bucket")
+    ca = buckets.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
+    cb = buckets.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
     candidates = (
         ca.join(cb, on=["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -311,7 +293,7 @@ def minhash_lsh_pairs(
     )
 
     return _verify_candidates(
-        candidates, df, k, threshold, id_col, text_col, "doc_a", "doc_b"
+        candidates, df, k, threshold, "doc_id", "text", "doc_a", "doc_b"
     ).select("doc_a", "doc_b", "jaccard")
 
 
@@ -356,9 +338,7 @@ def _verify_candidates(
     )
 
 
-def simhash(
-    df: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """Per-document b-bit SimHash from token md5s.
 
     Bit j of a token = bit j of its md5's leading hex nibbles; the document
@@ -367,9 +347,7 @@ def simhash(
     Pure column expressions (b conditional-sum aggregates over one token
     explode) — at scale this is a single hash-aggregate on doc id.
     """
-    toks = explode_tokens(df, id_col, text_col).withColumn(
-        "h", F.md5(F.col("token"))
-    )
+    toks = explode_tokens(df).withColumn("h", F.md5(F.col("token")))
     bit_sums = []
     for j in range(bits):
         nib = nibble_value("h", 1 + j // 4)
@@ -379,20 +357,18 @@ def simhash(
         bit_sums.append(
             F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"s_{j}")
         )
-    sums = toks.groupBy(id_col).agg(*bit_sums)
+    sums = toks.groupBy("doc_id").agg(*bit_sums)
     sim = None
     for j in range(bits):
         term = F.when(F.col(f"s_{j}") > 0, F.lit(1 << (bits - 1 - j))).otherwise(0)
         sim = term if sim is None else sim + term
-    return sums.select(F.col(id_col), sim.cast("long").alias("simhash"))
+    return sums.select(F.col("doc_id"), sim.cast("long").alias("simhash"))
 
 
 def simhash_pairs(
     df: DataFrame,
     bits: int = 16,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -409,7 +385,7 @@ def simhash_pairs(
     the exhaustive pair join, so the driver's hash-match PROVES the
     blocking loses no pair.
     """
-    s = simhash(df, bits=bits, id_col=id_col, text_col=text_col)
+    s = simhash(df, bits=bits)
     n_seg = max_hamming + 1
     widths = [
         bits // n_seg + (1 if i < bits % n_seg else 0) for i in range(n_seg)
@@ -427,21 +403,21 @@ def simhash_pairs(
             )
         )
     segs = s.select(
-        id_col, "simhash", F.explode(F.array(*seg_structs)).alias("ss")
+        "doc_id", "simhash", F.explode(F.array(*seg_structs)).alias("ss")
     ).select(
-        id_col,
+        "doc_id",
         "simhash",
         F.col("ss.seg").alias("seg"),
         F.col("ss.segval").alias("segval"),
     )
     a = segs.select(
-        F.col(id_col).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         F.col("simhash").alias("sim_a"),
         "seg",
         "segval",
     )
     b = segs.select(
-        F.col(id_col).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         F.col("simhash").alias("sim_b"),
         "seg",
         "segval",
@@ -471,7 +447,6 @@ def incremental_dedup(
     k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_buckets: bool = False,
     cache_tracker: list | None = None,
 ) -> DataFrame:
     """Dedup an arriving batch AGAINST an existing corpus — the production
@@ -479,17 +454,14 @@ def incremental_dedup(
     everything already accepted, without ever re-comparing the corpus to
     itself.
 
-    ``cache_buckets`` defaults to ``False`` here (unlike
-    :func:`minhash_lsh_pairs`): the incremental path is what a
-    long-running ingestion service calls once per batch, and a persist
-    with no unpersist would accumulate a cached frame per ingest until
-    ``clearCache``. One-shot callers (the d11 registry query) pass
-    ``True`` to avoid evaluating the signature pipeline once per side of
-    the candidate join; a service that wants the caching passes ``True``
-    plus a ``cache_tracker`` list — every frame this call persists is
-    appended to it, so the caller can ``unpersist()`` each one after
-    consuming the output (the streaming rendition in
-    ``streaming/dedup_stream.py`` does exactly that per epoch).
+    The bucket frame is persisted so the signature pipeline is not
+    evaluated once per side of the candidate join. A long-running
+    ingestion service passes a ``cache_tracker`` list: every frame this
+    call persists is appended to it, so the caller can ``unpersist()``
+    each one after consuming the output (the streaming rendition in
+    ``streaming/dedup_stream.py`` does exactly that per epoch). Without
+    a tracker the frame is registered with ``..caching``, and the next
+    registry query releases it.
 
     ``new_pred`` is a row predicate marking the new batch (a
     ``batch_date`` partition in practice). Verdict per new document:
@@ -526,28 +498,27 @@ def incremental_dedup(
     exact = new_keys.join(corpus_keys, "__ck").select("new_id", "exact_id")
 
     # near: banded buckets over the full frame (one signature pass),
-    # candidates restricted to the new x corpus quadrant. With
-    # cache_buckets=True the bucket frame (tiny: (id, band, bucket))
-    # is persisted so the shingle -> md5 -> signature pipeline runs
-    # once, not per side of the candidate join — opt-in, see docstring.
+    # candidates restricted to the new x corpus quadrant. The bucket
+    # frame (tiny: (id, band, bucket)) is persisted so the shingle ->
+    # md5 -> signature pipeline runs once, not per side of the
+    # candidate join.
     buckets = _band_buckets(
         df, num_hashes, bands, k=k, id_col=id_col, text_col=text_col
     )
     flags = flagged.select(id_col, "__new")
     tagged = buckets.join(flags, id_col)
-    if cache_buckets:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_tracker is not None:
-            # caller-managed release (the streaming services' per-epoch
-            # unpersist) — do NOT also register globally, the epoch
-            # cache must outlive interleaved registry queries
-            cache_tracker.append(tagged)
-        else:
-            from ..caching import track
+    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+    if cache_tracker is not None:
+        # caller-managed release (the streaming services' per-epoch
+        # unpersist) — do NOT also register globally, the epoch
+        # cache must outlive interleaved registry queries
+        cache_tracker.append(tagged)
+    else:
+        from ..caching import track
 
-            track(tagged)
+        track(tagged)
     nb = tagged.filter(F.col("__new")).select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
@@ -584,8 +555,6 @@ def containment_pairs(
     df: DataFrame,
     k: int = 3,
     threshold: float = 0.6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = 50,
 ) -> DataFrame:
     """Directed shingle-containment pairs: |A ∩ B| / |A| >= threshold.
@@ -606,8 +575,7 @@ def containment_pairs(
     intersection is computed once and fanned out into the two directed
     rows row-locally.
     """
-    sh = word_shingles(df, k=k, id_col=id_col, text_col=text_col,
-                       distinct=False)
+    sh = word_shingles(df, k=k, distinct=False)
     sh = _shingle_partitioned_distinct(sh)  # one exchange feeds all (r14)
     sh = _rare_shingles(sh, max_df)
     # triple-consumed (sizes + both join sides) — persist like
@@ -618,17 +586,17 @@ def containment_pairs(
     from ..caching import track
 
     sh = track(sh.persist(StorageLevel.MEMORY_AND_DISK))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, on="shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
     both = inter.join(na, "doc_a").join(nb, "doc_b")
     fwd = both.select(
         "doc_a", "doc_b", (F.col("n_common") / F.col("n_a")).alias("containment")
@@ -643,8 +611,6 @@ def containment_pairs(
 
 def segment_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     seg_words: int = 10,
     key: str = "text",
 ) -> DataFrame:
@@ -664,7 +630,7 @@ def segment_dedup(
     segments joined in document order ("" when everything was seen
     before).
 
-    PRECONDITION: ``id_col`` uniquely identifies rows (it is the
+    PRECONDITION: ``doc_id`` uniquely identifies rows (it is the
     document's primary key). Under duplicate ids the two key modes
     diverge — ``key="text"`` groups all same-id rows into one pooled
     output row, while ``key="md5"`` re-derives text per input row and
@@ -692,7 +658,7 @@ def segment_dedup(
       (2^-64-scale at corpus size; acceptable for dedup, same trade
       every fingerprint dedup makes).
     """
-    w = F.split(F.col(text_col), " ")
+    w = F.split(F.col("text"), " ")
     n_segs = F.ceil(F.size(w) / F.lit(seg_words)).cast("int")
     seg_arr = F.transform(
         F.sequence(F.lit(0), n_segs - 1),
@@ -703,31 +669,31 @@ def segment_dedup(
     if key == "md5":
         # (id, seg_idx, 16-byte hash) — no text crosses a shuffle
         hashed = df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode(
                 F.transform(seg_arr, lambda s: F.md5(s))
             ).alias("seg_idx", "h"),
         )
         winner = hashed.groupBy("h").agg(
-            F.min(F.struct(F.col(id_col), F.col("seg_idx"))).alias("__w")
+            F.min(F.struct(F.col("doc_id"), F.col("seg_idx"))).alias("__w")
         )
         flags = hashed.join(winner, "h").select(
-            id_col,
+            "doc_id",
             "seg_idx",
             (
-                (F.col("__w").getField(id_col) == F.col(id_col))
+                (F.col("__w").getField("doc_id") == F.col("doc_id"))
                 & (F.col("__w").getField("seg_idx") == F.col("seg_idx"))
             ).alias("__keep"),
         )
-        per_doc = flags.groupBy(id_col).agg(
+        per_doc = flags.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("int").alias("n_segs"),
             F.sum(F.col("__keep").cast("int")).cast("int").alias("n_kept"),
             F.sort_array(
                 F.collect_list(F.when(F.col("__keep"), F.col("seg_idx")))
             ).alias("__kept_idx"),
         )
-        return df.join(per_doc, id_col).select(
-            id_col,
+        return df.join(per_doc, "doc_id").select(
+            "doc_id",
             "n_segs",
             "n_kept",
             F.array_join(
@@ -741,17 +707,17 @@ def segment_dedup(
     if key != "text":
         raise ValueError(f"segment_dedup: unknown key mode {key!r}")
     segs = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(seg_arr).alias("seg_idx", "seg"),
     )
-    first = Window.partitionBy("seg").orderBy(id_col, "seg_idx")
+    first = Window.partitionBy("seg").orderBy("doc_id", "seg_idx")
     ranked = segs.withColumn(
         "__keep", F.row_number().over(first) == 1
     )
     kept_struct = F.when(
         F.col("__keep"), F.struct(F.col("seg_idx"), F.col("seg"))
     )
-    return ranked.groupBy(id_col).agg(
+    return ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_segs"),
         F.sum(F.col("__keep").cast("int")).cast("int").alias("n_kept"),
         F.array_join(
@@ -769,8 +735,6 @@ def edit_distance_dedup(
     threshold: int = 8,
     prefix_len: int = 16,
     max_block: int | None = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Record-linkage dedup: docs within ``threshold`` Levenshtein edits
     of a lower-id doc, with prefix+length blocking so no all-pairs scan.
@@ -803,11 +767,11 @@ def edit_distance_dedup(
     prefix), per-block pair fanout is capped, and the canonical pick is
     a map-side-combinable min/min_by agg keyed on doc id.
     """
-    blk = F.substring(F.col(text_col), 1, prefix_len)
+    blk = F.substring(F.col("text"), 1, prefix_len)
     docs = df.select(
-        F.col(id_col).alias("ida"),
-        F.col(text_col).alias("ta"),
-        F.length(text_col).alias("la"),
+        F.col("doc_id").alias("ida"),
+        F.col("text").alias("ta"),
+        F.length("text").alias("la"),
         blk.alias("blk"),
     )
     if max_block is not None:

@@ -27,12 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(a, b) edges → (doc_id, component) with component = min doc id
     reachable. Deterministic for any input order."""
     # r14: the edge frame is iteration-invariant but each round ends in a
@@ -55,8 +50,8 @@ def connected_components(
     # (u, v) distinct's clustering — subset key — so the dedup and the
     # layout share the single exchange)
     edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .union(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
         .repartition("v")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -66,7 +61,7 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("doc_id"))
     )
-    for _ in range(max_iter):
+    for _ in range(50):
         neigh_min = (
             edges.join(
                 labels.withColumnRenamed("doc_id", "v").withColumnRenamed(
@@ -106,18 +101,14 @@ def connected_components(
     return labels
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
+def dup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-dup pairs → (doc_id, cluster_id, is_canonical).
 
     cluster_id = min doc id of the component; the canonical (kept) doc is
     that minimum. Docs not in any pair are absent — they are their own
     implicit cluster.
     """
-    comp = connected_components(pairs, a_col, b_col)
+    comp = connected_components(pairs)
     return comp.select(
         "doc_id",
         F.col("component").alias("cluster_id"),
@@ -130,8 +121,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     n_iter: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Personalized PageRank: the random walk RESTARTS at the seed set
     instead of uniformly, so rank measures relevance TO THE SEEDS
@@ -158,7 +147,7 @@ def personalized_pagerank(
     dst agg per unrolled iteration over a persisted edge frame); the
     seed vector is node-sized and broadcasts.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -213,8 +202,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Multi-source BFS: (node, hops) with hops = exact distance to the
     NEAREST seed, bounded at ``max_hops``. Unreached nodes are absent.
@@ -241,10 +228,8 @@ def bfs_hops(
     frontier = visited
     for h in range(1, max_hops + 1):
         nxt = (
-            edges.join(
-                frontier.select(F.col("node").alias(src_col)), src_col
-            )
-            .select(F.col(dst_col).alias("node"))
+            edges.join(frontier.select(F.col("node").alias("src")), "src")
+            .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(h).cast("int"))
@@ -257,11 +242,7 @@ def bfs_hops(
     return visited
 
 
-def triangle_counts(
-    pairs: DataFrame,
-    a_col: str = "pa",
-    b_col: str = "pb",
-) -> DataFrame:
+def triangle_counts(pairs: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected edge list.
 
     Input: DISTINCT undirected edges as (a, b) pairs with a < b (one row
@@ -280,7 +261,7 @@ def triangle_counts(
     equi-joins keyed on a vertex id, so AQE/skew-salting applies; the
     degree frame is node-sized and broadcast.
     """
-    e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+    e = pairs.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
     deg = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -326,8 +307,6 @@ def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -351,7 +330,7 @@ def pagerank(
     the cross-engine float drift (different summation orders at ~1e-17)
     below the emitted precision.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("src").alias("node"))
     nn = nodes.agg(F.count(F.lit(1)).alias("__n"))
@@ -385,12 +364,7 @@ def pagerank(
     return r.select("node", F.round("rank", 12).alias("rank"))
 
 
-def hits_bipartite(
-    edges: DataFrame,
-    n_iter: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits_bipartite(edges: DataFrame, n_iter: int = 2) -> DataFrame:
     """Fixed-iteration HITS on a bipartite directed graph (hubs = src
     side, authorities = dst side), in the INTEGER path-count
     formulation: hubs start at 1 and each update is a plain sum over
@@ -416,9 +390,7 @@ def hits_bipartite(
     """
     if n_iter < 1:
         raise ValueError("hits_bipartite needs n_iter >= 1")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e = edges.select("src", "dst").distinct()
     hub = (
         e.select("src")
         .distinct()
@@ -444,12 +416,7 @@ def hits_bipartite(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    n_iter: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """Fixed-iteration SYNCHRONOUS label propagation (Raghavan et al.
     2007) — community detection by local majority vote.
 
@@ -481,7 +448,7 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -516,13 +483,7 @@ def label_propagation(
     return labels.select("node", F.col("label").alias("community"))
 
 
-def k_core(
-    edges: DataFrame,
-    k: int = 2,
-    n_iter: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int = 2, n_iter: int = 3) -> DataFrame:
     """Bounded k-core peeling (Seidman 1983) — ``n_iter`` synchronous
     rounds of "drop every node with degree < k among surviving nodes",
     then one final degree recompute over the survivors.
@@ -548,9 +509,7 @@ def k_core(
     ``localCheckpoint`` truncates the O(iters) lineage (the n15/pr6
     lesson).
     """
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e0 = edges.select("src", "dst")
     alive = (
         e0.select(F.col("src").alias("node"))
         .union(e0.select(F.col("dst").alias("node")))

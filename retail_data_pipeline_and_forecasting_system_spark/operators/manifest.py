@@ -109,11 +109,11 @@ def merge_manifest_states(cur: DataFrame, delta: DataFrame) -> DataFrame:
     d = delta.select(*[F.col(x).alias(f"b_{x}") for x in delta.columns])
     j = c.join(d, c.a_shard == d.b_shard, "full_outer")
 
-    def add(x, cast="bigint"):
+    def add(x):
         return (
             F.coalesce(F.col(f"a_{x}"), F.lit(0))
             + F.coalesce(F.col(f"b_{x}"), F.lit(0))
-        ).cast(cast)
+        ).cast("bigint")
 
     return j.select(
         F.coalesce("a_shard", "b_shard").alias("shard"),

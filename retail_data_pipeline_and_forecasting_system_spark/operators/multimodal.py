@@ -116,16 +116,14 @@ def _map_payloads(
     return df.mapInPandas(run, schema=schema)
 
 
-def _synthesize(
-    df: DataFrame, id_col: str, encode: Callable[[int], bytes]
-) -> DataFrame:
-    """Test-corpus builder: each id in ``id_col`` becomes the payload
+def _synthesize(df: DataFrame, encode: Callable[[int], bytes]) -> DataFrame:
+    """Test-corpus builder: each ``doc_id`` becomes the payload
     ``encode(id)`` — (doc_id, payload) rows, mirroring a real payload
     fetch (id -> bytes)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            ids = batch[id_col].astype("int64")
+            ids = batch["doc_id"].astype("int64")
             yield pd.DataFrame(
                 {"doc_id": ids, "payload": [encode(int(i)) for i in ids]}
             )
@@ -187,14 +185,12 @@ def read_binary_files(spark, path_glob: str) -> DataFrame:
     )
 
 
-def attach_binary_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Testdata shim: treat the utf-8 bytes of ``text_col`` as the opaque
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Testdata shim: treat the utf-8 bytes of ``text`` as the opaque
     media payload (real pipelines read payloads from object storage or
     ``binaryFile`` sources)."""
     return df.select(
-        id_col, F.encode(F.col(text_col), "utf-8").alias("payload")
+        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
 
 
@@ -307,7 +303,7 @@ def decode_audio_real(df: DataFrame, strict: bool = False) -> DataFrame:
     )
 
 
-def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_wav_payloads(df: DataFrame) -> DataFrame:
     """Deterministic REAL-WAV payload synthesis (test corpus builder):
     each id becomes a genuine RIFF/WAVE file — 8-bit mono PCM,
     ``16 + id%37`` samples of uniform unsigned value ``32 + id%95``
@@ -329,10 +325,10 @@ def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             junk_chunk=(i % 3 == 0),
         )
 
-    return _synthesize(df, id_col, encode)
+    return _synthesize(df, encode)
 
 
-def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_png_payloads(df: DataFrame) -> DataFrame:
     """Deterministic REAL-PNG payload synthesis (test corpus builder):
     each id becomes a genuine Paeth-filtered, zlib-compressed 8-bit
     grayscale PNG of ``(4 + id%13) x (3 + id%11)`` uniform pixels valued
@@ -348,7 +344,7 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             w, h, 1, bytes([32 + i % 95]) * (w * h), filter_type=4
         )
 
-    return _synthesize(df, id_col, encode)
+    return _synthesize(df, encode)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -467,7 +463,7 @@ def sample_frames_real(
     )
 
 
-def synthesize_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_y4m_payloads(df: DataFrame) -> DataFrame:
     """Deterministic REAL-Y4M payload synthesis (test corpus builder):
     each id becomes a genuine YUV4MPEG2 stream — C420, 25 fps,
     ``2*(2 + id%4) x 2*(1 + id%3)`` pixels, ``1 + id%6`` frames, frame k
@@ -488,7 +484,7 @@ def synthesize_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             w, h, frames, fps=(25, 1), frame_param=b" Xsynth"
         )
 
-    return _synthesize(df, id_col, encode)
+    return _synthesize(df, encode)
 
 
 def extract_features(df: DataFrame, dims: int = 8) -> DataFrame:
@@ -561,9 +557,7 @@ def audio_frame_features(
     )
 
 
-def synthesize_square_wav_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_square_wav_payloads(df: DataFrame) -> DataFrame:
     """Deterministic square-wave WAV synthesis (m13 corpus builder):
     each id becomes a genuine 8-bit mono RIFF file of ``16*(1 + id%4)``
     samples — a period-``2^(1 + id%3)`` square wave of amplitude
@@ -585,7 +579,7 @@ def synthesize_square_wav_payloads(
             pcm, sample_rate=8000, bit_depth=8, channels=1
         )
 
-    return _synthesize(df, id_col, encode)
+    return _synthesize(df, encode)
 
 
 def _gradient_png(i: int, phase: int = 0) -> bytes:
@@ -597,7 +591,7 @@ def _gradient_png(i: int, phase: int = 0) -> bytes:
 
 
 def synthesize_gradient_png_payloads(
-    df: DataFrame, id_col: str = "doc_id", per_id_phase: bool = False
+    df: DataFrame, per_id_phase: bool = False
 ) -> DataFrame:
     """Deterministic REAL-PNG gradient synthesis (m15/m16/m17 corpus
     builder): each id becomes a genuine Paeth-filtered zlib-compressed
@@ -614,7 +608,7 @@ def synthesize_gradient_png_payloads(
     non-trivial predictors.
     """
     return _synthesize(
-        df, id_col, lambda i: _gradient_png(i, i if per_id_phase else 0)
+        df, lambda i: _gradient_png(i, i if per_id_phase else 0)
     )
 
 
@@ -742,12 +736,10 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def perceptual_hash(
-    df: DataFrame, grid_w: int = 9, grid_h: int = 8, strict: bool = False
-) -> DataFrame:
+def perceptual_hash(df: DataFrame, strict: bool = False) -> DataFrame:
     """Difference hash (dHash) over REAL decoded pixels — the standard
     perceptual image fingerprint: NN-resample the channel-0 plane to a
-    ``grid_w x grid_h`` grid (default 9x8, the canonical dHash shape)
+    ``grid_w x grid_h`` grid (9x8, the canonical dHash shape)
     with the same all-integer mapping as :func:`resize_media_real`
     (``src = (j*src_dim) // out_dim``), then bit ``i*(grid_w-1)+j`` is
     set iff ``grid[i][j+1] > grid[i][j]`` — 64 bits capturing local
@@ -761,6 +753,7 @@ def perceptual_hash(
     Grouping / banding on the emitted 16 bytes is the caller's (m17's)
     one digest-sized exchange.
     """
+    grid_w, grid_h = 9, 8
     half = grid_h // 2
 
     def dhash(data: bytes):
@@ -955,7 +948,7 @@ PNG_META_SCHEMA = T.StructType(
 )
 
 
-def synthesize_png_with_text(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_png_with_text(df: DataFrame) -> DataFrame:
     """Gradient PNGs carrying REAL ``tEXt`` metadata chunks (m20 corpus
     builder): every id gets ``source = cam-<id%7>``; ids divisible by 3
     also get ``author = u<id%11>`` — closed-form strings a SQL oracle
@@ -967,7 +960,7 @@ def synthesize_png_with_text(df: DataFrame, id_col: str = "doc_id") -> DataFrame
             chunks.append(("author", f"u{i % 11}"))
         return imagecodec.append_text_chunks(_gradient_png(i), chunks)
 
-    return _synthesize(df, id_col, encode)
+    return _synthesize(df, encode)
 
 
 def extract_png_metadata(df: DataFrame, strict: bool = False) -> DataFrame:

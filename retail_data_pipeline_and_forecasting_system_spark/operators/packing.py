@@ -49,33 +49,20 @@ def pack_oracle(tokens: list[int], capacity: int) -> list[int]:
     return out
 
 
-def pack_sequences(
-    docs: DataFrame,
-    capacity: int = 256,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 64,
-) -> DataFrame:
-    """Assign every document a ``seq_id`` (0-based per ``group_col``) such
+def pack_sequences(docs: DataFrame, capacity: int = 256) -> DataFrame:
+    """Assign every document a ``seq_id`` (0-based per ``source``) such
     that each sequence's total whitespace-token count is <= ``capacity``
-    (except single over-long docs). Order within a group is ``id_col``
+    (except single over-long docs). Order within a group is ``doc_id``
     ascending — deterministic at any parallelism.
 
-    Returns (id_col, group_col, n_tokens int, seq_id int).
+    Returns (doc_id, source, n_tokens int, seq_id int).
     """
     slim = docs.select(
-        F.col(id_col),
-        F.col(group_col),
-        F.size(F.split(F.col(text_col), " ")).cast("int").alias("n_tokens"),
+        F.col("doc_id"),
+        F.col("source"),
+        F.size(F.split(F.col("text"), " ")).cast("int").alias("n_tokens"),
     )
-    return pack_counts(
-        slim,
-        capacity=capacity,
-        group_col=group_col,
-        id_col=id_col,
-        num_buckets=num_buckets,
-    )
+    return pack_counts(slim, capacity=capacity)
 
 
 def pack_counts(
@@ -84,7 +71,6 @@ def pack_counts(
     group_col: str = "source",
     id_col: str = "doc_id",
     count_col: str = "n_tokens",
-    num_buckets: int = 64,
 ) -> DataFrame:
     """The packing fold over a PRE-COMPUTED token-count frame
     (``id_col``, ``group_col``, ``count_col``) — the entry point for
@@ -140,6 +126,4 @@ def pack_counts(
 
     from .bucketed import bucketed_fold
 
-    return bucketed_fold(
-        slim, group_col, kernel, out_schema, num_buckets=num_buckets
-    )
+    return bucketed_fold(slim, group_col, kernel, out_schema)

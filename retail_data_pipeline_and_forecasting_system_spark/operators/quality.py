@@ -187,9 +187,7 @@ def check_expectations(
     )
 
 
-def tag_violations(
-    df: DataFrame, rules: list[Expectation], col: str = "violated"
-) -> DataFrame:
+def tag_violations(df: DataFrame, rules: list[Expectation]) -> DataFrame:
     """Enforcement side of the gate: every row gains a comma-joined list
     of the rules it violates ('' when clean).
 
@@ -235,10 +233,10 @@ def tag_violations(
         if r.kind == "rowwise"
     ] + fk_markers
     if not parts:
-        return df.withColumn(col, F.lit(""))
+        return df.withColumn("violated", F.lit(""))
     # ';'-joined: rule names themselves contain commas (range bounds)
     tagged = df.withColumn(
-        col, F.array_join(F.array_compact(F.array(*parts)), ";")
+        "violated", F.array_join(F.array_compact(F.array(*parts)), ";")
     )
     # drop exactly the markers this call added — a pre-existing user
     # column that happens to start with '__fk_' survives untouched
@@ -246,14 +244,14 @@ def tag_violations(
 
 
 def split_by_expectations(
-    df: DataFrame, rules: list[Expectation], col: str = "violated"
+    df: DataFrame, rules: list[Expectation]
 ) -> tuple[DataFrame, DataFrame]:
     """(clean, quarantine): clean rows keep the input schema; quarantined
     rows carry the `violated` rule list for triage/replay. The standard
     ingest contract — bad rows are never silently dropped, they are
     routed (generalizes the reference's silent NaN drop,
     src/data_processor.py:320-335)."""
-    tagged = tag_violations(df, rules, col=col)
-    clean = tagged.filter(F.col(col) == "").drop(col)
-    quarantine = tagged.filter(F.col(col) != "")
+    tagged = tag_violations(df, rules)
+    clean = tagged.filter(F.col("violated") == "").drop("violated")
+    quarantine = tagged.filter(F.col("violated") != "")
     return clean, quarantine

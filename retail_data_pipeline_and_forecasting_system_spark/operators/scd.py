@@ -92,9 +92,6 @@ def scd2_intervals(
     state: str,
     ts: str,
     seq: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_flag: str = "is_current",
 ) -> DataFrame:
     """Collapse an event log into SCD2 validity intervals.
 
@@ -107,19 +104,19 @@ def scd2_intervals(
     changes = (
         df.withColumn("_prev", F.lag(state).over(order))
         .filter(F.col("_prev").isNull() | (F.col("_prev") != F.col(state)))
-        .select(entity, state, F.col(ts).alias(valid_from), seq)
+        .select(entity, state, F.col(ts).alias("valid_from"), seq)
     )
-    close = W.partitionBy(entity).orderBy(valid_from, seq)
-    nxt = F.lead(valid_from).over(close)
+    close = W.partitionBy(entity).orderBy("valid_from", seq)
+    nxt = F.lead("valid_from").over(close)
     return changes.select(
         entity,
         state,
-        valid_from,
-        nxt.alias(valid_to),
+        "valid_from",
+        nxt.alias("valid_to"),
         F.when(nxt.isNull(), F.lit(1))
         .otherwise(F.lit(0))
         .cast("bigint")
-        .alias(current_flag),
+        .alias("is_current"),
     )
 
 
@@ -149,7 +146,6 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key: str | Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """CDC extraction from two dimension snapshots: which rows were
     ``added`` / ``removed`` / ``changed`` between ``old`` and ``new``.
@@ -158,7 +154,8 @@ def snapshot_diff(
     emit a change feed, the feed is DERIVED by diffing consecutive
     snapshots — this operator is that derivation. Output: key columns +
     ``change_type`` (added | removed | changed); unchanged rows are
-    dropped (a change feed carries changes only).
+    dropped (a change feed carries changes only). Every non-key column
+    of ``new`` is compared.
 
     Column comparison is null-safe per column (``IS DISTINCT FROM``
     semantics via ``eqNullSafe``), so NULL -> value, value -> NULL and
@@ -171,8 +168,7 @@ def snapshot_diff(
     shuffle-free; AQE handles the skewed-key case otherwise.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    if compare_cols is None:
-        compare_cols = [c for c in new.columns if c not in keys]
+    compare_cols = [c for c in new.columns if c not in keys]
     o = old.select(
         *[F.col(k).alias(f"__ok_{k}") for k in keys],
         *[F.col(c).alias(f"__o_{c}") for c in compare_cols],

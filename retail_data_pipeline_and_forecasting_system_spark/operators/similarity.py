@@ -59,8 +59,6 @@ def cosine_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine to a literal query vector.
 
@@ -69,9 +67,9 @@ def cosine_topk(
     """
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = embeddings.select(
-        id_col, cosine(F.col(vec_col), q).alias("cos_sim")
+        "vec_id", cosine(F.col("embedding"), q).alias("cos_sim")
     )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.col("vec_id")).limit(k)
 
 
 def sign_lsh_bucket(
@@ -98,8 +96,6 @@ def lsh_bucket_topk(
     query_vec: list[float],
     k: int = 10,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: scan only the query's sign-LSH bucket.
 
@@ -108,11 +104,11 @@ def lsh_bucket_topk(
     """
     qbucket = sum((1 << i) for i, v in enumerate(query_vec[:n_bits]) if v > 0)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    bucketed = embeddings.withColumn("__bucket", sign_lsh_bucket(vec_col, n_bits))
+    bucketed = embeddings.withColumn("__bucket", sign_lsh_bucket("embedding", n_bits))
     return (
         bucketed.filter(F.col("__bucket") == qbucket)
-        .select(id_col, cosine(F.col(vec_col), q).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
+        .select("vec_id", cosine(F.col("embedding"), q).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -122,8 +118,6 @@ def lsh_multiprobe_topk(
     query_vec: list[float],
     k: int = 10,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-probe sign-LSH top-k: scan the query's bucket AND every
     Hamming-distance-1 neighbor bucket (flip each of the ``n_bits``
@@ -142,12 +136,12 @@ def lsh_multiprobe_topk(
     probes = [qbucket] + [qbucket ^ (1 << i) for i in range(n_bits)]
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     bucketed = embeddings.withColumn(
-        "__bucket", sign_lsh_bucket(vec_col, n_bits)
+        "__bucket", sign_lsh_bucket("embedding", n_bits)
     )
     return (
         bucketed.filter(F.col("__bucket").isin(probes))
-        .select(id_col, cosine(F.col(vec_col), q).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
+        .select("vec_id", cosine(F.col("embedding"), q).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -312,8 +306,6 @@ def ivf_topk(
     n_centroids: int = 16,
     k: int = 10,
     n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     model: tuple[list[tuple[int, list[float]]], list[float]] | None = None,
 ) -> DataFrame:
@@ -349,18 +341,16 @@ def ivf_topk(
             # first-n-by-id stand-in quantizer (oracle-able); pass the
             # output of kmeans_lloyd/kmeans_mllib for a learned one
             centroids = embeddings.filter(
-                F.col(id_col) < n_centroids
+                F.col("vec_id") < n_centroids
             ).select(
-                F.col(id_col).alias("cent_id"),
-                F.col(vec_col).alias("cent_vec"),
+                F.col("vec_id").alias("cent_id"),
+                F.col("embedding").alias("cent_vec"),
             )
         cent_list = _collect_centroids(centroids)
-        qrow = embeddings.filter(F.col(id_col) == query_id).head()
+        qrow = embeddings.filter(F.col("vec_id") == query_id).head()
         if qrow is None:
-            raise ValueError(
-                f"query_id {query_id!r} not found in {id_col}"
-            )
-        qvec = [float(x) for x in qrow[vec_col]]
+            raise ValueError(f"query_id {query_id!r} not found in vec_id")
+        qvec = [float(x) for x in qrow["embedding"]]
     # multi-probe: the query searches its n_probe nearest cells (recall
     # lever — probe=1 is fastest, probe=n_centroids degenerates to brute
     # force); ties → lowest centroid id, exactly the engine's struct order
@@ -370,20 +360,20 @@ def ivf_topk(
             (_l2_py(qvec, cv), cid) for cid, cv in cent_list
         )[:n_probe]
     ]
-    nearest = F.array_min(centroid_dist_structs(vec_col, cent_list))
+    nearest = F.array_min(centroid_dist_structs("embedding", cent_list))
     q_lit = F.expr(
         "array(" + ",".join(repr(float(x)) + "D" for x in qvec) + ")"
     )
     return (
         embeddings.select(
-            id_col, vec_col, nearest.getField("cent_id").alias("cent_id")
+            "vec_id", "embedding", nearest.getField("cent_id").alias("cent_id")
         )
         .filter(
             F.col("cent_id").isin(probe_cells)
-            & (F.col(id_col) != query_id)
+            & (F.col("vec_id") != query_id)
         )
-        .select(id_col, cosine(F.col(vec_col), q_lit).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
+        .select("vec_id", cosine(F.col("embedding"), q_lit).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -412,12 +402,11 @@ def kmeans_lloyd(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    target_cell_size: int = 32,
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column.
 
     ``k="auto"`` derives k from one cheap ``count()`` via
-    :func:`auto_k` (k = ceil(sqrt(n / target_cell_size))) so callers
+    :func:`auto_k` (k = ceil(sqrt(n / 32))) so callers
     building SemDeDup cells never pin a k that stops scaling — the
     count is a zero-column scan of the fit set (one cheap extra pass;
     trivial beside the n_iter full passes of the fit itself).
@@ -445,7 +434,7 @@ def kmeans_lloyd(
     """
     spark = embeddings.sparkSession
     if k == "auto":
-        k = auto_k(embeddings.count(), target_cell_size)
+        k = auto_k(embeddings.count())
     cents_rows = (
         embeddings.orderBy(id_col)
         .limit(k)
@@ -522,8 +511,6 @@ def assign_cells_multiprobe(
     embeddings: DataFrame,
     centroids: DataFrame,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The ``n_probe`` NEAREST cells per vector, exploded to
     (id, vec, probe_rank, cent_id) — one row per probe, still map-only
@@ -536,18 +523,18 @@ def assign_cells_multiprobe(
     """
     ranked = F.slice(
         F.array_sort(
-            centroid_dist_structs(vec_col, _collect_centroids(centroids))
+            centroid_dist_structs("embedding", _collect_centroids(centroids))
         ),
         1,
         n_probe,
     )
     return embeddings.select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         F.posexplode(ranked).alias("probe_rank", "__p"),
     ).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         (F.col("probe_rank") + 1).cast("int").alias("probe_rank"),
         F.col("__p").getField("cent_id").alias("cent_id"),
     )
@@ -791,8 +778,6 @@ def kmeans_mllib(
     embeddings: DataFrame,
     k: int = 16,
     n_iter: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """MLlib KMeans as the IVF coarse quantizer — the library twin of
@@ -808,7 +793,7 @@ def kmeans_mllib(
     from pyspark.ml.functions import array_to_vector
 
     feat = embeddings.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias(
+        array_to_vector(F.col("embedding").cast("array<double>")).alias(
             "features"
         )
     )
@@ -823,16 +808,11 @@ def kmeans_mllib(
     )
 
 
-def reduce_dims_pca(
-    embeddings: DataFrame,
-    out_dims: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def reduce_dims_pca(embeddings: DataFrame, out_dims: int):
     """MLlib PCA projection of an embedding column to ``out_dims``.
 
     Returns (model, projected) where projected has the same
-    (id, vec) contract with ``vec_col`` replaced by the reduced
+    (id, vec) contract with ``embedding`` replaced by the reduced
     ``array<double>`` — drop-in input for :func:`cosine_topk` /
     :func:`ivf_topk` when the original dimensionality makes brute-force
     scoring or centroid learning too expensive. Training is distributed
@@ -843,12 +823,12 @@ def reduce_dims_pca(
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     feat = embeddings.select(
-        id_col,
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_fv"),
+        "vec_id",
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("_fv"),
     )
     model = PCA(k=out_dims, inputCol="_fv", outputCol="_pv").fit(feat)
     projected = model.transform(feat).select(
-        id_col, vector_to_array("_pv").alias(vec_col)
+        "vec_id", vector_to_array("_pv").alias("embedding")
     )
     return model, projected
 
@@ -889,8 +869,6 @@ def signed_random_projection(
     embeddings: DataFrame,
     out_dim: int,
     in_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """JL signed random projection to ``out_dim`` wide double columns
     ``y0..y{k-1}`` plus ``norm_ratio`` = |y|²/|x|² (the per-vector
@@ -907,20 +885,20 @@ def signed_random_projection(
 
     scale = repr(math.sqrt(out_dim))
     ys = [
-        F.expr(f"({rp_dot_sql(vec_col, row)}) / {scale}").alias(f"y{j}")
+        F.expr(f"({rp_dot_sql('embedding', row)}) / {scale}").alias(f"y{j}")
         for j, row in enumerate(signs)
     ]
     proj = embeddings.select(
-        id_col,
+        "vec_id",
         *ys,
-        dot(vec_col, vec_col).alias("__nx"),
+        dot("embedding", "embedding").alias("__nx"),
     )
     normy = None
     for j in range(out_dim):
         term = F.col(f"y{j}") * F.col(f"y{j}")
         normy = term if normy is None else normy + term
     return proj.select(
-        id_col,
+        "vec_id",
         *[f"y{j}" for j in range(out_dim)],
         (normy / F.nullif(F.col("__nx"), F.lit(0.0))).alias("norm_ratio"),
     )
@@ -976,9 +954,6 @@ def hyperplane_lsh_pairs(
     n_bits: int = 32,
     n_bands: int = 4,
     threshold: float = 0.25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
 ) -> DataFrame:
     """Near-dup pairs by random-hyperplane LSH banding + exact-cosine verify.
 
@@ -998,11 +973,11 @@ def hyperplane_lsh_pairs(
     """
     width = n_bits // n_bands
     mask = (1 << width) - 1
-    planes = lcg_hyperplanes(n_bits, dim)
+    planes = lcg_hyperplanes(n_bits, 64)
     sig = embeddings.select(
-        id_col,
-        vec_col,
-        hyperplane_signature(vec_col, planes).alias("sig"),
+        "vec_id",
+        "embedding",
+        hyperplane_signature("embedding", planes).alias("sig"),
     )
     band_structs = F.array(
         *[
@@ -1016,20 +991,20 @@ def hyperplane_lsh_pairs(
         ]
     )
     bands = sig.select(
-        id_col, F.explode(band_structs).alias("bs")
+        "vec_id", F.explode(band_structs).alias("bs")
     ).select(
-        id_col, F.col("bs.band").alias("band"), F.col("bs.bval").alias("bval")
+        "vec_id", F.col("bs.band").alias("band"), F.col("bs.bval").alias("bval")
     )
-    a = bands.select(F.col(id_col).alias("vec_a"), "band", "bval")
-    b = bands.select(F.col(id_col).alias("vec_b"), "band", "bval")
+    a = bands.select(F.col("vec_id").alias("vec_a"), "band", "bval")
+    b = bands.select(F.col("vec_id").alias("vec_b"), "band", "bval")
     cand = (
         a.join(b, on=["band", "bval"])
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b")
         .distinct()
     )
-    ea = sig.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("__ea"))
-    eb = sig.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("__eb"))
+    ea = sig.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("__ea"))
+    eb = sig.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("__eb"))
     return (
         cand.join(ea, "vec_a")
         .join(eb, "vec_b")
@@ -1043,9 +1018,6 @@ def pq_codebooks(
     embeddings: DataFrame,
     m: int = 4,
     ksub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
 ) -> list[list[tuple[int, list[float]]]]:
     """Per-subspace PQ codebooks from the first ``ksub`` vectors by id.
 
@@ -1055,10 +1027,10 @@ def pq_codebooks(
     ksub vectors. Only m * ksub * dim/m floats cross the driver — the
     model state.
     """
-    width = dim // m
+    width = 64 // m
     rows = sorted(
-        (int(r[id_col]), [float(x) for x in r[vec_col]])
-        for r in embeddings.filter(F.col(id_col) < ksub).collect()
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in embeddings.filter(F.col("vec_id") < ksub).collect()
     )
     return [
         [(cid, vec[s * width : (s + 1) * width]) for cid, vec in rows]
@@ -1069,8 +1041,6 @@ def pq_codebooks(
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization encoding: (id, code array<int>), map-only.
 
@@ -1086,10 +1056,10 @@ def pq_encode(
     width = len(codebooks[0][0][1])
     code_cols = []
     for s in range(m):
-        sub = f"slice(`{vec_col}`, {s * width + 1}, {width})"
+        sub = f"slice(`embedding`, {s * width + 1}, {width})"
         nearest = F.array_min(centroid_dist_structs(sub, codebooks[s]))
         code_cols.append(nearest.getField("cent_id"))
-    return embeddings.select(id_col, F.array(*code_cols).alias("code"))
+    return embeddings.select("vec_id", F.array(*code_cols).alias("code"))
 
 
 def pq_topk(
@@ -1098,9 +1068,6 @@ def pq_topk(
     m: int = 4,
     ksub: int = 8,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
 ) -> DataFrame:
     """PQ approximate top-k by asymmetric distance computation (ADC).
 
@@ -1116,13 +1083,13 @@ def pq_topk(
     to lowest id. Exact re-ranking of this shortlist (cosine on the raw
     vectors of k' > k survivors) is composition with cosine_topk.
     """
-    width = dim // m
-    books = pq_codebooks(embeddings, m, ksub, id_col, vec_col, dim)
+    width = 64 // m
+    books = pq_codebooks(embeddings, m, ksub)
     _validate_codebook_ids(books)
-    qrow = embeddings.filter(F.col(id_col) == query_id).head()
+    qrow = embeddings.filter(F.col("vec_id") == query_id).head()
     if qrow is None:
-        raise ValueError(f"query_id {query_id!r} not found in {id_col}")
-    qvec = [float(x) for x in qrow[vec_col]]
+        raise ValueError(f"query_id {query_id!r} not found in vec_id")
+    qvec = [float(x) for x in qrow["embedding"]]
     # driver-side table: Python float ops are the same IEEE doubles,
     # summed left-to-right exactly like the engine fold
     dtable = []
@@ -1135,7 +1102,7 @@ def pq_topk(
                 acc = acc + (x - y) * (x - y)
             row.append(acc)
         dtable.append(row)
-    coded = pq_encode(embeddings, books, id_col, vec_col)
+    coded = pq_encode(embeddings, books)
     d = lambda x: repr(float(x)) + "D"
     lookups = [
         f"element_at(array({','.join(d(v) for v in dtable[s])}), code[{s}] + 1)"
@@ -1143,9 +1110,9 @@ def pq_topk(
     ]
     approx = F.expr(" + ".join(lookups))
     return (
-        coded.filter(F.col(id_col) != query_id)
-        .select(id_col, approx.alias("approx_l2"))
-        .orderBy("approx_l2", F.col(id_col))
+        coded.filter(F.col("vec_id") != query_id)
+        .select("vec_id", approx.alias("approx_l2"))
+        .orderBy("approx_l2", F.col("vec_id"))
         .limit(k)
     )
 
@@ -1157,9 +1124,6 @@ def pq_rerank_topk(
     ksub: int = 8,
     shortlist: int = 50,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
 ) -> DataFrame:
     """Two-stage retrieval: PQ-ADC shortlist, then EXACT cosine rerank —
     the standard serving pattern (compressed index prunes, raw vectors
@@ -1184,21 +1148,18 @@ def pq_rerank_topk(
         m=m,
         ksub=ksub,
         k=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-    ).select(id_col)
-    qrow = embeddings.filter(F.col(id_col) == query_id).head()
+    ).select("vec_id")
+    qrow = embeddings.filter(F.col("vec_id") == query_id).head()
     if qrow is None:
-        raise ValueError(f"query_id {query_id!r} not found in {id_col}")
-    qvec = [float(x) for x in qrow[vec_col]]
+        raise ValueError(f"query_id {query_id!r} not found in vec_id")
+    qvec = [float(x) for x in qrow["embedding"]]
     q_lit = F.expr(
         "array(" + ",".join(repr(float(x)) + "D" for x in qvec) + ")"
     )
     return (
-        embeddings.join(F.broadcast(short), id_col)
-        .select(id_col, cosine(F.col(vec_col), q_lit).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
+        embeddings.join(F.broadcast(short), "vec_id")
+        .select("vec_id", cosine(F.col("embedding"), q_lit).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -1206,14 +1167,8 @@ def pq_rerank_topk(
 def ivfpq_topk(
     embeddings: DataFrame,
     query_id: int,
-    n_centroids: int = 16,
-    m: int = 4,
-    ksub: int = 8,
     k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
 ) -> DataFrame:
     """IVF-PQ: the production ANN architecture — coarse cells to prune,
     PQ codes to compress, ADC to rank.
@@ -1233,17 +1188,17 @@ def ivfpq_topk(
     Output: (vec_id, approx_l2) — k nearest by coded distance among the
     probed cells, ties to lowest id.
     """
-    width = dim // m
-    cents = embeddings.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
+    width = 64 // 4
+    cents = embeddings.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
     )
     cent_list = _collect_centroids(cents)
-    books = pq_codebooks(embeddings, m, ksub, id_col, vec_col, dim)
+    books = pq_codebooks(embeddings, 4, 8)
     _validate_codebook_ids(books)
-    qrow = embeddings.filter(F.col(id_col) == query_id).head()
+    qrow = embeddings.filter(F.col("vec_id") == query_id).head()
     if qrow is None:
-        raise ValueError(f"query_id {query_id!r} not found in {id_col}")
-    qvec = [float(x) for x in qrow[vec_col]]
+        raise ValueError(f"query_id {query_id!r} not found in vec_id")
+    qvec = [float(x) for x in qrow["embedding"]]
 
     probe_cells = [
         cid
@@ -1256,34 +1211,34 @@ def ivfpq_topk(
             _l2_py(qvec[s * width : (s + 1) * width], cent)
             for _, cent in books[s]
         ]
-        for s in range(m)
+        for s in range(4)
     ]
-    nearest = F.array_min(centroid_dist_structs(vec_col, cent_list))
+    nearest = F.array_min(centroid_dist_structs("embedding", cent_list))
     code_cols = []
-    for s in range(m):
-        sub = f"slice(`{vec_col}`, {s * width + 1}, {width})"
+    for s in range(4):
+        sub = f"slice(`embedding`, {s * width + 1}, {width})"
         code_cols.append(
             F.array_min(centroid_dist_structs(sub, books[s])).getField(
                 "cent_id"
             )
         )
     coded = embeddings.select(
-        id_col,
+        "vec_id",
         nearest.getField("cent_id").alias("cell"),
         F.array(*code_cols).alias("code"),
     )
     d = lambda x: repr(float(x)) + "D"
     lookups = [
         f"element_at(array({','.join(d(v) for v in dtable[s])}), code[{s}] + 1)"
-        for s in range(m)
+        for s in range(4)
     ]
     approx = F.expr(" + ".join(lookups))
     return (
         coded.filter(
-            F.col("cell").isin(probe_cells) & (F.col(id_col) != query_id)
+            F.col("cell").isin(probe_cells) & (F.col("vec_id") != query_id)
         )
-        .select(id_col, approx.alias("approx_l2"))
-        .orderBy("approx_l2", F.col(id_col))
+        .select("vec_id", approx.alias("approx_l2"))
+        .orderBy("approx_l2", F.col("vec_id"))
         .limit(k)
     )
 
@@ -1347,8 +1302,6 @@ def knn_join_ivfpq(
     centroids: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Batch kNN join, IVF-blocked and PQ-scored — n9's candidate
     structure with ADC ranking: the full 100 TB retrieval shape where
@@ -1375,25 +1328,25 @@ def knn_join_ivfpq(
     m = len(codebooks)
     ksub = len(codebooks[0])
     cent_list = _collect_centroids(centroids)
-    nearest = F.array_min(centroid_dist_structs(vec_col, cent_list))
+    nearest = F.array_min(centroid_dist_structs("embedding", cent_list))
     width = len(codebooks[0][0][1])
     code_cols = []
     for s in range(m):
-        sub = f"slice(`{vec_col}`, {s * width + 1}, {width})"
+        sub = f"slice(`embedding`, {s * width + 1}, {width})"
         code_cols.append(
             F.array_min(centroid_dist_structs(sub, codebooks[s])).getField(
                 "cent_id"
             )
         )
     cc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         nearest.getField("cent_id").alias("cent_id"),
         F.array(*code_cols).alias("code"),
     )
     qc = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         nearest.getField("cent_id").alias("cent_id"),
-        adc_dtable_col(vec_col, codebooks).alias("dtable"),
+        adc_dtable_col("embedding", codebooks).alias("dtable"),
     )
     approx = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -1421,9 +1374,6 @@ def hard_negatives(
     corpus: DataFrame,
     k: int = 5,
     margin: float = 0.2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Semi-hard negative mining (FaceNet, Schroff et al. CVPR 2015) —
     the batch-construction primitive for contrastive/metric training
@@ -1451,15 +1401,15 @@ def hard_negatives(
     by cos_sim descending, ties to lowest neighbor id.
     """
     a = anchors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__avec"),
-        F.col(label_col).alias("__albl"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__avec"),
+        F.col("label").alias("__albl"),
     )
     scored = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cvec"),
-            F.col(label_col).alias("__clbl"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("__cvec"),
+            F.col("label").alias("__clbl"),
         )
         .crossJoin(F.broadcast(a))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -1508,8 +1458,6 @@ def nn_descent(
     k: int = 4,
     iters: int = 2,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate kNN-GRAPH construction by NN-Descent (Dong et al.,
     WWW 2011) as pure DataFrame ops — the scalable alternative to any
@@ -1550,7 +1498,7 @@ def nn_descent(
     # still miss mixed-width tables — round-8 review finding): any row
     # too narrow for two independent bucketings raises at action time.
     dim_ok = F.assert_true(
-        F.size(F.col(vec_col)) >= 2 * n_bits,
+        F.size(F.col("embedding")) >= 2 * n_bits,
         F.lit(
             f"nn_descent needs embedding dim >= 2*n_bits (= {2 * n_bits}) "
             "for two independent sign-LSH seed bucketings — lower n_bits "
@@ -1558,11 +1506,11 @@ def nn_descent(
         ),
     )
     emb = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        sign_lsh_bucket(vec_col, n_bits).alias("bkt1"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        sign_lsh_bucket("embedding", n_bits).alias("bkt1"),
         F.when(
-            dim_ok.isNull(), sign_lsh_bucket(vec_col, n_bits, offset=n_bits)
+            dim_ok.isNull(), sign_lsh_bucket("embedding", n_bits, offset=n_bits)
         ).alias("bkt2"),
     )
     # r15: emb is read by BOTH sides of every round's scoring join plus
@@ -1694,8 +1642,6 @@ def ann_recall(
     n_queries: int = 20,
     k: int = 5,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Index-quality monitoring: recall@k of the single-probe sign-LSH
     search measured against exact brute force, per query, in ONE plan —
@@ -1715,7 +1661,7 @@ def ann_recall(
     rounded to 6dp for cross-engine hash stability.
     """
     scored = _lsh_scored_frame(
-        embeddings, n_queries, n_bits, id_col, vec_col
+        embeddings, n_queries, n_bits, "vec_id", "embedding"
     )
     w_exact = Window.partitionBy("query_id").orderBy(F.desc("cs"), "cand_id")
     exact = (
@@ -1773,8 +1719,6 @@ def ann_ndcg(
     n_queries: int = 20,
     k: int = 5,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Position-sensitive index-quality monitoring: nDCG@k of the
     single-probe sign-LSH retrieval against the exact ranking — the
@@ -1801,7 +1745,7 @@ def ann_ndcg(
     exists to surface.
     """
     scored = _lsh_scored_frame(
-        embeddings, n_queries, n_bits, id_col, vec_col
+        embeddings, n_queries, n_bits, "vec_id", "embedding"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cs"), "cand_id")
     exact = (
@@ -1863,8 +1807,8 @@ def ann_ndcg(
             )
         ).alias("idcg")
     )
-    spine = embeddings.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id")
+    spine = embeddings.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id")
     )
     return (
         spine.join(idcg_q, "query_id", "left")
@@ -1894,8 +1838,6 @@ def graph_greedy_search(
     corpus: DataFrame,
     graph: DataFrame,
     steps: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy best-first search over a kNN graph — the SERVING phase of
     graph-ANN (the walk HNSW/NSG run per query; Malkov & Yashunin 2018
@@ -1939,12 +1881,12 @@ def graph_greedy_search(
         .distinct()
     )
     vecs = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
     entry = vecs.select(F.min("id").alias("eid"))
     state = (
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
         .crossJoin(F.broadcast(entry))
         .join(

@@ -63,8 +63,6 @@ def tier_pairs(
     near_threshold: float = 0.35,
     k: int = 3,
     max_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> dict[str, DataFrame]:
     """The three cross-split pair frames the audit AND the scrub share:
     ``{'exact' | 'near_dup' | 'ngram': (train_id, eval_id)}`` — each
@@ -73,7 +71,7 @@ def tier_pairs(
 
     from ..caching import track
 
-    nib = split_nibble(F.col(id_col))
+    nib = split_nibble(F.col("doc_id"))
     # side restriction is a pure map-side filter on the id hash — no
     # label table, no join; NULL nibbles fail both predicates
     train = docs.filter(nib < 12)
@@ -81,8 +79,8 @@ def tier_pairs(
 
     # ---- exact tier: content-key equi-join, train side x eval side
     def keyed(side: DataFrame, out: str) -> DataFrame:
-        return side.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias(out), F.md5(F.col(text_col)).alias("__ck")
+        return side.filter(F.col("text").isNotNull()).select(
+            F.col("doc_id").alias(out), F.md5(F.col("text")).alias("__ck")
         )
 
     ex = (
@@ -95,15 +93,15 @@ def tier_pairs(
     # the bucket join, then d3's row-local exact-Jaccard verification
     buckets = track(
         _band_buckets(
-            docs, num_hashes, bands, k=k, id_col=id_col, text_col=text_col
+            docs, num_hashes, bands, k=k
         ).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    bnib = split_nibble(F.col(id_col))
+    bnib = split_nibble(F.col("doc_id"))
     ba = buckets.filter(bnib < 12).select(
-        F.col(id_col).alias("train_id"), "band", "bucket"
+        F.col("doc_id").alias("train_id"), "band", "bucket"
     )
     bb = buckets.filter(bnib >= 12).select(
-        F.col(id_col).alias("eval_id"), "band", "bucket"
+        F.col("doc_id").alias("eval_id"), "band", "bucket"
     )
     cand = (
         ba.join(bb, ["band", "bucket"])
@@ -111,7 +109,7 @@ def tier_pairs(
         .distinct()
     )
     near = _verify_candidates(
-        cand, docs, k, near_threshold, id_col, text_col,
+        cand, docs, k, near_threshold, "doc_id", "text",
         "train_id", "eval_id",
     ).select("train_id", "eval_id")
 
@@ -119,16 +117,16 @@ def tier_pairs(
     # index, the d2 fanout bound), sides restricted before the join
     sh = track(
         _rare_shingles(
-            word_shingles(docs, k=k, id_col=id_col, text_col=text_col),
+            word_shingles(docs, k=k),
             max_df,
         ).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    snib = split_nibble(F.col(id_col))
+    snib = split_nibble(F.col("doc_id"))
     sa = sh.filter(snib < 12).select(
-        F.col(id_col).alias("train_id"), "shingle"
+        F.col("doc_id").alias("train_id"), "shingle"
     )
     sb = sh.filter(snib >= 12).select(
-        F.col(id_col).alias("eval_id"), "shingle"
+        F.col("doc_id").alias("eval_id"), "shingle"
     )
     ng = sa.join(sb, "shingle").select("train_id", "eval_id").distinct()
 
@@ -142,8 +140,6 @@ def split_overlap_audit(
     near_threshold: float = 0.35,
     k: int = 3,
     max_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per (train_shard, eval_set, tier): distinct leaked-into train
     docs, distinct (train, eval) pairs, and the (min train id, min
@@ -156,8 +152,6 @@ def split_overlap_audit(
         near_threshold=near_threshold,
         k=k,
         max_df=max_df,
-        id_col=id_col,
-        text_col=text_col,
     )
     tiers = (
         pairs["exact"].select(
@@ -200,8 +194,6 @@ def leakage_scrub_manifest(
     near_threshold: float = 0.35,
     k: int = 3,
     max_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """The remediation half of the audit (the x56 -> x58 pattern):
     apply the standard decontamination policy to the train split —
@@ -219,8 +211,6 @@ def leakage_scrub_manifest(
     per train doc + two id-keyed left joins against id-sized verdict
     sets + ONE 12-group map-side-combined agg — the x55 shape with a
     leakage verdict attached."""
-    from .manifest import U64_MOD, manifest_rows
-
     pairs = tier_pairs(
         docs,
         num_hashes=num_hashes,
@@ -228,28 +218,45 @@ def leakage_scrub_manifest(
         near_threshold=near_threshold,
         k=k,
         max_df=max_df,
-        id_col=id_col,
-        text_col=text_col,
     )
     drop_ids = (
         pairs["exact"]
         .select("train_id")
         .unionByName(pairs["near_dup"].select("train_id"))
         .distinct()
-        .select(F.col("train_id").alias(id_col), F.lit(True).alias("__drop"))
+        .select(F.col("train_id").alias("doc_id"))
     )
     flag_ids = (
         pairs["ngram"]
         .select("train_id")
         .distinct()
-        .select(F.col("train_id").alias(id_col), F.lit(True).alias("__flag"))
+        .select(F.col("train_id").alias("doc_id"))
     )
+    state = scrub_shard_state(docs, drop_ids, flag_ids)
+    return state.withColumn(
+        "kept_digest", F.col("kept_sum64").cast("string")
+    ).drop("kept_sum64")
+
+
+def scrub_shard_state(
+    docs: DataFrame, drop_ids: DataFrame, flag_ids: DataFrame
+) -> DataFrame:
+    """Per-train-shard scrub manifest of ``docs``, given the distinct
+    ``doc_id`` frames to DROP and to FLAG-but-KEEP: (train_shard,
+    n_docs, n_dropped, n_flagged_kept, n_kept, kept_tokens,
+    kept_sum64), with kept_sum64 the u64 digest of the kept rows as
+    decimal(20,0). Shared by the batch x60 manifest and the streaming
+    scrub gate's per-epoch delta, so both count and digest alike."""
+    from .manifest import U64_MOD, manifest_rows
+
     # manifest_rows' shard IS the split nibble (x32 layout), so the
     # train restriction is a shard-range filter; NULL-id rows sit in
     # shard -1 and stay out of the scrub, matching the audit
-    rows = manifest_rows(docs, id_col=id_col, text_col=text_col)
+    rows = manifest_rows(docs)
     train = rows.filter((F.col("shard") >= 0) & (F.col("shard") < 12))
-    j = train.join(drop_ids, id_col, "left").join(flag_ids, id_col, "left")
+    drop = drop_ids.select("doc_id", F.lit(True).alias("__drop"))
+    flag = flag_ids.select("doc_id", F.lit(True).alias("__flag"))
+    j = train.join(drop, "doc_id", "left").join(flag, "doc_id", "left")
     dropped = F.coalesce(F.col("__drop"), F.lit(False))
     kept = ~dropped
     flagged_kept = F.coalesce(F.col("__flag"), F.lit(False)) & kept
@@ -271,6 +278,5 @@ def leakage_scrub_manifest(
             F.lit(U64_MOD).cast("decimal(38,0)"),
         )
         .cast("decimal(20,0)")
-        .cast("string")
-        .alias("kept_digest"),
+        .alias("kept_sum64"),
     )

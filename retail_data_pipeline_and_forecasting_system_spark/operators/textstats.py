@@ -24,15 +24,13 @@ STOPWORDS = {
 }
 
 
-def language_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def language_scores(df: DataFrame) -> DataFrame:
     """Per-doc stopword-hit ratio per language + argmax prediction.
 
     Output: (id, n_tokens, <lang>_ratio..., pred_lang). Ties resolve to the
     lexicographically first language (deterministic).
     """
-    toks = explode_tokens(df, id_col, text_col)
+    toks = explode_tokens(df)
     aggs = [F.count(F.lit(1)).alias("n_tokens")]
     for lang, words in sorted(STOPWORDS.items()):
         aggs.append(
@@ -40,7 +38,7 @@ def language_scores(
                 f"{lang}_hits"
             )
         )
-    scored = toks.groupBy(id_col).agg(*aggs)
+    scored = toks.groupBy("doc_id").agg(*aggs)
     for lang in STOPWORDS:
         scored = scored.withColumn(
             f"{lang}_ratio", F.col(f"{lang}_hits") / F.col("n_tokens")
@@ -52,16 +50,14 @@ def language_scores(
         pred = F.when(F.col(f"{lang}_ratio") == best, F.lit(lang)).otherwise(pred)
     pred = F.when(best > 0, pred).otherwise(F.lit("und"))
     return scored.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         *[F.col(f"{lang}_ratio") for lang in langs],
         pred.alias("pred_lang"),
     )
 
 
-def curation_signals(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def curation_signals(df: DataFrame) -> DataFrame:
     """Fused language-ID + uniqueness signals in ONE tokenize pass.
 
     Exactly the columns the curation verdict (x7) consumes — (id,
@@ -74,13 +70,11 @@ def curation_signals(
     STOPWORDS, same tokenizer), so the outputs are bit-identical to the
     ones they replace.
     """
-    toks = explode_tokens(df, id_col, text_col)
-    return _curation_from_tokens(toks, id_col)
+    toks = explode_tokens(df)
+    return _curation_from_tokens(toks, "doc_id")
 
 
-def curation_signals_from_words(
-    words: DataFrame, id_col: str = "doc_id", words_col: str = "words"
-) -> DataFrame:
+def curation_signals_from_words(words: DataFrame) -> DataFrame:
     """:func:`curation_signals` starting from a PRE-SPLIT token array.
 
     Same output — and, since r15, computed ROW-LOCALLY from the array:
@@ -101,9 +95,9 @@ def curation_signals_from_words(
     the dup branch's shingle index from it: one corpus scan, no signal
     shuffle.
     """
-    w = F.col(words_col)
+    w = F.col("words")
     scored = words.select(
-        id_col,
+        "doc_id",
         F.size(w).cast("bigint").alias("n_tokens"),
         F.size(F.array_distinct(w)).cast("bigint").alias("n_uniq"),
         *[
@@ -113,7 +107,7 @@ def curation_signals_from_words(
             for lang, sw in sorted(STOPWORDS.items())
         ],
     )
-    return _verdict_select(scored, id_col)
+    return _verdict_select(scored, "doc_id")
 
 
 def _curation_from_tokens(toks: DataFrame, id_col: str) -> DataFrame:
@@ -153,18 +147,14 @@ def _verdict_select(scored: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def quality_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Length / token-shape / repetition quality signals per document.
 
     Output: (id, n_chars, n_tokens, avg_token_len, uniq_token_ratio,
     alpha_ratio). All ratios are exact int/int divisions -> stable doubles.
     """
-    toks = explode_tokens(df, id_col, text_col).withColumn(
-        "tok_len", F.length("token")
-    )
-    per_doc = toks.groupBy(id_col).agg(
+    toks = explode_tokens(df).withColumn("tok_len", F.length("token"))
+    per_doc = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("tok_len").alias("sum_tok_len"),
         F.countDistinct("token").alias("n_uniq"),
@@ -173,10 +163,10 @@ def quality_scores(
         ).alias("n_alpha"),
     )
     return (
-        df.select(id_col, F.length(text_col).alias("n_chars"))
-        .join(per_doc, on=id_col)
+        df.select("doc_id", F.length("text").alias("n_chars"))
+        .join(per_doc, on="doc_id")
         .select(
-            id_col,
+            "doc_id",
             "n_chars",
             "n_tokens",
             (F.col("sum_tok_len") / F.col("n_tokens")).alias("avg_token_len"),
@@ -186,19 +176,17 @@ def quality_scores(
     )
 
 
-def token_counts(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish subword count (regex pieces).
 
     The "BPE-ish" count splits alpha runs / digit runs / other — a cheap,
     deterministic proxy for tokenizer budgeting. Output: (id, ws_tokens,
     subword_tokens, chars_per_subword).
     """
-    ws = F.size(F.split(F.col(text_col), " "))
+    ws = F.size(F.split(F.col("text"), " "))
     pieces = F.size(
         F.regexp_extract_all(
-            F.col(text_col), F.lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"), 0
+            F.col("text"), F.lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"), 0
         )
     )
     # nullif: empty/whitespace-only text has ZERO regex pieces, and under
@@ -207,34 +195,30 @@ def token_counts(
     # (the whitespace-token denominators are safe: split('', ' ') is [''],
     # so ws_tokens >= 1)
     return df.select(
-        id_col,
+        "doc_id",
         ws.alias("ws_tokens"),
         pieces.alias("subword_tokens"),
-        (F.length(text_col) / F.nullif(pieces, F.lit(0))).alias(
+        (F.length("text") / F.nullif(pieces, F.lit(0))).alias(
             "chars_per_subword"
         ),
     )
 
 
-def fingerprints(
-    df: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def fingerprints(df: DataFrame, k: int = 3) -> DataFrame:
     """Content fingerprint: min-wise digest over k-word shingles
     (winnowing-lite — the min-md5 shingle is a stable representative that
     collides exactly for near-identical shingle sets).
 
     Output: (id, fingerprint, n_shingles).
     """
-    sh = word_shingles(df, k=k, id_col=id_col, text_col=text_col)
-    return sh.groupBy(id_col).agg(
+    sh = word_shingles(df, k=k)
+    return sh.groupBy("doc_id").agg(
         F.min(F.md5("shingle")).alias("fingerprint"),
         F.count(F.lit(1)).alias("n_shingles"),
     )
 
 
-def repetition_signals(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style word-repetition quality signals per document.
 
     Two signals over the whitespace token stream (the corpus has no line
@@ -255,12 +239,12 @@ def repetition_signals(
     rollup re-uses the same doc-keyed partitioning, so the whole signal
     costs one shuffle keyed on (doc, token) regardless of corpus size.
     """
-    toks = explode_tokens(df, id_col, text_col)
-    per_token = toks.groupBy(id_col, "token").agg(
+    toks = explode_tokens(df)
+    per_token = toks.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     n_words = F.sum("cnt")
-    return per_token.groupBy(id_col).agg(
+    return per_token.groupBy("doc_id").agg(
         n_words.alias("n_words"),
         (
             (n_words - F.count(F.lit(1))).cast("double")
@@ -272,11 +256,7 @@ def repetition_signals(
     )
 
 
-def ngram_repetition(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_repetition(df: DataFrame) -> DataFrame:
     """Gopher's n-GRAM repetition rules (Rae et al. 2021 §A1.1), the
     phrase-level complement to :func:`repetition_signals`' word-level
     fractions: per document, the top n-gram's share of all n-gram
@@ -294,7 +274,7 @@ def ngram_repetition(
     post-combine rows only (distinct grams, then 2/doc, then 1/doc),
     so the corpus-sized cost is the first exchange alone.
     """
-    w = F.split(F.lower(F.col(text_col)), "\\s+")
+    w = F.split(F.lower(F.col("text")), "\\s+")
     n = F.size(w)
 
     def grams(order: int) -> Column:
@@ -308,7 +288,7 @@ def ngram_repetition(
         return g
 
     tagged = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.concat(
                 F.transform(grams(2), lambda g: F.struct(
@@ -317,8 +297,8 @@ def ngram_repetition(
                     F.lit(3).alias("order"), g.alias("gram"))),
             )
         ).alias("t"),
-    ).select(id_col, F.col("t.order").alias("order"), F.col("t.gram").alias("gram"))
-    counted = tagged.groupBy(id_col, "order", "gram").agg(
+    ).select("doc_id", F.col("t.order").alias("order"), F.col("t.gram").alias("gram"))
+    counted = tagged.groupBy("doc_id", "order", "gram").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     tot = F.sum("cnt")
@@ -326,7 +306,7 @@ def ngram_repetition(
     def share(order: int, expr: Column) -> Column:
         return F.max(F.when(F.col("order") == order, expr))
 
-    per_order = counted.groupBy(id_col, "order").agg(
+    per_order = counted.groupBy("doc_id", "order").agg(
         tot.alias("n_grams"),
         (F.max("cnt").cast("double") / tot).alias("top_share"),
         (
@@ -334,7 +314,7 @@ def ngram_repetition(
             .cast("double") / tot
         ).alias("dup_frac"),
     )
-    return per_order.groupBy(id_col).agg(
+    return per_order.groupBy("doc_id").agg(
         share(2, F.col("n_grams")).cast("int").alias("n_bigrams"),
         share(2, F.col("top_share")).alias("top_bigram_share"),
         share(2, F.col("dup_frac")).alias("dup_bigram_frac"),
@@ -344,11 +324,7 @@ def ngram_repetition(
     )
 
 
-def bpe_pair_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    top_n: int = 20,
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, top_n: int = 20) -> DataFrame:
     """The BPE trainer's inner statistic as ONE distributed aggregation:
     corpus-weighted adjacent-symbol-pair counts over the word-frequency
     table (Sennrich et al. 2016) — the top pair is the next merge.
@@ -380,7 +356,7 @@ def bpe_pair_counts(
         F.explode(
             F.split(
                 F.translate(
-                    F.col(text_col),
+                    F.col("text"),
                     "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
                     "abcdefghijklmnopqrstuvwxyz",
                 ),
@@ -417,8 +393,6 @@ def decontaminate(
     train: DataFrame,
     eval_docs: DataFrame,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Train/eval overlap detection: flag training documents that share any
     k-word shingle with the held-out evaluation set.
@@ -439,23 +413,19 @@ def decontaminate(
     """
     from ..functions import word_shingle_sets
 
-    tr = word_shingle_sets(train, k=k, id_col=id_col, text_col=text_col)
+    tr = word_shingle_sets(train, k=k)
     tr_exploded = tr.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("shingle_set").cast("bigint").alias("n_shingles"),
         F.explode("shingle_set").alias("shingle"),
     )
-    ev = (
-        word_shingles(eval_docs, k=k, id_col=id_col, text_col=text_col)
-        .select("shingle")
-        .distinct()
-    )
+    ev = (word_shingles(eval_docs, k=k) .select("shingle") .distinct())
     return (
         tr_exploded.join(F.broadcast(ev), on="shingle")
-        .groupBy(id_col, "n_shingles")
+        .groupBy("doc_id", "n_shingles")
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .select(
-            id_col,
+            "doc_id",
             "n_hits",
             "n_shingles",
             (

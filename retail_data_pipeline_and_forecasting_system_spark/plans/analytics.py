@@ -70,13 +70,17 @@ from ..operators.depletion import greedy_inventory_depletion
 # the driver-testdata / staged-warehouse layout every harness here
 # uses. A caller that rewrites parquet under a cached path must call
 # :func:`invalidate_tables` (or use a new session) or subsequent
-# actions read stale listings / fail on deleted files.
+# actions read stale listings / fail on deleted files, and the models
+# collected from the old files (the IVF quantizer, trained BPE merges)
+# keep serving.
 def invalidate_tables(spark: SparkSession) -> None:
-    """Drop the session's memoized table plans and probe results — the
-    escape hatch for callers that regenerate parquet mid-session."""
+    """Drop the session's memoized table plans, probe results and
+    model state — the escape hatch for callers that regenerate parquet
+    mid-session."""
     st = state(spark)
     st.tables.clear()
     st.probes.clear()
+    st.models.clear()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2193,31 +2197,29 @@ def x6_train_split(spark, sf):
     )
 
 
-_IVF_MODELS: dict[tuple, tuple] = {}
-
-
-def _ivf_query_model(emb, cache_key, n_centroids=16, query_id=0,
-                     with_label=False):
-    """Collect (and memoize per corpus) the IVF model state n3/n14
-    serve queries from: the first-``n_centroids``-by-id quantizer, the
-    query vector, and (``with_label``) the query's label. Model-sized
+def _ivf_query_model(emb, sf, with_label=False):
+    """Collect (and memoize per session and ``sf`` dir, in
+    ``caching.state(spark).models``) the IVF model state n3/n14 serve
+    queries from: the first-16-by-id quantizer, the query vector
+    (vec_id 0), and (``with_label``) the query's label. Model-sized
     driver state — an ANN service holds it across queries. Raises a
-    descriptive error when the query row is absent (a corpus whose ids
-    do not include ``query_id``) instead of a NoneType subscript."""
-    key = (cache_key, n_centroids, query_id, with_label)
-    model = _IVF_MODELS.get(key)
+    descriptive error when the query row is absent instead of a
+    NoneType subscript."""
+    models = state(emb.sparkSession).models
+    key = (sf, "ivf_query_model", with_label)
+    model = models.get(key)
     if model is None:
-        cents = emb.filter(F.col("vec_id") < n_centroids).select(
+        cents = emb.filter(F.col("vec_id") < 16).select(
             F.col("vec_id").alias("cent_id"),
             F.col("embedding").alias("cent_vec"),
         )
-        qrow = emb.filter(F.col("vec_id") == query_id).head()
+        qrow = emb.filter(F.col("vec_id") == 0).head()
         if qrow is None:
             raise ValueError(
-                f"IVF query model: no row with vec_id == {query_id} "
+                "IVF query model: no row with vec_id == 0 "
                 "in the embeddings corpus"
             )
-        model = _IVF_MODELS[key] = (
+        model = models[key] = (
             SIM._collect_centroids(cents),
             [float(x) for x in qrow["embedding"]],
             qrow["label"] if with_label else None,
@@ -4933,13 +4935,13 @@ def n4_ann_pq(spark, sf):
     return SIM.pq_topk(_t(spark, sf, "embeddings"), query_id=0)
 
 
-def _a14_sql(width: int = 2048, depth: int = 3) -> str:
+def _a14_sql() -> str:
     from ..operators.sketch import _position_expr
 
-    pos = _position_expr(depth, width, ctor="list_value")
+    pos = _position_expr(3, 2048, ctor="list_value")
     lanes = " UNION ALL ".join(
         f"SELECT {i} AS lane, ({pos})[{i + 1}] AS pos FROM h"
-        for i in range(depth)
+        for i in range(3)
     )
     return f"""
     WITH h AS (
@@ -5034,15 +5036,8 @@ def ops3_delete_propagation(spark, sf):
     ).select("c_custkey", "c_name", "c_acctbal")
 
 
-def _n5_sql(
-    n_centroids: int = 16,
-    m: int = 4,
-    ksub: int = 8,
-    dim: int = 64,
-    n_probe: int = 2,
-    query_id: int = 0,
-) -> str:
-    width = dim // m
+def _n5_sql() -> str:
+    width = 64 // 4
     l2 = (
         "list_reduce(list_transform(list_zip({a}, {b}), "
         "p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
@@ -5050,11 +5045,11 @@ def _n5_sql(
         "(x, y) -> x + y)"
     )
     sub = "[s.sub*{w}+1 : s.sub*{w}+{w}]".format(w=width)
-    subs = ", ".join(str(s) for s in range(m))
+    subs = ", ".join(str(s) for s in range(4))
     return f"""
     WITH cents AS (
       SELECT vec_id AS cent_id, embedding AS cent_vec
-      FROM embeddings WHERE vec_id < {n_centroids}
+      FROM embeddings WHERE vec_id < 16
     ), assigned AS (
       SELECT vec_id, cent_id AS cell FROM (
         SELECT e.vec_id, c.cent_id,
@@ -5064,7 +5059,7 @@ def _n5_sql(
         FROM embeddings e CROSS JOIN cents c
       ) WHERE rn = 1
     ), qv AS (
-      SELECT embedding AS q_vec FROM embeddings WHERE vec_id = {query_id}
+      SELECT embedding AS q_vec FROM embeddings WHERE vec_id = 0
     ), probe AS (
       SELECT cent_id AS cell FROM (
         SELECT c.cent_id,
@@ -5072,11 +5067,11 @@ def _n5_sql(
             ORDER BY {l2.format(a='q.q_vec', b='c.cent_vec')} ASC,
                      c.cent_id ASC) AS rn
         FROM cents c CROSS JOIN qv q
-      ) WHERE rn <= {n_probe}
+      ) WHERE rn <= 2
     ), spans AS (
       SELECT unnest([{subs}]) AS sub
     ), cb AS (
-      SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < {ksub}
+      SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 8
     ), dists AS (
       SELECT e.vec_id, s.sub, cb.cid,
         {l2.format(a='e.embedding' + sub, b='cb.embedding' + sub)} AS dval
@@ -5099,7 +5094,7 @@ def _n5_sql(
     JOIN assigned a ON a.vec_id = c.vec_id
     JOIN probe p ON a.cell = p.cell
     JOIN qd ON qd.sub = c.sub AND qd.cid = c.cid
-    WHERE c.vec_id != {query_id}
+    WHERE c.vec_id != 0
     GROUP BY c.vec_id
     ORDER BY approx_l2, c.vec_id LIMIT 10
     """
@@ -7078,7 +7073,6 @@ def _kmeans_af_ctes(
     k: int | str = 4,
     n_iter: int = 2,
     source_where: str = "",
-    target_cell_size: int = 32,
 ) -> str:
     """Unrolled Lloyd k-means as pure SQL CTEs: one (assignment,
     exact-mean, rebuild) trio per iteration, ending with ``af``
@@ -7090,7 +7084,7 @@ def _kmeans_af_ctes(
     ingest). ``source_where`` restricts the fit set.
 
     ``k="auto"`` mirrors ``similarity.auto_k``: k =
-    ceil(sqrt(count(*) / target_cell_size)) computed IN SQL over the
+    ceil(sqrt(count(*) / 32)) computed IN SQL over the
     fit set (a ``kk`` CTE), init switched to a window-ranked first-k —
     division, sqrt and ceil are IEEE-correctly-rounded in both engines,
     so the SQL k equals the engine's k bit-for-bit at every scale."""
@@ -7098,8 +7092,8 @@ def _kmeans_af_ctes(
     l2 = _l2_list_sql
 
     if k == "auto":
-        c0 = f"""kk AS (
-      SELECT GREATEST(1, CAST(ceil(sqrt(count(*) / {target_cell_size}.0))
+        c0 = """kk AS (
+      SELECT GREATEST(1, CAST(ceil(sqrt(count(*) / 32.0))
                           AS INT)) AS k
       FROM e),
     c0 AS (
@@ -7759,9 +7753,6 @@ def d11_incremental_dedup(spark, sf):
         bands=4,
         threshold=0.5,
         k=3,
-        # one-shot query: persist the double-consumed bucket frame for
-        # the session (the service default is False — see the operator)
-        cache_buckets=True,
     )
 
 
@@ -9342,8 +9333,8 @@ def n10_knn_join_multiprobe(spark, sf):
     )
 
 
-def _n11_sql(m: int = 4, ksub: int = 8, dim: int = 64, k: int = 5) -> str:
-    width = dim // m
+def _n11_sql(k: int = 5) -> str:
+    width = 64 // 4
     sub_l2 = (
         "list_reduce(list_transform("
         "list_zip(e.embedding[s.sub*{w}+1 : s.sub*{w}+{w}], "
@@ -9352,7 +9343,7 @@ def _n11_sql(m: int = 4, ksub: int = 8, dim: int = 64, k: int = 5) -> str:
         " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), "
         "(x, y) -> x + y)"
     ).format(w=width)
-    subs = ", ".join(str(s) for s in range(m))
+    subs = ", ".join(str(s) for s in range(4))
     return (
         _kmeans_af_ctes("auto", 2, source_where=" WHERE vec_id >= 10")
         + f""",
@@ -9369,7 +9360,7 @@ def _n11_sql(m: int = 4, ksub: int = 8, dim: int = 64, k: int = 5) -> str:
     spans AS (SELECT unnest([{subs}]) AS sub),
     cb AS (
       SELECT vec_id - 10 AS cid, embedding FROM embeddings
-      WHERE vec_id >= 10 AND vec_id < {10 + ksub}
+      WHERE vec_id >= 10 AND vec_id < 18
     ),
     cdists AS (
       SELECT e.vec_id, s.sub, cb.cid, {sub_l2} AS dval
@@ -13899,59 +13890,19 @@ def _bpe_train_sql(n_merges: int) -> str:
 
 
 # Trained tables are KB-sized driver model state (the k1/x27 pattern),
-# deterministic per corpus — memoized so the six downstream registry
-# entries (x35/x36/x37/x39/x40/x41) train once per process, not once
-# per query. Keyed on the NORMALIZED documents path plus a cheap corpus
-# fingerprint (file sizes + mtimes), so a rewritten corpus at the same
-# path retrains instead of silently serving the stale table, and
-# "sf0.01" vs its absolute spelling can't train twice (round-10 ADVICE).
-_TRAIN_MEMO: dict = {}
-
-
-def _corpus_fingerprint(path: str) -> tuple:
-    """(size, mtime_ns) of every file under the documents parquet
-    path, with the walk order canonicalized (dirnames sorted in place
-    and paths keyed relative, so equal corpora in multi-subdir
-    layouts always hash equal). Non-POSIX paths (s3a://, hdfs://)
-    that os.stat cannot see fall back to the path-only key — the
-    pre-round-11 behavior: memoized per path string, no rewrite
-    detection (document the sf dir as immutable there). The fallback
-    is scoped to the INITIAL existence probe only: once the path is
-    visible, a mid-walk stat failure (a file deleted under us during
-    a concurrent corpus rewrite) propagates loudly instead of quietly
-    degrading to the rewrite-blind key (round-11 ADVICE). Directory-
-    level enumeration failures propagate the same way: os.walk's
-    default onerror=None would silently skip a subdirectory deleted
-    mid-walk, yielding a partial signature, so we re-raise
-    (round-12 ADVICE)."""
-
-    def _raise(err: OSError) -> None:
-        raise err
-    p = os.path.abspath(path)
-    try:
-        is_dir = os.path.isdir(p)
-        if not is_dir:
-            st = os.stat(p)
-    except OSError:
-        return (path,)
-    if not is_dir:
-        return (p, st.st_size, st.st_mtime_ns)
-    sig = []
-    for root, dirs, files in os.walk(p, onerror=_raise):
-        dirs.sort()
-        rel = os.path.relpath(root, p)
-        for f in sorted(files):
-            st = os.stat(os.path.join(root, f))
-            sig.append((os.path.join(rel, f), st.st_size, st.st_mtime_ns))
-    return (p, tuple(sig))
-
-
+# deterministic per corpus — memoized in ``caching.state(spark).models``
+# so the six downstream registry entries (x35/x36/x37/x39/x40/x41) train
+# once per session and ``sf`` dir, not once per query. Same contract as
+# the table memo: a caller that rewrites the corpus calls
+# :func:`invalidate_tables`.
 def _trained_merges(spark, sf):
-    key = _corpus_fingerprint(os.path.join(str(sf), "documents.parquet"))
-    rows = _TRAIN_MEMO.get(key)
+    models = state(spark).models
+    key = (sf, "bpe_merges")
+    rows = models.get(key)
     if rows is None:
-        rows = BP.bpe_train(_t(spark, sf, "documents"), N_TRAIN_MERGES)
-        _TRAIN_MEMO[key] = rows
+        rows = models[key] = BP.bpe_train(
+            _t(spark, sf, "documents"), N_TRAIN_MERGES
+        )
     return rows
 
 
@@ -18709,29 +18660,24 @@ def g6_semi_additive(spark, sf):
     )
 
 
-def _x59_pair_ctes(
-    num_hashes: int = 8,
-    bands: int = 4,
-    thr: str = "0.35",
-    max_df: int = _JACCARD_MAX_DF,
-) -> str:
+def _x59_pair_ctes(thr: str = "0.35", max_df: int = _JACCARD_MAX_DF) -> str:
     """Shared three-tier cross-split pair CTEs (through ``tiers``):
     exact (md5 content key), near-dup (the _sql_minhash sliced-md5
     band scheme verified at exact Jaccard), n-gram (>= 1 shared rare
     shingle) — each pair set restricted to train x eval sides before
     counting. The x59 audit and the x60 scrub append different final
     SELECTs."""
-    rows = num_hashes // bands
+    rows = 2  # 8 minhashes in 4 bands
     mh_cols = ", ".join(
         f"min(substring(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8))"
         f" AS mh_{i}"
-        for i in range(num_hashes)
+        for i in range(8)
     )
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, md5("
         + " || '|' || ".join(f"mh_{b * rows + r}" for r in range(rows))
         + ") AS bucket FROM sig"
-        for b in range(bands)
+        for b in range(4)
     )
     return (
         _SQL_SHINGLES
@@ -19228,10 +19174,13 @@ def g7_percent_of_parent(spark, sf):
     )
 
 
-def _ev9_sql(budgets=(2, 4, 8), n_queries: int = 20, k: int = 5) -> str:
+_EV9_BUDGETS = (2, 4, 8)
+
+
+def _ev9_sql(k: int = 5) -> str:
     cs_cols = ",\n        ".join(
         f"{_sql_cosine(f'(cv[1:{d}])', f'(qv[1:{d}])')} AS cs_{d}"
-        for d in budgets
+        for d in _EV9_BUDGETS
     )
     approx_ctes = ", ".join(
         f"""a{d} AS (
@@ -19244,18 +19193,18 @@ def _ev9_sql(budgets=(2, 4, 8), n_queries: int = 20, k: int = 5) -> str:
       SELECT CAST(count(*) AS BIGINT) AS n_hits
       FROM exact JOIN a{d} USING (query_id, cand_id)
     )"""
-        for d in budgets
+        for d in _EV9_BUDGETS
     )
     rows = " UNION ALL ".join(
         f"""SELECT {d} AS dim_budget, t.n_exact, h{d}.n_hits,
       round(CAST(h{d}.n_hits AS DOUBLE) / t.n_exact, 6) AS recall_at_k
     FROM h{d}, tot t"""
-        for d in budgets
+        for d in _EV9_BUDGETS
     )
     return f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-      WHERE vec_id < {n_queries}
+      WHERE vec_id < 20
     ), c AS (
       SELECT vec_id AS cand_id, embedding AS cv FROM embeddings
     ), scored AS (
@@ -19301,7 +19250,7 @@ def _ev9_sql(budgets=(2, 4, 8), n_queries: int = 20, k: int = 5) -> str:
 def ev9_truncation_recall(spark, sf):
     from pyspark.sql import Window
 
-    budgets, n_q, k = (2, 4, 8), 20, 5
+    budgets, n_q, k = _EV9_BUDGETS, 20, 5
     emb = _t(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") < n_q).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")

@@ -84,7 +84,6 @@ def process_lines(
     lines: DataFrame,
     products: DataFrame,
     process_order: str = "arrival",
-    reload_inventory_daily: bool = False,
     result_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Null-filter, deplete inventory, and price every line.
@@ -92,10 +91,6 @@ def process_lines(
     Output grain: one row per non-null-qty line with fulfilled ``quantity``
     (0 if cancelled), ``unit_price`` and 2-dp ``line_total`` (cancelled lines
     price to 0.00, reference src/data_processor.py:308).
-
-    ``reload_inventory_daily`` mirrors the reference's
-    RELOAD_INVENTORY_DAILY flag (src/data_processor.py:53-59): stock resets
-    to the initial value at each business day instead of carrying over.
 
     ``result_cols`` (r15) narrows the depletion kernel's RETURN columns
     (must include ``product_id`` and ``quantity``; see
@@ -112,7 +107,6 @@ def process_lines(
         demand,
         products,
         order_cols=order_cols,
-        reset_col="batch_date" if reload_inventory_daily else None,
         result_cols=result_cols,
     )
     priced = filled.join(
@@ -250,15 +244,13 @@ def processing_metrics(processed: DataFrame) -> dict[str, int]:
 def run_retail_pipeline(
     raw_transactions: DataFrame,
     products: DataFrame,
-    process_order: str = "arrival",
-    reload_inventory_daily: bool = False,
 ) -> dict[str, DataFrame]:
     """Full pipeline: raw docs + products -> the four output DataFrames,
     each sorted in its ``CONTRACT_ORDER``.
 
-    ``process_order`` selects the depletion order (see ORDER_COLS): "arrival"
-    for golden parity with the reference, "timestamp" for content-based
-    determinism. ``reload_inventory_daily`` mirrors the reference flag.
+    Lines deplete in arrival order (see ORDER_COLS), the order that gives
+    golden parity with the reference, and stock carries over from day to
+    day.
 
     The depletion output is persisted (it feeds all four outputs); call
     :func:`release_retail_pipeline` with the returned dict when done so
@@ -266,13 +258,7 @@ def run_retail_pipeline(
     cache.
     """
     lines = explode_transactions(raw_transactions)
-    processed = process_lines(
-        lines,
-        products,
-        process_order=process_order,
-        reload_inventory_daily=reload_inventory_daily,
-        result_cols=BUILDER_COLS,
-    )
+    processed = process_lines(lines, products, result_cols=BUILDER_COLS)
     # The depletion output feeds all four outputs; persist it so the Arrow
     # kernel runs once, not four times.
     processed = processed.persist()

@@ -33,9 +33,7 @@ TABLES = (
 )
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every parquet table under ``sf_dir`` as a temp view named
     after the table, so ``spark.sql`` queries run against the same
     pushdown-capable scans the DataFrame plans use. Goes through the
@@ -44,7 +42,7 @@ def register_views(
     both surfaces."""
     from .analytics import _t
 
-    for t in tables:
+    for t in TABLES:
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
 
 

@@ -97,12 +97,7 @@ def read_table_jdbc(
     return reader.load()
 
 
-def read_json_robust(
-    spark: SparkSession,
-    path_or_glob: str,
-    schema,
-    corrupt_col: str = "_corrupt_record",
-):
+def read_json_robust(spark: SparkSession, path_or_glob: str, schema):
     """PERMISSIVE JSON read that quarantines malformed rows instead of
     failing the job — at 100 TB some records WILL be broken, and a
     fail-fast read loses the other 99.999%.
@@ -115,21 +110,21 @@ def read_json_robust(
     from pyspark.sql import types as T
 
     full_schema = T.StructType(
-        schema.fields + [T.StructField(corrupt_col, T.StringType(), True)]
+        schema.fields + [T.StructField("_corrupt_record", T.StringType(), True)]
     )
     df = (
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path_or_glob)
     )
     # Spark refuses queries that reference ONLY the corrupt column over a
     # raw json scan (the parser would never run); caching the parsed frame
     # is the documented pattern and also makes the two-way split one scan.
     df = df.cache()
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    corrupt = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw")
+    good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+    corrupt = df.filter(F.col("_corrupt_record").isNotNull()).select(
+        F.col("_corrupt_record").alias("raw")
     )
     return good, corrupt
 

@@ -61,11 +61,7 @@ def list_versions(table_dir: str) -> list[int]:
     return sorted(out)
 
 
-def write_version(
-    df: DataFrame,
-    table_dir: str,
-    partition_by: str | None = None,
-) -> int:
+def write_version(df: DataFrame, table_dir: str) -> int:
     """Commit ``df`` as the next version of the table; returns its number.
 
     Stage-then-flip: data lands in ``_staging_v=<n>`` (a crash strands
@@ -94,10 +90,7 @@ def write_version(
     os.makedirs(table_dir, exist_ok=True)
     staging = os.path.join(table_dir, f"_staging_v={n}")
     final = os.path.join(table_dir, f"v={n}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(staging)
+    df.write.mode("overwrite").parquet(staging)
     os.rename(staging, final)
     tmp = _latest_path(table_dir) + ".tmp"
     with open(tmp, "w") as f:

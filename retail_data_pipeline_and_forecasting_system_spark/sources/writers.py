@@ -164,12 +164,7 @@ def read_orc(spark, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def compact_partition(
-    spark,
-    path: str,
-    target_files: int = 1,
-    max_records_per_file: int | None = None,
-) -> int:
+def compact_partition(spark, path: str, target_files: int = 1) -> int:
     """Rewrite a parquet directory into ``target_files`` files (the
     small-files compaction every long-running ingest needs: streaming and
     per-day appends accrete tiny files whose open/footer overhead
@@ -182,8 +177,7 @@ def compact_partition(
     see below — on the next invocation). True atomicity needs a
     versioned-directory + manifest/symlink flip, or a table format
     (Delta/Iceberg) whose commit IS a manifest swap. Returns the
-    resulting file count. ``max_records_per_file`` bounds file size
-    instead when row width varies (maps to Spark's ``maxRecordsPerFile``).
+    resulting file count.
 
     Point ``path`` at a LEAF directory: for a ``partitionBy`` layout,
     compact each partition dir independently (reading the root would
@@ -204,10 +198,7 @@ def compact_partition(
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     df = spark.read.parquet(path)
-    writer = df.repartition(target_files).write.mode("overwrite")
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(tmp)
+    df.repartition(target_files).write.mode("overwrite").parquet(tmp)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)

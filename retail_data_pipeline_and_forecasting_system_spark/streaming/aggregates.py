@@ -26,11 +26,7 @@ from pyspark.sql import functions as F
 from ..operators.ohlc import ohlc_aggs, ohlc_order_key
 
 
-def streaming_daily_summary(
-    lines: DataFrame,
-    ts_col: str = "timestamp",
-    watermark: str = "1 day",
-) -> DataFrame:
+def streaming_daily_summary(lines: DataFrame) -> DataFrame:
     """Units sold per event-time day over a (possibly late) line stream.
 
     Output: (date, units, n_lines). In append mode a day's row emits once
@@ -38,8 +34,8 @@ def streaming_daily_summary(
     running values.
     """
     return (
-        lines.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 day").alias("w"))
+        lines.withWatermark("timestamp", "1 day")
+        .groupBy(F.window("timestamp", "1 day").alias("w"))
         .agg(
             F.sum("qty").alias("units"),
             F.count(F.lit(1)).alias("n_lines"),
@@ -53,23 +49,17 @@ def streaming_daily_summary(
 def streaming_dedup(
     stream: DataFrame,
     keys: list[str],
-    ts_col: str = "timestamp",
     watermark: str = "1 day",
 ) -> DataFrame:
     """First occurrence per key wins; duplicates within the watermark
     horizon are dropped, and key-memory is reclaimed as the watermark
     advances (``dropDuplicatesWithinWatermark`` semantics)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return stream.withWatermark("timestamp", watermark).dropDuplicatesWithinWatermark(
         keys
     )
 
 
-def streaming_ohlc_bars(
-    events: DataFrame,
-    ts_col: str = "ts",
-    bar: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_ohlc_bars(events: DataFrame) -> DataFrame:
     """Live candlestick bars — the streaming twin of the batch
     ``h7_ohlc_bars`` registry query, built from the SAME aggregation
     spec (``operators.ohlc``): open/close are min_by/max_by over the
@@ -85,15 +75,15 @@ def streaming_ohlc_bars(
     """
     pts = events.filter(F.col("value").isNotNull()).select(
         "event_type",
-        F.col(ts_col),
+        F.col("ts"),
         F.col("value").cast("decimal(18,4)").alias("v"),
         ohlc_order_key(
-            F.expr(f"unix_micros({ts_col})"), F.col("event_id")
+            F.expr("unix_micros(ts)"), F.col("event_id")
         ).alias("okey"),
     )
     return (
-        pts.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, bar).alias("w"), "event_type")
+        pts.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(*ohlc_aggs(F.col("v"), F.col("okey")))
         .select(
             F.col("w.start").alias("bucket_start"),
@@ -110,9 +100,6 @@ def streaming_ohlc_bars(
 def streaming_sessionize(
     events: DataFrame,
     gap: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Gap-based session aggregation over a live event stream.
 
@@ -124,13 +111,11 @@ def streaming_sessionize(
     Output: (user_id, session_start, session_end, n_events).
     """
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(ts_col, gap).alias("w"), F.col(user_col)
-        )
+        events.withWatermark("ts", "1 day")
+        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            user_col,
+            "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -145,9 +130,7 @@ def streaming_histogram_quantiles(
     hi: float,
     n_buckets: int = 64,
     quantiles: tuple[float, ...] = (0.5, 0.95),
-    ts_col: str = "ts",
     window: str = "1 hour",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Windowed quantile monitoring via the mergeable histogram sketch —
     the streaming twin of the batch ``a18_histogram_quantiles`` registry
@@ -177,8 +160,8 @@ def streaming_histogram_quantiles(
         for i in range(n_buckets)
     ]
     agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"))
+        stream.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", window).alias("w"))
         .agg(*hist_cols)
     )
     hist = F.array(
@@ -237,50 +220,36 @@ def streaming_enrich_static(
     return stream.join(F.broadcast(dim), on=key, how=how)
 
 
-def streaming_funnel_join(
-    events: DataFrame,
-    first_type: str = "view",
-    then_type: str = "purchase",
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked stream-stream self-join: `first_type` events matched to
-    `then_type` events of the same user within `within` — the streaming
+def streaming_funnel_join(events: DataFrame) -> DataFrame:
+    """Watermarked stream-stream self-join: `view` events matched to
+    `purchase` events of the same user within one hour — the streaming
     twin of the batch funnel (registry `j7_funnel`).
 
-    Both sides carry a watermark and the join condition bounds buy_ts to
-    (view_ts, view_ts + within], so Spark can expire buffered rows once
-    the watermark passes view_ts + within: state is O(events inside the
-    watermark window), never the full log. Emits one row per conversion
-    pair in append mode.
+    Both sides carry a 2-hour watermark and the join condition bounds
+    buy_ts to (view_ts, view_ts + 1 hour], so Spark can expire buffered
+    rows once the watermark passes view_ts + 1 hour: state is O(events
+    inside the watermark window), never the full log. Emits one row per
+    conversion pair in append mode.
     """
     views = (
-        events.filter(F.col("event_type") == first_type)
-        .select(
-            F.col("user_id").alias("u"), F.col("ts").alias("view_ts")
-        )
-        .withWatermark("view_ts", watermark)
+        events.filter(F.col("event_type") == "view")
+        .select(F.col("user_id").alias("u"), F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", "2 hours")
     )
     buys = (
-        events.filter(F.col("event_type") == then_type)
+        events.filter(F.col("event_type") == "purchase")
         .select("user_id", F.col("ts").alias("buy_ts"))
-        .withWatermark("buy_ts", watermark)
+        .withWatermark("buy_ts", "2 hours")
     )
     return views.join(
         buys,
         (views.u == buys.user_id)
         & (F.col("buy_ts") > F.col("view_ts"))
-        & (F.col("buy_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {within}")),
+        & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 hour")),
     ).select("user_id", "view_ts", "buy_ts")
 
 
-def streaming_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-) -> DataFrame:
+def streaming_transitions(events: DataFrame) -> DataFrame:
     """Per-user event-TRANSITION extraction on a stream — the stateful
     streaming twin of the batch ``e8_markov_transitions`` lead-window:
     windows don't exist in streaming, so the "previous event" becomes
@@ -305,10 +274,10 @@ def streaming_transitions(
     # The key column keeps the caller's name and input type — a stream
     # keyed by a string user id (or a renamed column) must not crash or
     # come back mislabeled as a long "user_id".
-    user_field = events.schema[user_col]
+    user_field = events.schema["user_id"]
     out_schema = T.StructType(
         [
-            T.StructField(user_col, user_field.dataType, False),
+            T.StructField("user_id", user_field.dataType, False),
             T.StructField("from_type", T.StringType(), True),
             T.StructField("to_type", T.StringType(), True),
         ]
@@ -328,9 +297,9 @@ def streaming_transitions(
                 else chunks[0]
             )
             pdf = pdf.sort_values(
-                [ts_col, seq_col], kind="mergesort"
+                ["ts", "event_id"], kind="mergesort"
             ).reset_index(drop=True)
-            types = pdf[type_col].tolist()
+            types = pdf["event_type"].tolist()
             rows = []
             for t in types:
                 if last is not None:
@@ -338,12 +307,12 @@ def streaming_transitions(
                 last = t
             if rows:
                 yield pd.DataFrame(
-                    rows, columns=[user_col, "from_type", "to_type"]
+                    rows, columns=["user_id", "from_type", "to_type"]
                 )
         state.update((last,))
 
     return (
-        events.groupBy(user_col)
+        events.groupBy("user_id")
         .applyInPandasWithState(
             extract,
             outputStructType=out_schema,
@@ -356,13 +325,6 @@ def streaming_transitions(
 
 def streaming_attribution(
     events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-    lookback_us: int = 7 * 86400 * 1_000_000,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
     max_touches: int | None = None,
 ) -> DataFrame:
     """Last-touch attribution on a stream — the stateful twin of the
@@ -402,11 +364,12 @@ def streaming_attribution(
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    user_field = events.schema[user_col]
+    lookback_us = 7 * 86400 * 1_000_000
+    user_field = events.schema["user_id"]
     out_schema = T.StructType(
         [
-            T.StructField(seq_col, T.LongType(), False),
-            T.StructField(user_col, user_field.dataType, False),
+            T.StructField("event_id", T.LongType(), False),
+            T.StructField("user_id", user_field.dataType, False),
             T.StructField("last_touch_type", T.StringType(), False),
             T.StructField("last_touch_id", T.LongType(), True),
             T.StructField("us_since_touch", T.LongType(), True),
@@ -438,21 +401,21 @@ def streaming_attribution(
                 else chunks[0]
             )
             pdf = pdf.sort_values(
-                [ts_col, seq_col], kind="mergesort"
+                ["ts", "event_id"], kind="mergesort"
             ).reset_index(drop=True)
-            us = (pdf[ts_col].astype("int64") // 1000).to_numpy()
-            types = pdf[type_col].to_numpy()
-            seqs = pdf[seq_col].to_numpy()
+            us = (pdf["ts"].astype("int64") // 1000).to_numpy()
+            types = pdf["event_type"].to_numpy()
+            seqs = pdf["event_id"].to_numpy()
             # range-frame pool: state touches + ALL of this batch's
             # touches (same-instant ones count regardless of seq order)
-            is_t = np.isin(types, list(touch_types))
+            is_t = np.isin(types, ["view", "click"])
             pool = np.sort(
                 np.concatenate([np.asarray(touch_us, dtype="int64"),
                                 us[is_t]])
             )
             rows = []
             for i in range(len(pdf)):
-                if types[i] == conversion_type:
+                if types[i] == "purchase":
                     lo = np.searchsorted(pool, us[i] - lookback_us, "left")
                     hi = np.searchsorted(pool, us[i], "right")
                     n7 = int(hi - lo)
@@ -475,7 +438,7 @@ def streaming_attribution(
             if rows:
                 yield pd.DataFrame(
                     rows,
-                    columns=[seq_col, user_col, "last_touch_type",
+                    columns=["event_id", "user_id", "last_touch_type",
                              "last_touch_id", "us_since_touch",
                              "n_touches_7d"],
                 )
@@ -490,7 +453,7 @@ def streaming_attribution(
         state.update((last_us, last_id, last_type, touch_us))
 
     return (
-        events.groupBy(user_col)
+        events.groupBy("user_id")
         .applyInPandasWithState(
             attach,
             outputStructType=out_schema,

@@ -67,17 +67,13 @@ def anomaly_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
     )
 
 
-def read_anomaly_scores(
-    spark, table_dir: str, version: int | None = None
-) -> DataFrame:
+def read_anomaly_scores(spark, table_dir: str) -> DataFrame:
     """z-scores + anomaly flags over the maintained day table — the
     EXACT ``zscore_flags`` plan the batch h10 query runs, so the
     service output is the batch output on the drained rows (late rows
     for past days re-score every affected window automatically)."""
     return zscore_flags(
-        read_version(spark, table_dir, version).select(
-            "day", "revenue_cents"
-        )
+        read_version(spark, table_dir).select("day", "revenue_cents")
     )
 
 

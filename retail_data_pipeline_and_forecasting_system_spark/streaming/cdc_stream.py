@@ -181,14 +181,13 @@ def cdc_apply_sink(
 def read_cdc_snapshot(
     spark,
     table_dir: str,
-    version: int | None = None,
     include_tombstones: bool = False,
 ) -> DataFrame:
-    """Live view of a CDC-maintained snapshot: time-travels like
-    ``read_version`` and (for tombstone-mode tables) filters deleted
-    keys unless ``include_tombstones``. Works on tombstone-free tables
+    """Live view of a CDC-maintained snapshot: the latest version, with
+    deleted keys filtered (for tombstone-mode tables) unless
+    ``include_tombstones``. Works on tombstone-free tables
     too (no ``__tombstone`` column -> nothing to filter)."""
-    df = read_version(spark, table_dir, version)
+    df = read_version(spark, table_dir)
     if "__tombstone" in df.columns and not include_tombstones:
         df = df.filter(~F.col("__tombstone")).drop("__tombstone")
     return df
@@ -199,7 +198,6 @@ def run_cdc_apply(
     input_glob: str,
     table_dir: str,
     checkpoint_dir: str,
-    key_col: str = "k",
     schema: str = "k long, op string, seq long, val string",
     max_files_per_trigger: int = 1,
     **sink_kwargs,
@@ -209,6 +207,6 @@ def run_cdc_apply(
     ``max_files_per_trigger=1``), blocking until caught up."""
     drain_available_now(
         spark, input_glob, schema, max_files_per_trigger,
-        cdc_apply_sink(table_dir, key_col, **sink_kwargs), checkpoint_dir,
+        cdc_apply_sink(table_dir, "k", **sink_kwargs), checkpoint_dir,
         fmt="json",
     )

@@ -94,7 +94,6 @@ def incremental_dedup_sink(
             k=k,
             id_col=id_col,
             text_col=text_col,
-            cache_buckets=True,
             cache_tracker=tracker,
         )
 

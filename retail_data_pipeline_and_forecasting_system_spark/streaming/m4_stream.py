@@ -41,13 +41,11 @@ def m4_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
     )
 
 
-def read_m4(
-    spark, table_dir: str, version: int | None = None
-) -> DataFrame:
+def read_m4(spark, table_dir: str) -> DataFrame:
     """The maintained downsample, shaped exactly like
     h15_m4_downsample's batch output (role rows derived from the
     extreme structs at read time)."""
-    state = read_version(spark, table_dir, version).drop("__epoch")
+    state = read_version(spark, table_dir).drop("__epoch")
     return finalize_m4(state)
 
 

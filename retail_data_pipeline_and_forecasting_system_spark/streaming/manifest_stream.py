@@ -66,13 +66,11 @@ def manifest_state_sink(
     )
 
 
-def read_manifest(
-    spark, table_dir: str, version: int | None = None
-) -> DataFrame:
+def read_manifest(spark, table_dir: str) -> DataFrame:
     """The maintained manifest, shaped exactly like
     x55_export_manifest's batch output (per-shard rows + the corpus
     Merkle root recomputed from the shard-grain state at read time)."""
-    state = read_version(spark, table_dir, version).drop("__epoch")
+    state = read_version(spark, table_dir).drop("__epoch")
     return finalize_manifest(state)
 
 

@@ -68,15 +68,11 @@ def rollup_state_sink(
     )
 
 
-def read_rollup_state(
-    spark, table_dir: str, version: int | None = None
-) -> DataFrame:
+def read_rollup_state(spark, table_dir: str) -> DataFrame:
     """The maintained rollup, shaped like ops6's batch output (exact
     decimal state cast to double at the read boundary, rule 1)."""
-    df = read_version(spark, table_dir, version).drop("__epoch")
-    return df.withColumn(
-        "total_spent", F.col("total_spent").cast("double")
-    )
+    df = read_version(spark, table_dir).drop("__epoch")
+    return df.withColumn("total_spent", F.col("total_spent").cast("double"))
 
 
 def run_rollup_ingest(

@@ -49,8 +49,8 @@ from pyspark.sql import functions as F
 
 from ..functions import word_shingle_sets, word_shingles
 from ..operators.dedup import _band_buckets
-from ..operators.manifest import U64_MOD, manifest_rows
-from ..operators.splitaudit import split_nibble
+from ..operators.manifest import U64_MOD
+from ..operators.splitaudit import scrub_shard_state, split_nibble
 from ..sources.versioned import read_version
 from .sinks import drain_available_now, versioned_state_sink
 
@@ -58,11 +58,7 @@ from .sinks import drain_available_now, versioned_state_sink
 def freeze_eval_index(
     docs: DataFrame,
     k: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
     max_df: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> dict[str, DataFrame]:
     """Build (and persist) the static eval-side index the gate probes:
     content keys, LSH band buckets, per-doc shingle sets (for exact
@@ -74,38 +70,36 @@ def freeze_eval_index(
 
     from ..caching import track
 
-    ev = docs.filter(split_nibble(F.col(id_col)) >= 12)
+    ev = docs.filter(split_nibble(F.col("doc_id")) >= 12)
 
     def pin(df: DataFrame) -> DataFrame:
         return track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
     keys = pin(
-        ev.filter(F.col(text_col).isNotNull())
-        .select(F.md5(F.col(text_col)).alias("__ck"))
+        ev.filter(F.col("text").isNotNull())
+        .select(F.md5(F.col("text")).alias("__ck"))
         .distinct()
     )
     buckets = pin(
-        _band_buckets(
-            ev, num_hashes, bands, k=k, id_col=id_col, text_col=text_col
-        ).select(F.col(id_col).alias("eval_id"), "band", "bucket")
+        _band_buckets(ev, 8, 4, k=k).select(
+            F.col("doc_id").alias("eval_id"), "band", "bucket"
+        )
     )
     sets = pin(
-        word_shingle_sets(ev, k=k, id_col=id_col, text_col=text_col).select(
-            F.col(id_col).alias("eval_id"),
+        word_shingle_sets(ev, k=k).select(
+            F.col("doc_id").alias("eval_id"),
             F.col("shingle_set").alias("__set_b"),
         )
     )
     rare = pin(
-        word_shingles(ev, k=k, id_col=id_col, text_col=text_col)
+        word_shingles(ev, k=k)
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") <= max_df)
         .select("shingle")
     )
     return {
-        "keys": keys, "buckets": buckets, "sets": sets, "rare": rare,
-        "k": k, "num_hashes": num_hashes, "bands": bands,
-        "near_threshold": 0.35, "id_col": id_col, "text_col": text_col,
+        "keys": keys, "buckets": buckets, "sets": sets, "rare": rare, "k": k,
     }
 
 
@@ -115,33 +109,29 @@ def scrub_delta_state(batch_docs: DataFrame, idx: dict) -> DataFrame:
     the train split (eval arrivals — already in the index — and
     NULL-id rows) pass through unscored, exactly as in the batch
     query."""
-    id_col, text_col, k = idx["id_col"], idx["text_col"], idx["k"]
-    nib = split_nibble(F.col(id_col))
-    tdocs = batch_docs.filter(nib < 12)
+    k = idx["k"]
+    tdocs = batch_docs.filter(split_nibble(F.col("doc_id")) < 12)
 
     # exact tier: content key present in the frozen eval key set
     ex_ids = (
-        tdocs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.md5(F.col(text_col)).alias("__ck"))
+        tdocs.filter(F.col("text").isNotNull())
+        .select("doc_id", F.md5(F.col("text")).alias("__ck"))
         .join(idx["keys"], "__ck", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
     # near-dup tier: band collision against the frozen eval buckets,
     # then row-local exact-Jaccard verification vs the frozen eval sets
     cand = (
-        _band_buckets(
-            tdocs, idx["num_hashes"], idx["bands"], k=k,
-            id_col=id_col, text_col=text_col,
-        )
-        .select(F.col(id_col).alias("train_id"), "band", "bucket")
+        _band_buckets(tdocs, 8, 4, k=k)
+        .select(F.col("doc_id").alias("train_id"), "band", "bucket")
         .join(idx["buckets"], ["band", "bucket"])
         .select("train_id", "eval_id")
         .distinct()
     )
-    tsets = word_shingle_sets(
-        tdocs, k=k, id_col=id_col, text_col=text_col
-    ).select(F.col(id_col).alias("train_id"), F.col("shingle_set").alias("__set_a"))
+    tsets = word_shingle_sets(tdocs, k=k).select(
+        F.col("doc_id").alias("train_id"), F.col("shingle_set").alias("__set_a")
+    )
     near_ids = (
         cand.join(tsets, "train_id")
         .join(idx["sets"], "eval_id")
@@ -151,50 +141,19 @@ def scrub_delta_state(batch_docs: DataFrame, idx: dict) -> DataFrame:
             F.col("__nc")
             / (F.size("__set_a") + F.size("__set_b") - F.col("__nc")),
         )
-        .filter(F.col("jaccard") >= idx["near_threshold"])
-        .select(F.col("train_id").alias(id_col))
+        .filter(F.col("jaccard") >= 0.35)
+        .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
     # ngram tier: shares >= 1 eval-rare shingle
     ng_ids = (
-        word_shingles(tdocs, k=k, id_col=id_col, text_col=text_col)
+        word_shingles(tdocs, k=k)
         .join(idx["rare"], "shingle", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
-
-    drop_ids = (
-        ex_ids.unionByName(near_ids)
-        .distinct()
-        .select(F.col(id_col), F.lit(True).alias("__drop"))
-    )
-    flag_ids = ng_ids.select(F.col(id_col), F.lit(True).alias("__flag"))
-    rows = manifest_rows(batch_docs, id_col=id_col, text_col=text_col)
-    train = rows.filter((F.col("shard") >= 0) & (F.col("shard") < 12))
-    j = train.join(drop_ids, id_col, "left").join(flag_ids, id_col, "left")
-    dropped = F.coalesce(F.col("__drop"), F.lit(False))
-    kept = ~dropped
-    flagged_kept = F.coalesce(F.col("__flag"), F.lit(False)) & kept
-    return j.groupBy(F.col("shard").alias("train_shard")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(dropped.cast("int")).cast("bigint").alias("n_dropped"),
-        F.sum(flagged_kept.cast("int"))
-        .cast("bigint")
-        .alias("n_flagged_kept"),
-        F.sum(kept.cast("int")).cast("bigint").alias("n_kept"),
-        F.sum(F.when(kept, F.col("n_tokens")))
-        .cast("bigint")
-        .alias("kept_tokens"),
-        F.pmod(
-            F.coalesce(
-                F.sum(F.when(kept, F.col("h64"))),
-                F.lit(0).cast("decimal(38,0)"),
-            ),
-            F.lit(U64_MOD).cast("decimal(38,0)"),
-        )
-        .cast("decimal(20,0)")
-        .alias("kept_sum64"),
-    )
+    drop_ids = ex_ids.unionByName(near_ids).distinct()
+    return scrub_shard_state(batch_docs, drop_ids, ng_ids)
 
 
 def merge_scrub_states(cur: DataFrame, delta: DataFrame) -> DataFrame:
@@ -252,12 +211,10 @@ def scrub_state_sink(
     )
 
 
-def read_scrub(
-    spark, table_dir: str, version: int | None = None
-) -> DataFrame:
+def read_scrub(spark, table_dir: str) -> DataFrame:
     """The maintained scrub manifest, shaped exactly like
     x60_leakage_scrub's batch output (kept_digest as string)."""
-    state = read_version(spark, table_dir, version).drop("__epoch")
+    state = read_version(spark, table_dir).drop("__epoch")
     return state.select(
         "train_shard",
         "n_docs",

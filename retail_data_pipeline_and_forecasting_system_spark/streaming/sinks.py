@@ -216,7 +216,6 @@ def idempotent_jdbc_sink(
     user: str = "",
     password: str = "",
     driver: str | None = None,
-    batch_col: str = "batch_id",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function delivering each epoch to a JDBC table
     exactly-once-under-replay: DELETE the epoch's rows, then append them
@@ -295,7 +294,7 @@ def idempotent_jdbc_sink(
                 try:
                     stmt.executeUpdate(
                         f"DELETE FROM {q_table} "
-                        f"WHERE {qt}{batch_col}{qt} = {int(batch_id)}"
+                        f"WHERE {qt}batch_id{qt} = {int(batch_id)}"
                     )
                 finally:
                     stmt.close()
@@ -303,7 +302,7 @@ def idempotent_jdbc_sink(
             conn.close()
 
         writer = (
-            batch_df.withColumn(batch_col, F.lit(int(batch_id)))
+            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
             .write.format("jdbc")
             .option("url", url)
             .option("dbtable", table)

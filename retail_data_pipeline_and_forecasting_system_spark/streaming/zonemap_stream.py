@@ -61,13 +61,11 @@ def zone_state_sink(
     )
 
 
-def read_zone_map(
-    spark, table_dir: str, version: int | None = None, **finalize_kwargs
-) -> DataFrame:
+def read_zone_map(spark, table_dir: str, **finalize_kwargs) -> DataFrame:
     """The maintained manifest, shaped exactly like ops8_zone_map's
     batch output (stats + skip/false-scan verdicts derived at read
     time from the month-grain state)."""
-    state = read_version(spark, table_dir, version).drop("__epoch")
+    state = read_version(spark, table_dir).drop("__epoch")
     return finalize_zone_map(state, **finalize_kwargs)
 
 

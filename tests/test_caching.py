@@ -1,15 +1,23 @@
-"""Per-session engine state (``caching.py``) under concurrent callers:
-tracked persists are scoped to the calling thread, so one thread's
-registry entry never releases another thread's intermediates."""
+"""Per-session engine state (``caching.py``): tracked persists are
+scoped to the calling thread, so one thread's registry entry never
+releases another thread's intermediates, and ``invalidate_tables``
+drops every memo collected from a rewritten ``sf`` dir."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
 import threading
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from retail_data_pipeline_and_forecasting_system_spark import caching
 from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
+    invalidate_tables,
 )
 
 from conftest import duck_connect
@@ -149,3 +157,36 @@ def test_tracking_from_many_threads_loses_no_frame(spark):
         raise errors[0]
     assert sorted(counts.values()) == [per_thread] * n_threads
     assert len(released) == n_threads and all(released.values())
+
+
+def test_invalidate_tables_refreshes_ivf_model(spark, sf_dir, tmp_path):
+    """n3 and n14 serve from a memoized IVF quantizer and query vector.
+    After the embeddings are rewritten (every vector negated) and
+    ``invalidate_tables`` is called, both must equal their DuckDB
+    oracles on the NEW files, not answer from the old model."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(f"{sf_dir}/{t}.parquet", sf / f"{t}.parquet")
+    emb_path = sf / "embeddings.parquet"
+    shutil.copyfile(f"{sf_dir}/embeddings.parquet", emb_path)
+    os.chmod(emb_path, 0o644)
+    QUERIES["n3_ann_ivf"].fn(spark, str(sf)).collect()  # fills the memo
+
+    table = pq.read_table(emb_path)
+    i = table.schema.get_field_index("embedding")
+    vecs = table.column(i).combine_chunks()
+    negated = pa.ListArray.from_arrays(
+        vecs.offsets, pc.negate(vecs.flatten()), mask=vecs.is_null()
+    ).cast(vecs.type)
+    pq.write_table(table.set_column(i, table.field(i), negated), emb_path)
+    invalidate_tables(spark)
+
+    con = duck_connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    for name in ("n3_ann_ivf", "n14_filtered_ann"):
+        mine = QUERIES[name].fn(spark, str(sf)).toPandas()
+        want = con.execute(QUERIES[name].sql).df()
+        _compare(_normalize(mine), _normalize(want), name)

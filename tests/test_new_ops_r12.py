@@ -1,18 +1,13 @@
-"""Round-12 regressions for the round-11 ADVICE items: corpus
-fingerprint mid-walk error propagation, pr1 edge-frame persistence,
-n17 ragged-embedding grace, croston NULL-qty tolerance — plus the
-round-12 registrations' hand tests further down."""
+"""Round-12 regressions for the round-11 ADVICE items: pr1 edge-frame
+persistence, n17 ragged-embedding grace, croston NULL-qty tolerance —
+plus the round-12 registrations' hand tests further down."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
-    _corpus_fingerprint,
 )
 
 from conftest import duck_connect
@@ -25,41 +20,6 @@ def _plan(df):
 
 
 # ----------------------------------------------- ADVICE regressions
-
-
-def test_corpus_fingerprint_midwalk_stat_error_propagates(
-    tmp_path, monkeypatch
-):
-    """A transient stat failure DURING the walk (file deleted under a
-    concurrent corpus rewrite) must raise, not silently degrade to the
-    rewrite-blind path-only key that would serve a stale memoized BPE
-    table (round-11 ADVICE). The path-only fallback stays scoped to
-    the initial existence probe (the non-POSIX s3a/hdfs case)."""
-    corpus = tmp_path / "documents.parquet"
-    corpus.mkdir()
-    (corpus / "part-0.parquet").write_bytes(b"x" * 10)
-    (corpus / "part-1.parquet").write_bytes(b"y" * 20)
-
-    # healthy walk: full signature, not the path-only key
-    sig = _corpus_fingerprint(str(corpus))
-    assert len(sig) == 2 and len(sig[1]) == 2
-
-    real_stat = os.stat
-
-    def flaky_stat(p, *a, **kw):
-        if str(p).endswith("part-1.parquet"):
-            raise OSError("stat raced a concurrent delete")
-        return real_stat(p, *a, **kw)
-
-    monkeypatch.setattr(os, "stat", flaky_stat)
-    with pytest.raises(OSError):
-        _corpus_fingerprint(str(corpus))
-    monkeypatch.undo()
-
-    # the initial probe still degrades gracefully for unseeable paths
-    assert _corpus_fingerprint("s3a://bucket/corpus") == (
-        "s3a://bucket/corpus",
-    )
 
 
 def test_pr1_edge_frame_persisted(spark):

@@ -1,18 +1,13 @@
-"""Round-13 regressions for the round-12 ADVICE items: corpus
-fingerprint directory-enumeration error propagation, label-propagation
+"""Round-13 regressions for the round-12 ADVICE items: label-propagation
 node-set coverage on directed edge lists, h10 zscore decimal headroom —
 plus the round-13 registrations' hand tests further down."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
     QUERIES,
-    _corpus_fingerprint,
 )
 
 from conftest import duck_connect
@@ -25,37 +20,6 @@ def _plan(df):
 
 
 # ----------------------------------------------- ADVICE regressions
-
-
-def test_corpus_fingerprint_dir_enumeration_error_propagates(
-    tmp_path, monkeypatch
-):
-    """os.walk's default onerror=None silently SKIPS a subdirectory
-    whose scandir fails (deleted under a concurrent corpus rewrite),
-    which would degrade the signature to a partial one and serve a
-    stale memoized BPE table. Directory-level enumeration failures
-    must propagate exactly like mid-walk stat failures (round-12
-    ADVICE)."""
-    corpus = tmp_path / "documents.parquet"
-    sub = corpus / "batch_date=2024-01-01"
-    sub.mkdir(parents=True)
-    (corpus / "part-0.parquet").write_bytes(b"x" * 10)
-    (sub / "part-1.parquet").write_bytes(b"y" * 20)
-
-    # healthy walk covers BOTH directories' files
-    sig = _corpus_fingerprint(str(corpus))
-    assert len(sig) == 2 and len(sig[1]) == 2
-
-    real_scandir = os.scandir
-
-    def flaky_scandir(p="."):
-        if str(p).endswith("batch_date=2024-01-01"):
-            raise OSError("scandir raced a concurrent rmtree")
-        return real_scandir(p)
-
-    monkeypatch.setattr(os, "scandir", flaky_scandir)
-    with pytest.raises(OSError):
-        _corpus_fingerprint(str(corpus))
 
 
 def test_label_propagation_covers_directed_node_set(spark):

@@ -1,4 +1,4 @@
-"""Pipeline mode flags: reload_inventory_daily and processing metrics."""
+"""Pipeline modes: the depletion reset column and processing metrics."""
 
 from __future__ import annotations
 

@@ -1,5 +1,6 @@
 """x42 trainer decade cell (SCALE.md round-11) — bespoke because the
-standard harness would meter `_TRAIN_MEMO` hits, not training, and the
+standard harness would meter hits on the session's trained-merges memo
+(`caching.state(spark).models`), not training, and the
 cell's point is the TRAINER's cost structure:
 
 - end-to-end wall at N=20 merges, 1x vs 10x documents (id-offset
